@@ -14,4 +14,10 @@ Layers:
     plans       SparkSession factory, end-to-end pipeline, checkpoints
 """
 
+from ._zipcache import install as _install_zipcache
+
 __version__ = "0.1.0"
+
+# Spark's Python workers reset import caches on every task; keep that
+# reset from re-reading pyspark.zip each time (see _zipcache)
+_install_zipcache()

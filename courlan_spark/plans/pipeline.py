@@ -18,6 +18,7 @@ returned and appended to ``workdir/metrics.json``.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -245,6 +246,8 @@ class DedupPipeline:
         # synchronous path
         self._pending_writes: list[tuple[str, object]] = []
         self._write_pool = None
+        # every frame a run persisted, unpersisted when the run ends
+        self._persisted: list[DataFrame] = []
         os.makedirs(workdir, exist_ok=True)
 
     def _persist_config(self) -> None:
@@ -299,7 +302,7 @@ class DedupPipeline:
             started = time.time()
             df = build()
             if kind == "persist":
-                df = df.persist()
+                df = self._persist(df)
                 df.count()  # materialize the cache once
             elif kind == "persist_lazy":
                 # persist WITHOUT the count barrier: the cache fills
@@ -307,7 +310,7 @@ class DedupPipeline:
                 # for 02, whose only consumer before the overlap group
                 # is 04's eager materialization, so no concurrent jobs
                 # can race the cache build (guide §2.6 serial-term cut)
-                df = df.persist()
+                df = self._persist(df)
             self.metrics.append(
                 {"stage": name, "kind": kind, "secs": round(time.time() - started, 3)}
             )
@@ -336,7 +339,7 @@ class DedupPipeline:
             # write.
             from concurrent.futures import ThreadPoolExecutor
 
-            df = df.persist()
+            df = self._persist(df)
             n_rows = df.count()
             if self._write_pool is None:
                 self._write_pool = ThreadPoolExecutor(max_workers=2)
@@ -376,21 +379,52 @@ class DedupPipeline:
         self.metrics.append(metric)
         return out
 
+    def _persist(self, df: DataFrame) -> DataFrame:
+        self._persisted.append(df)
+        return df.persist()
+
     def _join_writes(self) -> None:
-        """Block on every deferred snapshot write (re-raising failures)
-        and record how long the join actually waited — ~0 when the
-        writes hid under later stages, which is the point."""
-        for name, fut in self._pending_writes:
+        """Block on every deferred snapshot write and record how long
+        the join actually waited — ~0 when the writes hid under later
+        stages, which is the point.  Every write is waited for before
+        the first failure is re-raised."""
+        pending, self._pending_writes = self._pending_writes, []
+        failure = None
+        for name, fut in pending:
             started = time.time()
-            fut.result()
+            try:
+                fut.result()
+            except Exception as exc:  # noqa: BLE001 — re-raised below
+                failure = failure or exc
+                continue
             self.metrics.append(
                 {"stage": f"{name}_write_join",
                  "secs": round(time.time() - started, 3)}
             )
-        self._pending_writes.clear()
         if self._write_pool is not None:
             self._write_pool.shutdown(wait=True)
             self._write_pool = None
+        if failure is not None:
+            raise failure
+
+    @contextlib.contextmanager
+    def _run_scope(self):
+        """Release a run's state however the run ends.  A failed run
+        still joins the snapshot writes it started (a write's own
+        error does not replace the run's), and every frame the run
+        persisted is unpersisted without blocking; a successful run
+        joined its writes before writing its summary."""
+        self._pending_writes.clear()
+        try:
+            yield
+        except BaseException:
+            with contextlib.suppress(Exception):
+                self._join_writes()
+            raise
+        finally:
+            persisted, self._persisted = self._persisted, []
+            for df in persisted:
+                df.unpersist(blocking=False)
 
     def _materialize_stages(self, specs, resume: bool) -> dict:
         """Materialize several INDEPENDENT stages — concurrently when
@@ -451,6 +485,10 @@ class DedupPipeline:
         )
 
     def run(self, pages: DataFrame, resume: bool = False) -> dict:
+        with self._run_scope():
+            return self._run_body(pages, resume)
+
+    def _run_body(self, pages: DataFrame, resume: bool) -> dict:
         cfg = self.config
         self._persist_config()
 
@@ -776,7 +814,8 @@ class DedupPipeline:
             shuffle_partitions if shuffle_partitions is not None else session_width
         )
         try:
-            return self._run_incremental_body(new_pages, store, resume)
+            with self._run_scope():
+                return self._run_incremental_body(new_pages, store, resume)
         finally:
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions", str(session_width)

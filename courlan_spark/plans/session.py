@@ -5,11 +5,50 @@ so the same knobs carry to a 1000-executor cluster: AQE everywhere
 (runtime coalescing + skew-join splitting), Arrow for every
 JVM<->Python exchange, and a shuffle-partition count that callers
 override per deployment.
+
+Two settings keep a warm JVM from recompiling the pipeline's generated
+code on every run.  Spark compiles each whole-stage-codegen class (and
+each generated projection, predicate and ordering) with Janino and keeps
+the result in a cache keyed by the generated source, bounded by the
+static ``spark.sql.codegen.cache.maxEntries`` (default 100).  One
+pipeline run generates more distinct classes than that (measured at
+local[4]: 168-172 Janino compilations per full run, 255-258 per
+incremental run), and every run walks them in the same order, so the
+LRU cache kept nothing from one run to the next: each run recompiled
+every class, loaded ~350-400 new classes and sent them all through the
+HotSpot JIT again, on compiler threads competing with the tasks.
+
+* ``CODEGEN_CACHE_ENTRIES`` sizes the cache from a measured count.  One
+  JVM that runs a full run, an incremental run and the 8 headline
+  catalog queries (on the benchmark's 3,000-page ingest corpus, plus
+  the store build and this module's warm-up) holds 412 distinct
+  classes.  Guava splits the bound evenly over 4 segments and evicts
+  LRU within each, so it is each segment's fill that must fit.  A key
+  lands in a segment by a hash that includes a class loader's identity
+  hash, so the fills vary per JVM: 94/105/114/99 and 112/96/100/104 in
+  two JVMs, i.e. binomial around 103 with a standard deviation of 9.
+  512 gives each segment 128 slots, 2.8 standard deviations over the
+  mean fill; a segment that overflowed would thrash, because every run
+  walks its classes in the same order.  Each entry is one loaded class
+  (tens of KB).
+* ``spark.sql.codegen.useIdInClassName=false`` keeps the codegen stage
+  id out of the generated class name.  Stage ids follow the order in
+  which AQE plans a query's stages, and that order changes with the
+  timing of the pipeline's concurrent stages, so the same code got a
+  different name (and cache key) on the next run: 12-18 recompilations
+  on a JVM's second full run.  The id stays in the code's comment, and
+  class names in stack traces read ``GeneratedIterator``.
+
+With both, a JVM's second full run compiled 0-4 classes instead of
+~170, and an incremental run none after its first.  The few left are
+join shapes AQE picks from whichever stages happen to finish first;
+once compiled they stay cached too.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -24,6 +63,25 @@ from pyspark.sql import SparkSession
 PARQUET_IN_FILTER_THRESHOLD = 1000
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# distinct generated classes of one warm JVM, sized from a measured
+# count (module docstring)
+CODEGEN_CACHE_ENTRIES = 512
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's memory, at most 24g (the heap the 32-core runs
+    were measured with).  The rest is for the Python UDF workers (one
+    per core), the JVM's off-heap and the page cache that serves the
+    shuffle files.  24g when the host's memory cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(512, min(24 * 1024, total_kb // 2048))}m"
 
 
 def get_session(
@@ -73,8 +131,14 @@ def get_session(
         # tasks need N shares of sort/join memory or stages spill and
         # high core counts run *slower* than low ones (measured: the
         # signature-estimate verify join at 32 threads took 2x longer
-        # on an 8g heap than on 32g)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # on an 8g heap than on 32g); never more than the host has
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
+        # keep a warm JVM's compiled codegen classes (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # managed-table warehouse (bucketed layouts) outside the repo
@@ -106,7 +170,8 @@ def _warm_engine(spark: SparkSession) -> None:
     no result reused — i.e. the engine analog of the worker/numpy
     warm-up the bench already performs untimed for the same reason.
     Once per SparkContext (conf marker); SPARK_GRAFT_SESSION_WARMUP=0
-    disables it."""
+    disables it.  A warm-up that fails is dropped: it never fails the
+    session build."""
     if os.environ.get("SPARK_GRAFT_SESSION_WARMUP", "1") == "0":
         return
     try:
@@ -114,6 +179,15 @@ def _warm_engine(spark: SparkSession) -> None:
             return
     except Exception:  # noqa: BLE001 — conf read failed: skip warm-up
         return
+    try:
+        _warm_up_query(spark)
+    except Exception as exc:  # noqa: BLE001 — the warm-up only saves time
+        warnings.warn(f"session warm-up query failed, skipped: {exc!r}", RuntimeWarning)
+        return
+    spark.conf.set("spark.courlan.engineWarmed", "1")
+
+
+def _warm_up_query(spark: SparkSession) -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -140,7 +214,6 @@ def _warm_engine(spark: SparkSession) -> None:
         .mode("overwrite")
         .save()
     )
-    spark.conf.set("spark.courlan.engineWarmed", "1")
 
 
 def sf_tables(spark: SparkSession, sf_dir: str, *names: str):

@@ -21,6 +21,7 @@ from tools.bench_reference import _corpus, _install_shims  # noqa: E402
 def reference():
     _install_shims()
     sys.path.insert(0, "/root/reference")
+    pytest.importorskip("courlan", reason="courlan reference checkout not present")
     import courlan as ref  # noqa: F401
     from courlan.core import check_url, extract_links
     from courlan.clean import clean_url, normalize_url, scrub_url

@@ -19,6 +19,7 @@ from tools.bench_reference import _install_shims  # noqa: E402
 def ref():
     _install_shims()
     sys.path.insert(0, "/root/reference")
+    pytest.importorskip("courlan", reason="courlan reference checkout not present")
     from courlan.urlstore import UrlStore
     from courlan.sampling import sample_urls
 

@@ -4,6 +4,8 @@ import shutil
 import tempfile
 from datetime import datetime, timedelta
 
+import pytest
+
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline
 
 
@@ -57,3 +59,69 @@ def test_all_urls_rejected(spark):
         assert summary["n_output"] == 0
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _spy_persisted(monkeypatch) -> list:
+    "Every frame a DedupPipeline persists, recorded as it persists it."
+    persisted = []
+    real = DedupPipeline._persist
+
+    def spy(self, df):
+        out = real(self, df)
+        persisted.append(out)
+        return out
+
+    monkeypatch.setattr(DedupPipeline, "_persist", spy)
+    return persisted
+
+
+def test_run_releases_every_frame_it_persisted(spark, monkeypatch, tmp_path):
+    "Both pipeline modes leave no frame of theirs cached once they return."
+    from pyspark.storagelevel import StorageLevel
+
+    from courlan_spark.plans.pipeline import FingerprintStore
+    from courlan_spark.sources.pages import generate_pages, pages_view
+
+    persisted = _spy_persisted(monkeypatch)
+    full = generate_pages(spark, 300)
+    base = pages_view(full.where("doc_id < 270"))
+    delta = pages_view(full.where("doc_id >= 270"))
+    DedupPipeline(spark, str(tmp_path / "min"), DedupConfig(snapshot_mode="minimal")).run(
+        pages_view(full)
+    )
+    n_full = len(persisted)
+    DedupPipeline(spark, str(tmp_path / "base"), DedupConfig()).run(base)
+    store = FingerprintStore.from_workdir(spark, str(tmp_path / "base"))
+    DedupPipeline(spark, str(tmp_path / "delta"), DedupConfig()).run_incremental(delta, store)
+    assert n_full >= 5 and len(persisted) > n_full
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+def test_failed_run_joins_its_writes_and_keeps_its_own_error(spark, monkeypatch, tmp_path):
+    """A stage that fails after a background snapshot write started: the
+    run raises the stage's error, not the (also failing) write's, and
+    leaves no pending write, write pool or persisted frame behind."""
+    from pyspark.storagelevel import StorageLevel
+
+    from courlan_spark.operators import dedup
+    from courlan_spark.plans import pipeline as P
+    from courlan_spark.sources.pages import generate_pages, pages_view
+
+    persisted = _spy_persisted(monkeypatch)
+    real_write = P._write_snapshot
+
+    def failing_write(df, path, **kwargs):
+        if path.endswith("02_url_dedup"):
+            raise OSError("snapshot store unavailable")
+        return real_write(df, path, **kwargs)
+
+    def failing_stage(*args, **kwargs):
+        raise RuntimeError("clustering failed")
+
+    monkeypatch.setattr(P, "_write_snapshot", failing_write)
+    monkeypatch.setattr(dedup, "cluster_assignments", failing_stage)
+    pipe = DedupPipeline(spark, str(tmp_path / "run"), DedupConfig())
+    with pytest.raises(RuntimeError, match="clustering failed"):
+        pipe.run(pages_view(generate_pages(spark, 200)))
+    assert pipe._pending_writes == [] and pipe._write_pool is None
+    assert persisted and all(df.storageLevel == StorageLevel.NONE for df in persisted)

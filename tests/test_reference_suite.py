@@ -20,6 +20,7 @@ Out-of-scope skips, each with a reason:
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import types
 from functools import lru_cache
@@ -173,6 +174,11 @@ def _load_reference_tests() -> types.ModuleType:
                 sys.modules[name] = prior
 
 
+if not os.path.exists(REF_TESTS):
+    pytest.skip(
+        f"courlan reference checkout not present ({REF_TESTS} is missing)",
+        allow_module_level=True,
+    )
 _REF = _load_reference_tests()
 _TESTS = sorted(
     name
