@@ -141,12 +141,12 @@ def connected_components_bounded(
     deterministic (~16 bytes/edge).  Labels are identical by
     construction: component = min node id, the distributed contract.
 
-    The edge frame is localCheckpoint-ed BEFORE the limited collect:
-    CollectLimit executes as scale-up jobs (1 partition, then 4, ...),
-    which would re-run an unpersisted upstream verify DAG once per
-    attempt; the checkpoint materializes it exactly once (the same
-    first step the distributed algorithm takes), and any observe()
-    metrics riding the edges fire complete on that checkpoint job.
+    The distinct edge list is cached for the call only: its cache
+    fills inside the bounded collect (cached blocks are built whole,
+    so any observe() metrics riding the edges fire complete on that
+    one job), the distributed fallback reads it instead of re-running
+    an upstream verify DAG, and it is released before returning.  The
+    fast path leaves nothing cached behind.
     """
     edges_ck = (
         edges.selectExpr("cast(src as long) src", "cast(dst as long) dst")
@@ -157,15 +157,20 @@ def connected_components_bounded(
         # small must not spuriously fall back to the slow path, and
         # the driver must not collect rows it doesn't need (r4 ADVICE)
         .distinct()
-        .localCheckpoint()
+        .persist()
     )
-    # Arrow transfer, not collect(): row-by-row pickling of up to 200k
-    # Row objects cost ~1 s at the bench's 81k-edge graph; toPandas
-    # rides the Arrow channel (enabled session-wide) and hands back two
-    # int64 columns
-    pdf = edges_ck.limit(max_local_edges + 1).toPandas()
-    if len(pdf) > max_local_edges:
-        return connected_components(edges_ck, max_iterations=max_iterations)
+    try:
+        # Arrow transfer, not collect(): row-by-row pickling of up to
+        # 200k Row objects cost ~1 s at the bench's 81k-edge graph;
+        # toPandas rides the Arrow channel (enabled session-wide) and
+        # hands back two int64 columns
+        pdf = edges_ck.limit(max_local_edges + 1).toPandas()
+        if len(pdf) > max_local_edges:
+            # every round checkpoints, so the result does not read
+            # edges_ck once this returns
+            return connected_components(edges_ck, max_iterations=max_iterations)
+    finally:
+        edges_ck.unpersist(blocking=False)
 
     parent: dict[int, int] = {}
 
@@ -188,17 +193,20 @@ def connected_components_bounded(
     spark = edges.sparkSession
     if not data:
         return spark.createDataFrame([], "node long, component long")
-    # Arrow-backed local relation + eager checkpoint: a list-of-tuples
-    # createDataFrame embeds a pickled LocalRelation that re-serializes
-    # through py4j on EVERY consuming action — at ~10^5 nodes that cost
-    # dominated the pipeline's final join stage (measured: stage
-    # 09_assignments 1.1s -> 9.1s when the 120k-page cluster graph
-    # switched onto this path).  pandas rides the Arrow channel once,
-    # and the checkpoint pins the rows executor-side so downstream
-    # actions read partitions, not the driver's Python list.
+    # The labels cross to the JVM once, over Arrow, and are re-based
+    # on an RDD there: downstream actions read its partitions instead
+    # of a driver-side relation (measured: stage 09_assignments 1.1s ->
+    # 9.1s when the 120k-page cluster graph's labels rode a pickled
+    # LocalRelation).  An RDD-backed frame carries no size estimate, so
+    # its joins would plan shuffles; the broadcast hint keeps them
+    # map-side — the fast path holds at most ~2 x max_local_edges
+    # labels, ~6 MB at the default bound.
     import pandas as pd
 
-    out = spark.createDataFrame(
+    arrow = spark.createDataFrame(
         pd.DataFrame(data, columns=["node", "component"]).astype("int64")
     )
-    return out.localCheckpoint()
+    rdd_backed = spark._jsparkSession.createDataFrame(
+        arrow._jdf.javaRDD(), arrow._jdf.schema()
+    )
+    return F.broadcast(DataFrame(rdd_backed, spark))

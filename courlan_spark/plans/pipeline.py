@@ -19,9 +19,11 @@ returned and appended to ``workdir/metrics.json``.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -197,11 +199,16 @@ class FingerprintStore:
         )
 
 
+# distinct delta keys a broadcast store pre-filter may carry:
+# 8M 8-byte keys ~ 64 MB of broadcast
+BROADCAST_KEY_BUDGET = 8_000_000
+
+
 def _snapshot_path(workdir: str, stage: str) -> str:
     return os.path.join(workdir, stage)
 
 
-def _safe_observation(obs) -> dict:
+def _safe_observation(obs, wait_s: float = 0.0) -> dict:
     """Read an Observation defensively and NON-BLOCKING.
 
     Two failure modes: (a) when AQE propagates an empty shuffle stage
@@ -211,9 +218,18 @@ def _safe_observation(obs) -> dict:
     that never EXECUTED (its consumer stage resumed from a snapshot, so
     the build ran but the dataset did not) leaves Observation.get
     blocked forever on the JVM promise — the r6 ephemeral-stage hang.
-    getRowOrEmpty() returns an empty Option instead of waiting."""
+    getRowOrEmpty() returns an empty Option instead of waiting.
+
+    The row arrives through a query-execution listener, i.e. shortly
+    AFTER the action that executed the node returns; ``wait_s`` polls
+    up to that long for it, for a caller that reads right after the
+    action and knows the node executed."""
     try:
+        deadline = time.monotonic() + wait_s
         jopt = obs._jo.getRowOrEmpty()
+        while not jopt.isDefined() and time.monotonic() < deadline:
+            time.sleep(0.005)
+            jopt = obs._jo.getRowOrEmpty()
         if not jopt.isDefined():
             return {"unavailable": "observed node did not execute (resumed?)"}
         from pyspark.serializers import CPickleSerializer
@@ -324,7 +340,9 @@ class DedupPipeline:
             )
             return df
         df = build()
-        if overlap_write and self.config.overlap_stages:
+        key_cols = self._STAGE_KEY_COLS.get(name)
+        deferred = overlap_write and self.config.overlap_stages
+        if deferred or key_cols:
             # The stage's CONSUMERS only need the frame; only the NEXT
             # RUN (resume / store chaining) needs the files.  Persist +
             # count materializes the data once, then the parquet write
@@ -336,37 +354,37 @@ class DedupPipeline:
             # exactly as complete as the synchronous path's, and a
             # crash before the join leaves no _SUCCESS marker — resume
             # rebuilds the stage, as it would for any interrupted
-            # write.
-            from concurrent.futures import ThreadPoolExecutor
-
+            # write.  A key stage takes this path with overlap_stages
+            # off as well, writing inline: its count sizes the doc_id
+            # bloom filter (doc_id is unique per row, so the write's
+            # row count bounds every file's distinct keys).
             df = self._persist(df)
             n_rows = df.count()
-            if self._write_pool is None:
-                self._write_pool = ThreadPoolExecutor(max_workers=2)
-            fut = self._write_pool.submit(
+            write = functools.partial(
                 _write_snapshot,
                 df,
                 path,
-                order_by=self._STAGE_KEY_COLS.get(name),
-                bloom_cols=self._STAGE_KEY_COLS.get(name),
+                order_by=key_cols,
+                bloom_cols=key_cols,
+                bloom_ndv=max(n_rows, 1) if key_cols else None,
             )
-            self._pending_writes.append((name, fut))
+            if deferred:
+                if self._write_pool is None:
+                    self._write_pool = ThreadPoolExecutor(max_workers=2)
+                self._pending_writes.append((name, self._write_pool.submit(write)))
+            else:
+                write()
             metric = {
                 "stage": name,
                 "resumed": False,
-                "kind": "snapshot_overlap",
+                "kind": "snapshot_overlap" if deferred else "snapshot",
                 "secs": round(time.time() - started, 3),
             }
             if self.count_rows:
                 metric["rows"] = n_rows
             self.metrics.append(metric)
             return df
-        _write_snapshot(
-            df,
-            path,
-            order_by=self._STAGE_KEY_COLS.get(name),
-            bloom_cols=self._STAGE_KEY_COLS.get(name),
-        )
+        _write_snapshot(df, path)
         out = _read_snapshot(self.spark, path)
         metric = {
             "stage": name,
@@ -438,8 +456,6 @@ class DedupPipeline:
         stages back-fill its stage tails.  Exceptions propagate."""
         if not self.config.overlap_stages or len(specs) == 1:
             return {name: fn() for name, fn in specs}
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=len(specs)) as pool:
             futures = [(name, pool.submit(fn)) for name, fn in specs]
             return {name: f.result() for name, f in futures}
@@ -786,7 +802,7 @@ class DedupPipeline:
         on a 32-core session runs every stage as 32 ~375-row tasks and
         pays the per-task floor 32x per stage — measured 42s at
         local[32] default vs 24.5s with 16 shuffle partitions (same
-        session width; tools/exp_delta_sizing.py).  At production
+        session width; PLANS.md, round-5 decisions).  At production
         scale the same rule holds: size a delta job's shuffle width to
         the delta, not the cluster.  Pass None to leave the session
         untouched, or an int to pin it."""
@@ -836,10 +852,10 @@ class DedupPipeline:
 
         self._observations = {}
 
-        def observed(name: str, df: DataFrame) -> DataFrame:
+        def observed(name: str, df: DataFrame, *metrics) -> DataFrame:
             obs = Observation(name)
             self._observations[name] = obs
-            return df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            return df.observe(obs, *(metrics or [F.count(F.lit(1)).alias("rows")]))
 
         canonical = self._stage(
             "01_canonical",
@@ -848,14 +864,16 @@ class DedupPipeline:
             kind="ephemeral",
         )
 
-        # guide §3.2 pre-filter gate: the delta's distinct bucket keys
-        # (<= rows x bands) must comfortably fit a broadcast before the
-        # store side may be semi-join-pruned ahead of its exchange;
-        # unknown delta size (caller pinned the shuffle width) keeps
-        # the always-safe union shape.  8M keys ~ 64 MB broadcast.
+        # guide §3.2 pre-filter gate, per leg: the delta's distinct
+        # bucket keys must comfortably fit a broadcast before the store
+        # side may be semi-join-pruned ahead of its exchange.  The
+        # MinHash and SimHash legs carry <= rows x max(bands, 20) keys;
+        # the winnow leg is gated on its own key count after stage 04.
+        # An unknown count (caller pinned the shuffle width) keeps the
+        # always-safe union shape.
         prune_old = (
             self._delta_rows is not None
-            and self._delta_rows * max(cfg.bands, 20) <= 8_000_000
+            and self._delta_rows * max(cfg.bands, 20) <= BROADCAST_KEY_BUDGET
         )
 
         # delta URL dedup, then first-seen-wins against the store: a
@@ -886,21 +904,36 @@ class DedupPipeline:
                 kind="lazy",
             )
 
-        # the delta's ONLY text scan: fused MinHash+SimHash+winnow+md5
+        # the delta's ONLY text scan: fused MinHash+SimHash+winnow+md5.
+        # The winnow key total rides the stage's own count job.
         fingerprints = self._stage(
             "04_fingerprints",
-            lambda: fused_fingerprints(
-                url_unique,
-                num_perm=cfg.num_perm,
-                shingle_k=cfg.shingle_k,
-                seed=cfg.seed,
-                bands=cfg.bands,
+            lambda: observed(
+                "fingerprint_keys",
+                fused_fingerprints(
+                    url_unique,
+                    num_perm=cfg.num_perm,
+                    shingle_k=cfg.shingle_k,
+                    seed=cfg.seed,
+                    bands=cfg.bands,
+                ),
+                F.sum(F.size("winnow")).alias("winnow_keys"),
             ),
             resume,
             kind="persist",
             overlap_write=True,
         )
         store_fps = store.fingerprints
+        # a winnow key set is hundreds of keys per multi-KB doc, far
+        # past rows x bands.  A built 04 ran its count job, so its row
+        # is on the way; a resumed 04 observed nothing, and the winnow
+        # leg then keeps the union shape
+        keys_obs = self._observations.get("fingerprint_keys")
+        winnow_keys = (
+            _safe_observation(keys_obs, wait_s=10.0).get("winnow_keys")
+            if keys_obs else None
+        )
+        prune_winnow = winnow_keys is not None and winnow_keys <= BROADCAST_KEY_BUDGET
 
         # LSH candidates persist: the verify stage walks them twice
         # (estimate prefilter + payload attach), and the observation
@@ -1022,7 +1055,7 @@ class DedupPipeline:
                          fingerprints.select("doc_id", "winnow"),
                          store_fps.select("doc_id", "winnow"),
                          max_bucket_size=cfg.max_bucket_size,
-                         prune_old_by_new_keys=prune_old,
+                         prune_old_by_new_keys=prune_winnow,
                      ),
                      resume,
                      kind="persist",

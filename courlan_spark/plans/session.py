@@ -165,7 +165,7 @@ def _warm_engine(spark: SparkSession) -> None:
     session runs first; interleaved fresh-JVM A/B:
     q_url_canonical_dedup first-run 4.72/5.09 -> 3.66/3.84 s and the
     SECOND query also drops (5.24/5.35 -> 4.76/4.07 s) because C2
-    promotion continues across queries (tools/exp_r06_warmup.py).
+    promotion continues across queries (OPTIMIZATION_r06.md, #13).
     Runs on spark.range data only — no input tables, nothing cached,
     no result reused — i.e. the engine analog of the worker/numpy
     warm-up the bench already performs untimed for the same reason.

@@ -32,7 +32,7 @@ def write_snapshot(
     target: str,
     order_by: list[str] | None = None,
     bloom_cols: list[str] | None = None,
-    bloom_ndv: int = 1_000_000,
+    bloom_ndv: int | None = None,
 ) -> None:
     """Replace the table/directory contents with df (new snapshot).
 
@@ -45,15 +45,31 @@ def write_snapshot(
     push candidate-id predicates into exactly these snapshots.
 
     ``bloom_cols``: additionally store parquet bloom filters for these
-    columns (``bloom_ndv`` expected distinct values per file), giving
-    the reader ROW-GROUP-level point skipping for = / In predicates
-    inside files that min/max range skipping alone keeps — at 10^12
-    rows a delta's candidate ids hit a tiny fraction of the row groups
-    within the overlapping key range.  parquet-mr applies the filters
-    transparently during pushdown (parquet.filter.bloom.enabled
-    defaults true).  On the iceberg backend the same request becomes
-    the write.parquet.bloom-filter-enabled.column.<col> table
-    property, set below on the replace."""
+    columns, sized for ``bloom_ndv`` expected distinct values per file
+    (required with ``bloom_cols``: the caller knows the rows it
+    writes).  The filter answers the point-absence question min/max
+    cannot: doc_ids are xxhash64 values, so even a 300-row delta
+    file's footer range spans almost the whole id space, and in a
+    chained store the filter is the only doc_id skip such a file
+    gets.  parquet-mr applies the filters transparently during
+    pushdown (parquet.filter.bloom.enabled defaults true).
+
+    Sizing: parquet-mr allocates ~9.7 bits per expected value at its
+    default 1% false-positive rate, rounded up to a power of two and
+    capped at 1 MB (parquet.bloom.filter.max.bytes) per column chunk
+    — 300 expected values give ~0.5 KB of filter, 50k give 64 KB, and
+    more than ~430k give the full 1 MB.  A fixed guess does not work:
+    a filter sized for 1M values is that full 1 MB even in a file
+    holding 300 rows.  An upper bound on the distinct count (e.g. the
+    whole write's row count for a unique key) only over-sizes toward
+    that cap.
+
+    On the iceberg backend the request becomes the
+    write.parquet.bloom-filter-enabled.column.<col> table property,
+    set below on the replace; Iceberg sizes the filter through its own
+    write.parquet.bloom-filter-max-bytes property."""
+    if bloom_cols and bloom_ndv is None:
+        raise ValueError("bloom_cols needs bloom_ndv, the expected distinct count")
     if order_by:
         df = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
     if TABLE_FORMAT == "iceberg":

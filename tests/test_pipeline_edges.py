@@ -76,23 +76,30 @@ def _spy_persisted(monkeypatch) -> list:
 
 
 def test_run_releases_every_frame_it_persisted(spark, monkeypatch, tmp_path):
-    "Both pipeline modes leave no frame of theirs cached once they return."
+    """Both pipeline modes leave no frame of theirs cached once they
+    return, and no cached RDD either: the components step's frames
+    are released with the rest."""
     from pyspark.storagelevel import StorageLevel
 
     from courlan_spark.plans.pipeline import FingerprintStore
     from courlan_spark.sources.pages import generate_pages, pages_view
 
     persisted = _spy_persisted(monkeypatch)
+    cached_rdds = spark.sparkContext._jsc.getPersistentRDDs().size
     full = generate_pages(spark, 300)
     base = pages_view(full.where("doc_id < 270"))
     delta = pages_view(full.where("doc_id >= 270"))
+    before = cached_rdds()
     DedupPipeline(spark, str(tmp_path / "min"), DedupConfig(snapshot_mode="minimal")).run(
         pages_view(full)
     )
+    assert cached_rdds() == before
     n_full = len(persisted)
     DedupPipeline(spark, str(tmp_path / "base"), DedupConfig()).run(base)
+    assert cached_rdds() == before
     store = FingerprintStore.from_workdir(spark, str(tmp_path / "base"))
     DedupPipeline(spark, str(tmp_path / "delta"), DedupConfig()).run_incremental(delta, store)
+    assert cached_rdds() == before
     assert n_full >= 5 and len(persisted) > n_full
     assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
 
