@@ -208,6 +208,21 @@ def _snapshot_path(workdir: str, stage: str) -> str:
     return os.path.join(workdir, stage)
 
 
+def _name_failure(exc: BaseException, stage: str) -> None:
+    "Record the stage a failure came from; an inner stage's name wins."
+    if not hasattr(exc, "pipeline_stage"):
+        exc.pipeline_stage = stage
+
+
+@contextlib.contextmanager
+def _failing_as(stage: str):
+    try:
+        yield
+    except BaseException as exc:
+        _name_failure(exc, stage)
+        raise
+
+
 def _safe_observation(obs, wait_s: float = 0.0) -> dict:
     """Read an Observation defensively and NON-BLOCKING.
 
@@ -297,6 +312,10 @@ class DedupPipeline:
         kind: str = "snapshot",
         overlap_write: bool = False,
     ) -> DataFrame:
+        with _failing_as(name):
+            return self._build_stage(name, build, resume, kind, overlap_write)
+
+    def _build_stage(self, name, build, resume, kind, overlap_write) -> DataFrame:
         # "ephemeral": lazy in EVERY snapshot mode — for cheap derived
         # frames whose durability buys nothing (the canonical frame is
         # a deterministic function of the input the next stage re-reads
@@ -397,6 +416,10 @@ class DedupPipeline:
         self.metrics.append(metric)
         return out
 
+    def _append_metrics(self, record: dict) -> None:
+        with open(os.path.join(self.workdir, "metrics.json"), "a") as fh:
+            fh.write(json.dumps(record, default=str) + "\n")
+
     def _persist(self, df: DataFrame) -> DataFrame:
         self._persisted.append(df)
         return df.persist()
@@ -413,6 +436,7 @@ class DedupPipeline:
             try:
                 fut.result()
             except Exception as exc:  # noqa: BLE001 — re-raised below
+                _name_failure(exc, name)
                 failure = failure or exc
                 continue
             self.metrics.append(
@@ -435,9 +459,14 @@ class DedupPipeline:
         self._pending_writes.clear()
         try:
             yield
-        except BaseException:
+        except BaseException as exc:
             with contextlib.suppress(Exception):
                 self._join_writes()
+            with contextlib.suppress(OSError):
+                self._append_metrics({
+                    "failed_stage": getattr(exc, "pipeline_stage", None),
+                    "error": (str(exc).splitlines() or [type(exc).__name__])[0],
+                })
             raise
         finally:
             persisted, self._persisted = self._persisted, []
@@ -757,8 +786,7 @@ class DedupPipeline:
             summary["output_partitions"] = [
                 {"partition": r["pid"], "rows": r["count"]} for r in partition_rows
             ]
-        with open(os.path.join(self.workdir, "metrics.json"), "a") as fh:
-            fh.write(json.dumps(summary, default=str) + "\n")
+        self._append_metrics(summary)
         return summary
 
     def run_incremental(
@@ -1129,8 +1157,7 @@ class DedupPipeline:
                 for name, obs in self._observations.items()
             },
         }
-        with open(os.path.join(self.workdir, "metrics.json"), "a") as fh:
-            fh.write(json.dumps(summary, default=str) + "\n")
+        self._append_metrics(summary)
         return summary
 
     def assignments(self) -> DataFrame:
