@@ -8,12 +8,18 @@
           ──winnowing + substring verify───────> pair evidence
           ──connected components───────────────> cluster table
 
-Every stage materializes to a parquet snapshot under ``workdir`` and
-is skipped on resume when its `_SUCCESS` marker exists — the sandbox
-realization of Iceberg snapshot checkpoints (north rule; the writer
-is isolated in ``_write_snapshot`` so an Iceberg ``writeTo`` drops in
-unchanged).  Per-stage metrics (rows, seconds, partitions) are
-returned and appended to ``workdir/metrics.json``.
+``run`` (a whole corpus) and ``run_incremental`` (a delta batch
+against a ``FingerprintStore``) execute one stage graph; a leg that
+differs between the two picks its operator by whether a store is
+passed.  Each stage declares how a run materializes it in each
+``snapshot_mode`` (``Plan``).  In "all" mode every durable stage
+writes a parquet snapshot under ``workdir`` and is skipped on resume
+when its `_SUCCESS` marker exists — the sandbox realization of
+Iceberg snapshot checkpoints (north rule; the writer is isolated in
+``_write_snapshot`` so an Iceberg ``writeTo`` drops in unchanged).
+"minimal" mode writes only the final assignments.  Per-stage metrics
+(rows, seconds, partitions) are returned and appended to
+``workdir/metrics.json``; a failed run appends the stage it failed in.
 """
 
 from __future__ import annotations
@@ -26,11 +32,13 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.url_udfs import make_check_url_udf
 from ..operators import dedup, suffix
+from ..operators import incremental as inc
+from ..operators.fingerprints import fused_fingerprints
 
 
 @dataclass
@@ -47,10 +55,6 @@ class DedupConfig:
     salt_partitions: int | None = None
     with_substring_stage: bool = True
     with_simhash_stage: bool = True
-    # one Arrow pass computing MinHash+SimHash+winnow together (the
-    # 100 TB default: one text scan instead of three); False falls back
-    # to the per-kernel operators (column-identical — test_fused_fingerprints)
-    fused_fingerprints: bool = True
     # optional pre-fingerprint corpus gate (training-data curation):
     # docs outside [min_tokens, max_tokens] or below min_alpha_ratio
     # leave the corpus before any fingerprint work; None disables each
@@ -67,15 +71,6 @@ class DedupConfig:
     # snapshot to parquet — fewer driver barriers, better scaling when
     # stage outputs are small relative to job overhead.
     snapshot_mode: str = "all"
-    # materialize INDEPENDENT evidence stages concurrently (guide §2.6:
-    # actions are only sequential because driver code calls them
-    # sequentially): once the fingerprint frame exists, the exact-text,
-    # SimHash and substring-candidate stages share no dependency with
-    # the MinHash verify chain, so their jobs back-fill executors the
-    # verify chain's stage tails leave idle.  Spark schedules
-    # concurrent jobs FIFO — the earlier job keeps priority, later
-    # ones use the slack.  False restores the serial r5 order.
-    overlap_stages: bool = True
     extra: dict = field(default_factory=dict)
 
 
@@ -89,10 +84,9 @@ class FingerprintStore:
     """The persisted state an incremental (delta-batch) run joins
     against: the base run's url-unique corpus, its fused fingerprint
     frame, and its cluster table.  ``from_workdir`` loads the three
-    from a completed snapshot_mode="all" pipeline run with
-    fused_fingerprints=True — the store must come from the same
-    DedupConfig (num_perm/shingle_k/seed/bands) the incremental run
-    uses, or bucket keys will not line up."""
+    from a completed snapshot_mode="all" pipeline run — the store
+    must come from the same DedupConfig (num_perm/shingle_k/seed/bands)
+    the incremental run uses, or bucket keys will not line up."""
 
     docs: DataFrame          # doc_id, norm_url, domain, warc_ts, text, lang
     fingerprints: DataFrame  # doc_id, signature, simhash, winnow, text_hash
@@ -145,8 +139,7 @@ class FingerprintStore:
             if not _has_snapshot(path):
                 raise FileNotFoundError(
                     f"store stage {stage!r} missing under {workdir} — the "
-                    "base run must use snapshot_mode='all' and "
-                    "fused_fingerprints=True"
+                    "base run must use snapshot_mode='all'"
                 )
             return _read_snapshot(spark, path)
 
@@ -258,6 +251,38 @@ def _safe_observation(obs, wait_s: float = 0.0) -> dict:
         return {"unavailable": str(exc).splitlines()[0][:120]}
 
 
+# How a run materializes one stage's frame.  A stage declares one level
+# per snapshot mode (``Plan``), and the level alone decides what the
+# run does with the frame: no other setting changes it.
+LAZY = "lazy"              # not at all: consumers inline the plan
+PERSIST = "persist"        # persisted; the cache fills in its first consumer's job
+COUNT = "count"            # persisted and counted: the cache fills in a job of its own
+SNAPSHOT = "snapshot"      # written to parquet; consumers read the snapshot back
+BACKGROUND = "background"  # persisted and counted, consumers read the cache; the
+                           # snapshot is written on a background thread
+# the durable levels: a finished snapshot is read back on resume
+DURABLE = (SNAPSHOT, BACKGROUND)
+
+
+@dataclass(frozen=True)
+class Plan:
+    "One stage's materialization level in each snapshot mode."
+
+    minimal: str
+    all: str
+
+
+# Lazy in EVERY snapshot mode — for cheap derived frames whose
+# durability buys nothing (the canonical frame is a deterministic
+# function of the input the next stage re-reads anyway; the substring
+# verify folds into the evidence job).  Each such stage was one
+# serialized write-job barrier in snapshot_mode="all" — part of the
+# measured core-count-independent serial term of the spark-submit
+# scaling record.  Resume stays correct: a killed run recomputes the
+# frame deterministically inside its durable consumer's build.
+EPHEMERAL = Plan(LAZY, LAZY)
+
+
 class DedupPipeline:
     def __init__(
         self,
@@ -273,8 +298,8 @@ class DedupPipeline:
         self.metrics: list[dict] = []
         # snapshot writes deferred to a background thread (guide §2.6):
         # (stage name, Future) pairs joined by _join_writes() before a
-        # run returns — the workdir is complete at return, same as the
-        # synchronous path
+        # run returns — the workdir is complete at return, same as a
+        # synchronous write
         self._pending_writes: list[tuple[str, object]] = []
         self._write_pool = None
         # every frame a run persisted, unpersisted when the run ends
@@ -294,127 +319,73 @@ class DedupPipeline:
                 fh,
             )
 
-    # snapshots a later incremental run scans selectively are written
-    # range-sorted by doc_id, so parquet footer min/max support file
-    # skipping for the candidate-id predicates the delta verify pushes
-    # (Iceberg sorted-write-order analog; see tables.write_snapshot)
-    # one fact: the key column the store stages are scanned by.  The
-    # snapshot is range-sorted by it (file skipping via footer min/max
-    # for the candidate-id predicates) AND carries a parquet bloom
-    # filter on it (row-group point skipping inside surviving files).
+    # the key column the store stages are scanned by.  A later
+    # incremental run scans these snapshots selectively, so they are
+    # written range-sorted by it (file skipping via footer min/max for
+    # the candidate-id predicates the delta verify pushes; the Iceberg
+    # sorted-write-order analog, see tables.write_snapshot) AND carry a
+    # parquet bloom filter on it (row-group point skipping inside
+    # surviving files).
     _STAGE_KEY_COLS = {"02_url_dedup": ["doc_id"], "04_fingerprints": ["doc_id"]}
 
-    def _stage(
-        self,
-        name: str,
-        build,
-        resume: bool,
-        kind: str = "snapshot",
-        overlap_write: bool = False,
-    ) -> DataFrame:
+    def _stage(self, name: str, build, resume: bool, plan: Plan) -> DataFrame:
+        "Build (or, durable and resumed, read back) one stage as ``plan`` says."
         with _failing_as(name):
-            return self._build_stage(name, build, resume, kind, overlap_write)
-
-    def _build_stage(self, name, build, resume, kind, overlap_write) -> DataFrame:
-        # "ephemeral": lazy in EVERY snapshot mode — for cheap derived
-        # frames whose durability buys nothing (the canonical frame is
-        # a deterministic function of the input the next stage re-reads
-        # anyway; the substring verify folds into the evidence job).
-        # Each skipped stage was one serialized write-job barrier in
-        # snapshot_mode="all" — part of the measured core-count-
-        # independent serial term of the spark-submit scaling record.
-        # Resume stays correct: a killed run recomputes the ephemeral
-        # frame deterministically inside its durable consumer's build.
-        if kind == "ephemeral":
+            level = plan.minimal if self.config.snapshot_mode == "minimal" else plan.all
+            path = _snapshot_path(self.workdir, name)
+            metric = {"stage": name, "materialize": level}
             started = time.time()
-            df = build()
-            self.metrics.append(
-                {"stage": name, "kind": "ephemeral",
-                 "secs": round(time.time() - started, 3)}
-            )
-            return df
-        if self.config.snapshot_mode == "minimal" and kind != "snapshot":
-            started = time.time()
-            df = build()
-            if kind == "persist":
-                df = self._persist(df)
-                df.count()  # materialize the cache once
-            elif kind == "persist_lazy":
-                # persist WITHOUT the count barrier: the cache fills
-                # inside the next stage's (single-consumer) job — used
-                # for 02, whose only consumer before the overlap group
-                # is 04's eager materialization, so no concurrent jobs
-                # can race the cache build (guide §2.6 serial-term cut)
-                df = self._persist(df)
-            self.metrics.append(
-                {"stage": name, "kind": kind, "secs": round(time.time() - started, 3)}
-            )
-            return df
-        path = _snapshot_path(self.workdir, name)
-        started = time.time()
-        if resume and _has_snapshot(path):
-            df = _read_snapshot(self.spark, path)
-            self.metrics.append(
-                {"stage": name, "resumed": True, "secs": round(time.time() - started, 3)}
-            )
-            return df
-        df = build()
-        key_cols = self._STAGE_KEY_COLS.get(name)
-        deferred = overlap_write and self.config.overlap_stages
-        if deferred or key_cols:
-            # The stage's CONSUMERS only need the frame; only the NEXT
-            # RUN (resume / store chaining) needs the files.  Persist +
-            # count materializes the data once, then the parquet write
-            # — a pure read-of-cache + commit job that was a ~1 s
-            # serial barrier per snapshot stage in the delta profile —
-            # runs on a background thread and hides under the following
-            # stages.  _join_writes() blocks before run()/
-            # run_incremental() return, so externally the workdir is
-            # exactly as complete as the synchronous path's, and a
-            # crash before the join leaves no _SUCCESS marker — resume
-            # rebuilds the stage, as it would for any interrupted
-            # write.  A key stage takes this path with overlap_stages
-            # off as well, writing inline: its count sizes the doc_id
-            # bloom filter (doc_id is unique per row, so the write's
-            # row count bounds every file's distinct keys).
-            df = self._persist(df)
-            n_rows = df.count()
-            write = functools.partial(
-                _write_snapshot,
-                df,
-                path,
-                order_by=key_cols,
-                bloom_cols=key_cols,
-                bloom_ndv=max(n_rows, 1) if key_cols else None,
-            )
-            if deferred:
-                if self._write_pool is None:
-                    self._write_pool = ThreadPoolExecutor(max_workers=2)
-                self._pending_writes.append((name, self._write_pool.submit(write)))
+            if level in DURABLE and resume and _has_snapshot(path):
+                df = _read_snapshot(self.spark, path)
+                metric["resumed"] = True
             else:
-                write()
-            metric = {
-                "stage": name,
-                "resumed": False,
-                "kind": "snapshot_overlap" if deferred else "snapshot",
-                "secs": round(time.time() - started, 3),
-            }
-            if self.count_rows:
-                metric["rows"] = n_rows
+                df = build()
+                if level in DURABLE:
+                    metric["resumed"] = False
+                if level == SNAPSHOT:
+                    _write_snapshot(df, path)
+                    df = _read_snapshot(self.spark, path)
+                    if self.count_rows:
+                        metric["rows"] = df.count()
+                        metric["partitions"] = df.rdd.getNumPartitions()
+                elif level != LAZY:
+                    df = self._persist(df)
+                if level in (COUNT, BACKGROUND):
+                    n_rows = df.count()  # materialize the cache once
+                    if self.count_rows:
+                        metric["rows"] = n_rows
+                if level == BACKGROUND:
+                    self._write_in_background(name, df, path, n_rows)
+            metric["secs"] = round(time.time() - started, 3)
             self.metrics.append(metric)
             return df
-        _write_snapshot(df, path)
-        out = _read_snapshot(self.spark, path)
-        metric = {
-            "stage": name,
-            "resumed": False,
-            "secs": round(time.time() - started, 3),
-        }
-        if self.count_rows:
-            metric["rows"] = out.count()
-            metric["partitions"] = out.rdd.getNumPartitions()
-        self.metrics.append(metric)
-        return out
+
+    def _write_in_background(self, name: str, df: DataFrame, path: str, n_rows: int) -> None:
+        """The stage's CONSUMERS only need the frame; only the NEXT RUN
+        (resume / store chaining) needs the files.  The caller's persist
+        + count materialized the data once, so the parquet write — a
+        pure read-of-cache + commit job that was a ~1 s serial barrier
+        per snapshot stage in the delta profile — runs on a background
+        thread and hides under the following stages.  _join_writes()
+        blocks before a run returns, so externally the workdir is
+        exactly as complete as a synchronous write leaves it, and a
+        crash before the join leaves no _SUCCESS marker — resume
+        rebuilds the stage, as it would for any interrupted write.  The
+        count also sizes a key stage's doc_id bloom filter (doc_id is
+        unique per row, so the row count bounds every file's distinct
+        keys)."""
+        key_cols = self._STAGE_KEY_COLS.get(name)
+        write = functools.partial(
+            _write_snapshot,
+            df,
+            path,
+            order_by=key_cols,
+            bloom_cols=key_cols,
+            bloom_ndv=max(n_rows, 1) if key_cols else None,
+        )
+        if self._write_pool is None:
+            self._write_pool = ThreadPoolExecutor(max_workers=2)
+        self._pending_writes.append((name, self._write_pool.submit(write)))
 
     def _append_metrics(self, record: dict) -> None:
         with open(os.path.join(self.workdir, "metrics.json"), "a") as fh:
@@ -453,7 +424,8 @@ class DedupPipeline:
     def _run_scope(self):
         """Release a run's state however the run ends.  A failed run
         still joins the snapshot writes it started (a write's own
-        error does not replace the run's), and every frame the run
+        error does not replace the run's) and appends one metrics line
+        naming the stage it failed in, and every frame the run
         persisted is unpersisted without blocking; a successful run
         joined its writes before writing its summary."""
         self._pending_writes.clear()
@@ -473,21 +445,18 @@ class DedupPipeline:
             for df in persisted:
                 df.unpersist(blocking=False)
 
-    def _materialize_stages(self, specs, resume: bool) -> dict:
-        """Materialize several INDEPENDENT stages — concurrently when
-        ``config.overlap_stages`` (guide §2.6: Spark happily runs
-        several jobs at once inside one application; actions are only
-        sequential because driver code calls them sequentially), else
-        in the given order.  ``specs`` is a list of
-        (name, callable) pairs where the callable runs the stage(s) and
-        returns the stage result; the first spec is submitted first, so
-        under FIFO scheduling it keeps resource priority and the later
-        stages back-fill its stage tails.  Exceptions propagate."""
-        if not self.config.overlap_stages or len(specs) == 1:
-            return {name: fn() for name, fn in specs}
-        with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-            futures = [(name, pool.submit(fn)) for name, fn in specs]
-            return {name: f.result() for name, f in futures}
+    def _materialize_stages(self, group: dict) -> dict:
+        """Materialize several INDEPENDENT stages concurrently (guide
+        §2.6: Spark happily runs several jobs at once inside one
+        application; actions are only sequential because driver code
+        calls them sequentially).  ``group`` maps a name to a callable
+        that runs the stage(s) and returns the stage result; the first
+        entry is submitted first, so under FIFO scheduling it keeps
+        resource priority and the later stages back-fill its stage
+        tails.  Exceptions propagate."""
+        with ThreadPoolExecutor(max_workers=len(group)) as pool:
+            futures = {name: pool.submit(fn) for name, fn in group.items()}
+            return {name: f.result() for name, f in futures.items()}
 
     def _quality_condition(self):
         "AND of the configured quality bounds, or None when unset."
@@ -531,263 +500,7 @@ class DedupPipeline:
 
     def run(self, pages: DataFrame, resume: bool = False) -> dict:
         with self._run_scope():
-            return self._run_body(pages, resume)
-
-    def _run_body(self, pages: DataFrame, resume: bool) -> dict:
-        cfg = self.config
-        self._persist_config()
-
-        # free row-count metrics via observe(): recorded on the single
-        # physical pass, no extra jobs (the north rule's per-stage
-        # metrics without count() barriers)
-        from pyspark.sql import Observation
-
-        self._observations = {}
-
-        def observed(name: str, df: DataFrame) -> DataFrame:
-            obs = Observation(name)
-            self._observations[name] = obs
-            return df.observe(obs, F.count(F.lit(1)).alias("rows"))
-
-        # ---- stage 1: URL canonicalization (vectorized check_url) ----
-        def build_canonical():
-            return observed("canonical_rows", self._canonical_frame(pages))
-
-        canonical = self._stage("01_canonical", build_canonical, resume, kind="ephemeral")
-
-        # ---- stage 2: exact URL dedup (earliest capture wins) ----
-        def build_url_dedup():
-            return dedup.exact_dedup(
-                canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
-                key_cols=["norm_url"],
-                order_cols=["warc_ts", "doc_id"],
-                salt_partitions=cfg.salt_partitions,
-            )
-
-        url_unique = self._stage("02_url_dedup", build_url_dedup, resume,
-                                 kind="persist_lazy", overlap_write=True)
-
-        # optional training-data quality gate (config bounds), applied
-        # identically in full and incremental modes — per-row
-        # deterministic, so the two stay provably equivalent
-        quality = self._quality_condition()
-        if quality is not None:
-            url_unique = self._stage(
-                "02b_quality_gate",
-                lambda: observed("quality_kept", url_unique.where(quality)),
-                resume,
-                kind="lazy",
-            )
-
-        # ---- stage 3: exact text pair evidence (md5 hash groups) ----
-        def build_text_pairs():
-            hashed = url_unique.select(
-                "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("text_hash")
-            )
-            reps = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
-            return (
-                hashed.join(reps, "text_hash")
-                .where(F.col("doc_id") != F.col("rep"))
-                .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-            )
-
-        # 03 materializes INSIDE the overlap group below (guide §2.6):
-        # as an ephemeral frame it was recomputed inside 08's evidence
-        # checkpoint — ~0.9-1.4 s of md5+groupBy+join sitting on the
-        # post-overlap critical path, while the 05 wall leaves 06/07
-        # idle tail to absorb it (tools/exp_r06_stage08.py).  It only
-        # needs the 02 cache, which 04's eager materialization fills
-        # before the group starts.
-
-        # ---- stage 4: ALL text fingerprints in ONE scan ----
-        # MinHash + SimHash + winnowing share a single Arrow transfer
-        # and text decode (operators/fingerprints.py) — at corpus scale
-        # this is one pass over the text column instead of three.
-        def build_fingerprints():
-            if not cfg.fused_fingerprints:
-                return dedup.minhash_signatures(
-                    url_unique,
-                    num_perm=cfg.num_perm,
-                    shingle_k=cfg.shingle_k,
-                    seed=cfg.seed,
-                )
-            from ..operators.fingerprints import fused_fingerprints
-
-            return fused_fingerprints(
-                url_unique,
-                num_perm=cfg.num_perm,
-                shingle_k=cfg.shingle_k,
-                seed=cfg.seed,
-                bands=cfg.bands,
-            )
-
-        fingerprints = self._stage(
-            "04_fingerprints", build_fingerprints, resume, kind="persist",
-            overlap_write=True,
-        )
-        signatures = fingerprints.select("doc_id", "signature")
-
-        def build_minhash_pairs():
-            # dropped-bucket accounting rides observe() on the pass
-            # that computes the buckets anyway — zero extra jobs
-            lsh_obs = Observation("05_lsh_buckets")
-            self._observations["lsh_buckets"] = lsh_obs
-            candidates, _ = dedup.lsh_candidate_pairs(
-                signatures,
-                bands=cfg.bands,
-                max_bucket_size=cfg.max_bucket_size,
-                observation=lsh_obs,
-                # stored band keys: no band-hash Python pass here
-                buckets=(
-                    fingerprints.select(
-                        "doc_id", F.explode("bands").alias("band_key")
-                    )
-                    if cfg.fused_fingerprints
-                    else None
-                ),
-            )
-            verified = dedup.verify_pairs_jaccard(
-                candidates,
-                url_unique,
-                signatures=signatures,
-                threshold=cfg.jaccard_threshold,
-                shingle_k=cfg.shingle_k,
-            )
-            return verified.select("doc_a", "doc_b")
-
-        # ---- stages 5-7: evidence stages, OVERLAPPED (guide §2.6) ----
-        # The MinHash verify chain (05) is the long pole; the SimHash
-        # pairs and the substring CANDIDATES depend only on the
-        # fingerprint frame, so their jobs run concurrently and
-        # back-fill the verify chain's stage tails.  05 is submitted
-        # first and keeps FIFO priority.  (r5 ran these serially; the
-        # substring stage additionally waited on 05 for its anti-join —
-        # the anti-join now applies at VERIFY time instead, which is
-        # equivalent: evidence is a union, so pruning pairs the MinHash
-        # path already verified from the expensive LCS verification
-        # changes nothing — measured 100% overlap on the bench corpus.)
-        def build_simhash_pairs():
-            fps = (
-                fingerprints.select("doc_id", "simhash")
-                if cfg.fused_fingerprints
-                else dedup.simhash_fingerprints(url_unique)
-            )
-            return dedup.simhash_candidate_pairs(
-                fps,
-                max_hamming=cfg.simhash_max_hamming,
-                max_bucket_size=cfg.max_bucket_size,
-            ).select("doc_a", "doc_b")
-
-        def build_substring_cands():
-            return suffix.substring_candidate_pairs(
-                url_unique,
-                max_bucket_size=cfg.max_bucket_size,
-                winnow=(
-                    fingerprints.select("doc_id", "winnow")
-                    if cfg.fused_fingerprints
-                    else None
-                ),
-            )
-
-        # 05 persisted (it's tiny — two longs per verified pair): the
-        # substring verify anti-joins against it, and a lazy plan would
-        # re-run the whole verify DAG for that second consumer
-        specs = [
-            ("05_minhash_pairs",
-             lambda: self._stage("05_minhash_pairs", build_minhash_pairs,
-                                 resume, kind="persist")),
-        ]
-        if cfg.with_simhash_stage:
-            specs.append(
-                ("06_simhash_pairs",
-                 lambda: self._stage("06_simhash_pairs", build_simhash_pairs,
-                                     resume, kind="persist"))
-            )
-        if cfg.with_substring_stage:
-            specs.append(
-                ("07_substring_cands",
-                 lambda: self._stage("07_substring_cands", build_substring_cands,
-                                     resume, kind="persist"))
-            )
-        # 03 last: cheapest member, fills the tail the 05 wall leaves
-        specs.append(
-            ("03_exact_text_pairs",
-             lambda: self._stage("03_exact_text_pairs", build_text_pairs,
-                                 resume, kind="persist"))
-        )
-        staged = self._materialize_stages(specs, resume)
-        minhash_pairs = staged["05_minhash_pairs"]
-        simhash_pairs = staged.get("06_simhash_pairs")
-        substr_cands = staged.get("07_substring_cands")
-        text_pairs = staged["03_exact_text_pairs"]
-
-        if substr_cands is not None:
-            def build_substring_pairs():
-                cands = substr_cands.join(
-                    minhash_pairs, ["doc_a", "doc_b"], "left_anti"
-                )
-                return suffix.verify_substring_pairs(
-                    cands, url_unique, min_length=cfg.substring_min_len
-                ).select("doc_a", "doc_b")
-
-            substr_pairs = self._stage("07_substring_pairs", build_substring_pairs, resume, kind="ephemeral")
-        else:
-            substr_pairs = None
-
-        # ---- stage 7: clustering ----
-        def build_clusters():
-            evidence = text_pairs.unionByName(minhash_pairs)
-            if simhash_pairs is not None:
-                evidence = evidence.unionByName(simhash_pairs)
-            if substr_pairs is not None:
-                evidence = evidence.unionByName(substr_pairs)
-            # no explicit distinct: connected_components dedups its
-            # edge input anyway, so the extra shuffle wave would sit
-            # on the critical path twice (the observed row count is
-            # therefore pre-dedup evidence rows)
-            return dedup.cluster_assignments(
-                url_unique, observed("evidence_pairs", evidence)
-            )
-
-        clusters = self._stage("08_clusters", build_clusters, resume, kind="ephemeral")
-
-        # ---- final output: url -> cluster ----
-        def build_output():
-            return url_unique.join(clusters, "doc_id").select(
-                "doc_id", "norm_url", "domain", "cluster_id"
-            )
-
-        output = self._stage("09_assignments", build_output, resume)
-        self._join_writes()
-
-        summary = {
-            "config": {
-                k: v for k, v in vars(cfg).items() if not isinstance(v, dict)
-            },
-            "stages": self.metrics,
-            "n_output": output.count() if self.count_rows else None,
-            # observe()-based counters, recorded on the physical pass
-            # itself (no extra jobs); absent for resumed stages
-            "observed": {
-                name: _safe_observation(obs)
-                for name, obs in self._observations.items()
-            },
-        }
-        if self.count_rows:
-            # per-partition lineage/metrics (north rule): row counts of
-            # the final assignments per physical partition — one cheap
-            # aggregation on spark_partition_id
-            partition_rows = (
-                output.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .orderBy("pid")
-                .collect()
-            )
-            summary["output_partitions"] = [
-                {"partition": r["pid"], "rows": r["count"]} for r in partition_rows
-            ]
-        self._append_metrics(summary)
-        return summary
+            return self._run_graph(pages, None, resume)
 
     def run_incremental(
         self,
@@ -834,11 +547,7 @@ class DedupPipeline:
         scale the same rule holds: size a delta job's shuffle width to
         the delta, not the cluster.  Pass None to leave the session
         untouched, or an int to pin it."""
-        cfg = self.config
-        if not cfg.fused_fingerprints:
-            raise ValueError("run_incremental requires fused_fingerprints=True")
-        store.check_config(cfg)
-        self._persist_config()
+        store.check_config(self.config)
 
         session_width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         self._delta_rows = None
@@ -859,25 +568,29 @@ class DedupPipeline:
         )
         try:
             with self._run_scope():
-                return self._run_incremental_body(new_pages, store, resume)
+                return self._run_graph(new_pages, store, resume)
         finally:
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions", str(session_width)
             )
 
-    def _run_incremental_body(
-        self,
-        new_pages: DataFrame,
-        store: FingerprintStore,
-        resume: bool,
+    def _run_graph(
+        self, pages: DataFrame, store: FingerprintStore | None, resume: bool
     ) -> dict:
+        """The stage graph of both modes.  Without a store, ``pages``
+        is the whole corpus; with one, ``pages`` is a delta batch and
+        every leg that differs joins the store with its incremental
+        operator.  A full run is NOT run as a delta against an empty
+        store: Spark's empty-relation propagation does not remove the
+        windowed bucket pairing, the pair-id collects or the cluster
+        merge, and that shape measured 2.4x the full operators' wall on
+        a 4,000-page corpus (4-core host, local[4])."""
         cfg = self.config
+        self._persist_config()
 
-        from pyspark.sql import Observation
-
-        from ..operators import incremental as inc
-        from ..operators.fingerprints import fused_fingerprints
-
+        # free row-count metrics via observe(): recorded on the single
+        # physical pass, no extra jobs (the north rule's per-stage
+        # metrics without count() barriers)
         self._observations = {}
 
         def observed(name: str, df: DataFrame, *metrics) -> DataFrame:
@@ -885,279 +598,355 @@ class DedupPipeline:
             self._observations[name] = obs
             return df.observe(obs, *(metrics or [F.count(F.lit(1)).alias("rows")]))
 
-        canonical = self._stage(
+        def stage(name: str, build, plan: Plan) -> DataFrame:
+            return self._stage(name, build, resume, plan)
+
+        # ---- stage 1: URL canonicalization (vectorized check_url) ----
+        canonical = stage(
             "01_canonical",
-            lambda: observed("canonical_rows", self._canonical_frame(new_pages)),
-            resume,
-            kind="ephemeral",
+            lambda: observed("canonical_rows", self._canonical_frame(pages)),
+            EPHEMERAL,
         )
 
-        # guide §3.2 pre-filter gate, per leg: the delta's distinct
-        # bucket keys must comfortably fit a broadcast before the store
-        # side may be semi-join-pruned ahead of its exchange.  The
-        # MinHash and SimHash legs carry <= rows x max(bands, 20) keys;
-        # the winnow leg is gated on its own key count after stage 04.
-        # An unknown count (caller pinned the shuffle width) keeps the
-        # always-safe union shape.
-        prune_old = (
-            self._delta_rows is not None
-            and self._delta_rows * max(cfg.bands, 20) <= BROADCAST_KEY_BUDGET
-        )
-
-        # delta URL dedup, then first-seen-wins against the store: a
-        # norm_url the store already holds keeps its old representative
+        # ---- stage 2: exact URL dedup (earliest capture wins) ----
         def build_url_dedup():
-            among_new = dedup.exact_dedup(
+            unique = dedup.exact_dedup(
                 canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
                 key_cols=["norm_url"],
                 order_cols=["warc_ts", "doc_id"],
                 salt_partitions=cfg.salt_partitions,
             )
-            return among_new.join(
+            if store is None:
+                return unique
+            # first-seen-wins against the store: a norm_url the store
+            # already holds keeps its old representative
+            return unique.join(
                 store.docs.select("norm_url"), "norm_url", "left_anti"
             ).select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang", "n_copies")
 
-        url_unique = self._stage("02_url_dedup", build_url_dedup, resume,
-                                 kind="persist_lazy", overlap_write=True)
+        # "minimal" persists 02 WITHOUT the count barrier: the cache
+        # fills inside the next stage's (single-consumer) job — 04's
+        # eager materialization is 02's only consumer before the overlap
+        # group, so no concurrent jobs can race the cache build (guide
+        # §2.6 serial-term cut).  In "all" the count sizes the snapshot's
+        # bloom filter
+        url_unique = stage("02_url_dedup", build_url_dedup, Plan(PERSIST, BACKGROUND))
 
         # optional training-data quality gate (config bounds), applied
         # identically in full and incremental modes — per-row
         # deterministic, so the two stay provably equivalent
         quality = self._quality_condition()
         if quality is not None:
-            url_unique = self._stage(
+            url_unique = stage(
                 "02b_quality_gate",
                 lambda: observed("quality_kept", url_unique.where(quality)),
-                resume,
-                kind="lazy",
+                Plan(LAZY, SNAPSHOT),
             )
 
-        # the delta's ONLY text scan: fused MinHash+SimHash+winnow+md5.
-        # The winnow key total rides the stage's own count job.
-        fingerprints = self._stage(
-            "04_fingerprints",
-            lambda: observed(
-                "fingerprint_keys",
-                fused_fingerprints(
-                    url_unique,
-                    num_perm=cfg.num_perm,
-                    shingle_k=cfg.shingle_k,
-                    seed=cfg.seed,
-                    bands=cfg.bands,
-                ),
-                F.sum(F.size("winnow")).alias("winnow_keys"),
-            ),
-            resume,
-            kind="persist",
-            overlap_write=True,
-        )
-        store_fps = store.fingerprints
-        # a winnow key set is hundreds of keys per multi-KB doc, far
-        # past rows x bands.  A built 04 ran its count job, so its row
-        # is on the way; a resumed 04 observed nothing, and the winnow
-        # leg then keeps the union shape
-        keys_obs = self._observations.get("fingerprint_keys")
-        winnow_keys = (
-            _safe_observation(keys_obs, wait_s=10.0).get("winnow_keys")
-            if keys_obs else None
-        )
-        prune_winnow = winnow_keys is not None and winnow_keys <= BROADCAST_KEY_BUDGET
+        # ---- stage 4: ALL text fingerprints in ONE scan ----
+        # MinHash + SimHash + winnowing + md5 share a single Arrow
+        # transfer and text decode (operators/fingerprints.py) — at
+        # corpus scale this is one pass over the text column instead of
+        # three, and a delta run's ONLY text scan.
+        def build_fingerprints():
+            fingerprints = fused_fingerprints(
+                url_unique,
+                num_perm=cfg.num_perm,
+                shingle_k=cfg.shingle_k,
+                seed=cfg.seed,
+                bands=cfg.bands,
+            )
+            if store is None:
+                return fingerprints
+            # the winnow key total rides the stage's own count job
+            return observed(
+                "fingerprint_keys", fingerprints, F.sum(F.size("winnow")).alias("winnow_keys")
+            )
 
-        # LSH candidates persist: the verify stage walks them twice
-        # (estimate prefilter + payload attach), and the observation
-        # must record on exactly one execution of the pass
+        fingerprints = stage("04_fingerprints", build_fingerprints, Plan(COUNT, BACKGROUND))
+        signatures = fingerprints.select("doc_id", "signature")
+
+        if store is not None:
+            store_fps = store.fingerprints
+            # guide §3.2 pre-filter gate, per leg: the delta's distinct
+            # bucket keys must comfortably fit a broadcast before the
+            # store side may be semi-join-pruned ahead of its exchange.
+            # The MinHash and SimHash legs carry <= rows x max(bands, 20)
+            # keys.  An unknown count (caller pinned the shuffle width)
+            # keeps the always-safe union shape.
+            prune_old = (
+                self._delta_rows is not None
+                and self._delta_rows * max(cfg.bands, 20) <= BROADCAST_KEY_BUDGET
+            )
+            # a winnow key set is hundreds of keys per multi-KB doc, far
+            # past rows x bands, so that leg is gated on its own count.
+            # A built 04 ran its count job, so its row is on the way; a
+            # resumed 04 observed nothing, and the winnow leg then keeps
+            # the union shape
+            keys_obs = self._observations.get("fingerprint_keys")
+            winnow_keys = (
+                _safe_observation(keys_obs, wait_s=10.0).get("winnow_keys")
+                if keys_obs else None
+            )
+            prune_winnow = winnow_keys is not None and winnow_keys <= BROADCAST_KEY_BUDGET
+
+        def band_rows(df):
+            # STORED band keys: no band-hash Python pass, and the store
+            # never pays one however large it has grown
+            return df.select("doc_id", F.explode("bands").alias("band_key"))
+
+        def lsh_observation():
+            # dropped-bucket accounting rides observe() on the pass
+            # that computes the buckets anyway — zero extra jobs
+            obs = Observation("05_lsh_buckets")
+            self._observations["lsh_buckets"] = obs
+            return obs
+
+        # a delta's LSH candidates persist: the verify stage walks them
+        # twice (estimate prefilter + payload attach), and the
+        # observation must record on exactly one execution of the pass
         def build_candidates():
-            lsh_obs = Observation("05_lsh_buckets")
-            self._observations["lsh_buckets"] = lsh_obs
-            # both sides explode STORED band keys: the store never
-            # pays a Python pass, however large it has grown
-            def bucket_rows(df):
-                return df.select("doc_id", F.explode("bands").alias("band_key"))
-
             return inc.incremental_minhash_pairs(
-                fingerprints.select("doc_id", "signature"),
+                signatures,
                 store_fps.select("doc_id", "signature"),
                 prune_old_by_new_keys=prune_old,
                 bands=cfg.bands,
                 max_bucket_size=cfg.max_bucket_size,
-                observation=lsh_obs,
-                new_buckets=bucket_rows(fingerprints),
-                old_buckets=(
-                    bucket_rows(store_fps)
-                    if "bands" in store_fps.columns
-                    else None
-                ),
+                observation=lsh_observation(),
+                new_buckets=band_rows(fingerprints),
+                old_buckets=band_rows(store_fps) if "bands" in store_fps.columns else None,
             )
 
-        # ---- delta evidence stages, OVERLAPPED (guide §2.6) ----
-        # The MinHash chain (candidates -> verify) is the long pole of
-        # a delta run; the exact-text, SimHash and substring-candidate
-        # stages depend only on the delta fingerprints + the store, so
-        # their (snapshot-writing) jobs run concurrently and back-fill
-        # the chain's stage tails — in snapshot_mode="all" the r5 shape
-        # serialized ELEVEN write jobs end to end, the measured
-        # core-count-independent serial term of the spark-submit
-        # scaling record.  The MinHash chain is submitted first and
-        # keeps FIFO priority.
-        def run_minhash_chain():
-            candidates = self._stage(
-                "05_candidates", build_candidates, resume, kind="persist"
-            )
-
-            # verify inputs: the delta side unions with a store side
-            # PRUNED to candidate partners — a bounded id collect from
-            # the persisted pair set (no DAG re-run, unlike round 3's
-            # dropped semi-join prunes) pushed into the store scan as
-            # an In predicate, which the doc_id-sorted store snapshots
-            # turn into parquet file skipping.  The verify reads store
-            # rows proportional to the candidate set, not the corpus.
-            def build_minhash_pairs():
-                # the pair-payload attach inside verify explodes the
-                # (small) pair set and broadcast-joins it against the
-                # pruned union: only matched store rows ever shuffle,
-                # in the same scan.  One bounded id collect serves both
-                # pruned store scans.
+        def build_minhash_pairs(candidates):
+            if store is None:
+                candidates, _ = dedup.lsh_candidate_pairs(
+                    signatures,
+                    bands=cfg.bands,
+                    max_bucket_size=cfg.max_bucket_size,
+                    observation=lsh_observation(),
+                    buckets=band_rows(fingerprints),
+                )
+                texts, sigs = url_unique, signatures
+            else:
+                # verify inputs: the delta side unions with a store side
+                # PRUNED to candidate partners — one bounded id collect
+                # from the persisted pair set (no DAG re-run, unlike round
+                # 3's dropped semi-join prunes) serves both store scans,
+                # pushed in as an In predicate the doc_id-sorted store
+                # snapshots turn into parquet file skipping.  The pair-
+                # payload attach inside verify explodes the (small) pair
+                # set and broadcast-joins it against the pruned union:
+                # only matched store rows ever shuffle, in the same scan.
                 cand_ids = inc.collect_pair_ids([candidates])
-                return dedup.verify_pairs_jaccard(
-                    candidates,
-                    url_unique.select("doc_id", "text").unionByName(
-                        inc.prune_store_by_ids(
-                            store.docs.select("doc_id", "text"), cand_ids
-                        )
-                    ),
-                    signatures=fingerprints.select("doc_id", "signature").unionByName(
-                        inc.prune_store_by_ids(
-                            store_fps.select("doc_id", "signature"), cand_ids
-                        )
-                    ),
-                    threshold=cfg.jaccard_threshold,
-                    shingle_k=cfg.shingle_k,
-                ).select("doc_a", "doc_b")
+                texts = url_unique.select("doc_id", "text").unionByName(
+                    inc.prune_store_by_ids(store.docs.select("doc_id", "text"), cand_ids)
+                )
+                sigs = signatures.unionByName(
+                    inc.prune_store_by_ids(store_fps.select("doc_id", "signature"), cand_ids)
+                )
+            return dedup.verify_pairs_jaccard(
+                candidates,
+                texts,
+                signatures=sigs,
+                threshold=cfg.jaccard_threshold,
+                shingle_k=cfg.shingle_k,
+            ).select("doc_a", "doc_b")
 
-            return self._stage(
-                "05_minhash_pairs", build_minhash_pairs, resume, kind="persist"
+        # 05 persisted (it's tiny — two longs per verified pair): the
+        # substring verify anti-joins against it, and a lazy plan would
+        # re-run the whole verify DAG for that second consumer
+        def minhash_chain():
+            candidates = None
+            if store is not None:
+                candidates = stage("05_candidates", build_candidates, Plan(COUNT, SNAPSHOT))
+            return stage(
+                "05_minhash_pairs",
+                lambda: build_minhash_pairs(candidates),
+                Plan(COUNT, SNAPSHOT),
             )
 
-        specs = [("05_minhash_pairs", run_minhash_chain)]
-        # exact-text edges from stored hashes — no old text read
-        specs.append(
-            ("03_exact_text_pairs",
-             lambda: self._stage(
-                 "03_exact_text_pairs",
-                 lambda: inc.incremental_text_pairs(
-                     fingerprints.select("doc_id", "text_hash"),
-                     store_fps.select("doc_id", "text_hash"),
-                 ),
-                 resume,
-                 kind="lazy",
-             ))
-        )
+        def build_simhash_pairs():
+            if store is None:
+                pairs = dedup.simhash_candidate_pairs(
+                    fingerprints.select("doc_id", "simhash"),
+                    max_hamming=cfg.simhash_max_hamming,
+                    max_bucket_size=cfg.max_bucket_size,
+                )
+            else:
+                pairs = inc.incremental_simhash_pairs(
+                    fingerprints.select("doc_id", "simhash"),
+                    store_fps.select("doc_id", "simhash"),
+                    max_hamming=cfg.simhash_max_hamming,
+                    max_bucket_size=cfg.max_bucket_size,
+                    prune_old_by_new_keys=prune_old,
+                )
+            return pairs.select("doc_a", "doc_b")
+
+        # candidates WITHOUT the anti-join against the MinHash verdicts
+        # (that dependency would serialize this stage behind the whole
+        # 05 chain) — the anti-join applies at verify time below, which
+        # is equivalent: evidence is a union, so pruning pairs the
+        # MinHash path already verified from the expensive LCS
+        # verification changes nothing (measured 100% overlap on the
+        # bench corpus)
+        def build_substring_cands():
+            if store is None:
+                return suffix.substring_candidate_pairs(
+                    url_unique,
+                    max_bucket_size=cfg.max_bucket_size,
+                    winnow=fingerprints.select("doc_id", "winnow"),
+                )
+            return inc.incremental_substring_candidates(
+                fingerprints.select("doc_id", "winnow"),
+                store_fps.select("doc_id", "winnow"),
+                max_bucket_size=cfg.max_bucket_size,
+                prune_old_by_new_keys=prune_winnow,
+            )
+
+        def build_text_pairs():
+            if store is not None:
+                # exact-text edges from stored hashes — no old text read
+                return inc.incremental_text_pairs(
+                    fingerprints.select("doc_id", "text_hash"),
+                    store_fps.select("doc_id", "text_hash"),
+                )
+            hashed = url_unique.select(
+                "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("text_hash")
+            )
+            reps = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
+            return (
+                hashed.join(reps, "text_hash")
+                .where(F.col("doc_id") != F.col("rep"))
+                .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+            )
+
+        # ---- stages 5-7 and 3: evidence stages, OVERLAPPED (guide §2.6) ----
+        # The MinHash verify chain (05) is the long pole; the SimHash
+        # pairs, the substring CANDIDATES and the exact-text pairs
+        # depend only on the fingerprint frame (and the store), so their
+        # jobs run concurrently and back-fill the verify chain's stage
+        # tails — in snapshot_mode="all" the r5 shape serialized ELEVEN
+        # write jobs of a delta run end to end, the measured core-count-
+        # independent serial term of the spark-submit scaling record.
+        # 05 is submitted first and keeps FIFO priority.  03 materializes
+        # INSIDE the group: as an ephemeral frame it was recomputed
+        # inside the full run's clustering — ~0.9-1.4 s of md5+groupBy+
+        # join on the post-overlap critical path (tools/exp_r06_stage08.py);
+        # it only needs the 02 cache, which 04's count fills first.
+        # A delta's exact-text and SimHash pairs come from stored keys
+        # and are counted only by 08_evidence in "minimal" mode.
+        stored_key_plan = Plan(COUNT, SNAPSHOT) if store is None else Plan(LAZY, SNAPSHOT)
+        group = {"05_minhash_pairs": minhash_chain}
         if cfg.with_simhash_stage:
-            specs.append(
-                ("06_simhash_pairs",
-                 lambda: self._stage(
-                     "06_simhash_pairs",
-                     lambda: inc.incremental_simhash_pairs(
-                         fingerprints.select("doc_id", "simhash"),
-                         store_fps.select("doc_id", "simhash"),
-                         max_hamming=cfg.simhash_max_hamming,
-                         max_bucket_size=cfg.max_bucket_size,
-                         prune_old_by_new_keys=prune_old,
-                     ).select("doc_a", "doc_b"),
-                     resume,
-                     kind="lazy",
-                 ))
+            group["06_simhash_pairs"] = lambda: stage(
+                "06_simhash_pairs", build_simhash_pairs, stored_key_plan
             )
         if cfg.with_substring_stage:
-            # candidates WITHOUT the anti-join against the MinHash
-            # verdicts (that dependency would serialize this stage
-            # behind the whole 05 chain) — the anti-join applies at
-            # verify time below, which is equivalent: evidence is a
-            # union, so pruning already-verified pairs from the LCS
-            # pass changes nothing in the merged clusters
-            specs.append(
-                ("07_substring_cands",
-                 lambda: self._stage(
-                     "07_substring_cands",
-                     lambda: inc.incremental_substring_candidates(
-                         fingerprints.select("doc_id", "winnow"),
-                         store_fps.select("doc_id", "winnow"),
-                         max_bucket_size=cfg.max_bucket_size,
-                         prune_old_by_new_keys=prune_winnow,
-                     ),
-                     resume,
-                     kind="persist",
-                 ))
+            group["07_substring_cands"] = lambda: stage(
+                "07_substring_cands", build_substring_cands, Plan(COUNT, SNAPSHOT)
             )
-        staged = self._materialize_stages(specs, resume)
+        # 03 last: cheapest member, fills the tail the 05 wall leaves
+        group["03_exact_text_pairs"] = lambda: stage(
+            "03_exact_text_pairs", build_text_pairs, stored_key_plan
+        )
+        staged = self._materialize_stages(group)
         minhash_pairs = staged["05_minhash_pairs"]
-        text_pairs = staged["03_exact_text_pairs"]
-        simhash_pairs = staged.get("06_simhash_pairs")
-        substr_cands = staged.get("07_substring_cands")
 
-        if substr_cands is not None:
-            fresh_cands = substr_cands.join(
-                minhash_pairs, ["doc_a", "doc_b"], "left_anti"
+        evidence = staged["03_exact_text_pairs"].unionByName(minhash_pairs)
+        if cfg.with_simhash_stage:
+            evidence = evidence.unionByName(staged["06_simhash_pairs"])
+        if cfg.with_substring_stage:
+            def build_substring_pairs():
+                cands = staged["07_substring_cands"].join(
+                    minhash_pairs, ["doc_a", "doc_b"], "left_anti"
+                )
+                texts = url_unique if store is None else url_unique.select(
+                    "doc_id", "text"
+                ).unionByName(
+                    inc.prune_store_by_pair_ids(store.docs.select("doc_id", "text"), [cands])
+                )
+                return suffix.verify_substring_pairs(
+                    cands, texts, min_length=cfg.substring_min_len
+                ).select("doc_a", "doc_b")
+
+            evidence = evidence.unionByName(
+                stage("07_substring_pairs", build_substring_pairs, EPHEMERAL)
             )
-            substr_pairs = self._stage(
-                "07_substring_pairs",
-                lambda: suffix.verify_substring_pairs(
-                    fresh_cands,
-                    url_unique.select("doc_id", "text").unionByName(
-                        inc.prune_store_by_pair_ids(
-                            store.docs.select("doc_id", "text"), [fresh_cands]
-                        )
-                    ),
-                    min_length=cfg.substring_min_len,
-                ).select("doc_a", "doc_b"),
-                resume,
-                kind="ephemeral",
+
+        # ---- stage 8: clustering ----
+        if store is None:
+            # no explicit distinct: connected_components dedups its
+            # edge input anyway, so the extra shuffle wave would sit
+            # on the critical path twice (the observed row count is
+            # therefore pre-dedup evidence rows)
+            clusters = stage(
+                "08_clusters",
+                lambda: dedup.cluster_assignments(
+                    url_unique, observed("evidence_pairs", evidence)
+                ),
+                EPHEMERAL,
             )
+
+            def build_output():
+                return url_unique.join(clusters, "doc_id").select(
+                    "doc_id", "norm_url", "domain", "cluster_id"
+                )
         else:
-            substr_pairs = None
-
-        # evidence persists (tiny: two longs per pair): merge_assignments
-        # walks it several times — endpoint extraction, the affected-
-        # cluster semi-joins, and every CC iteration — and a lazy union
-        # would re-run the whole verify DAG for each walk
-        def build_evidence():
-            evidence = text_pairs.unionByName(minhash_pairs)
-            if simhash_pairs is not None:
-                evidence = evidence.unionByName(simhash_pairs)
-            if substr_pairs is not None:
-                evidence = evidence.unionByName(substr_pairs)
-            return observed("evidence_pairs", evidence)
-
-        evidence = self._stage("08_evidence", build_evidence, resume,
-                               kind="persist", overlap_write=True)
-
-        def build_assignments():
-            merged = inc.merge_assignments(
-                store.assignments,
-                url_unique.select("doc_id"),
-                evidence,
-            )
-            meta = url_unique.select("doc_id", "norm_url", "domain").unionByName(
-                store.docs.select("doc_id", "norm_url", "domain")
-            )
-            return merged.join(meta, "doc_id").select(
-                "doc_id", "norm_url", "domain", "cluster_id"
+            # evidence persists (tiny: two longs per pair):
+            # merge_assignments walks it several times — endpoint
+            # extraction, the affected-cluster semi-joins, and every CC
+            # iteration — and a lazy union would re-run the whole verify
+            # DAG for each walk
+            evidence = stage(
+                "08_evidence",
+                lambda: observed("evidence_pairs", evidence),
+                Plan(COUNT, BACKGROUND),
             )
 
-        output = self._stage("09_assignments", build_assignments, resume)
+            def build_output():
+                merged = inc.merge_assignments(
+                    store.assignments, url_unique.select("doc_id"), evidence
+                )
+                meta = url_unique.select("doc_id", "norm_url", "domain").unionByName(
+                    store.docs.select("doc_id", "norm_url", "domain")
+                )
+                return merged.join(meta, "doc_id").select(
+                    "doc_id", "norm_url", "domain", "cluster_id"
+                )
+
+        # ---- final output: url -> cluster, a snapshot in every mode ----
+        output = stage("09_assignments", build_output, Plan(SNAPSHOT, SNAPSHOT))
         self._join_writes()
 
-        summary = {
-            "mode": "incremental",
-            "config": {k: v for k, v in vars(cfg).items() if not isinstance(v, dict)},
-            "stages": self.metrics,
-            "n_output": output.count() if self.count_rows else None,
-            "observed": {
-                name: _safe_observation(obs)
-                for name, obs in self._observations.items()
-            },
-        }
-        self._append_metrics(summary)
+        with _failing_as("summary"):
+            summary = {
+                "mode": "full" if store is None else "incremental",
+                "config": {
+                    k: v for k, v in vars(cfg).items() if not isinstance(v, dict)
+                },
+                "stages": self.metrics,
+                "n_output": output.count() if self.count_rows else None,
+                # observe()-based counters, recorded on the physical pass
+                # itself (no extra jobs); absent for resumed stages
+                "observed": {
+                    name: _safe_observation(obs)
+                    for name, obs in self._observations.items()
+                },
+            }
+            if self.count_rows and store is None:
+                # per-partition lineage/metrics (north rule): row counts of
+                # the final assignments per physical partition — one cheap
+                # aggregation on spark_partition_id
+                partition_rows = (
+                    output.groupBy(F.spark_partition_id().alias("pid"))
+                    .count()
+                    .orderBy("pid")
+                    .collect()
+                )
+                summary["output_partitions"] = [
+                    {"partition": r["pid"], "rows": r["count"]} for r in partition_rows
+                ]
+            self._append_metrics(summary)
         return summary
 
     def assignments(self) -> DataFrame:

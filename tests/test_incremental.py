@@ -225,11 +225,26 @@ def test_incremental_text_pairs_connectivity(spark):
 def test_store_requires_fused_columns(spark):
     import pytest
 
+    import os
+
+    from courlan_spark.operators import dedup
+    from courlan_spark.sources.tables import read_snapshot, write_snapshot
+
     full = generate_pages(spark, 200).cache()
     workdir = tempfile.mkdtemp(prefix="inc_nofuse_")
     try:
-        cfg = DedupConfig(jaccard_threshold=0.6, fused_fingerprints=False)
+        cfg = DedupConfig(jaccard_threshold=0.6)
         DedupPipeline(spark, workdir, cfg).run(pages_view(full))
+        # a base run from before the fused store format: its 04 snapshot
+        # holds the per-kernel MinHash signatures only (no text_hash or
+        # winnow column)
+        docs = read_snapshot(spark, os.path.join(workdir, "02_url_dedup"))
+        write_snapshot(
+            dedup.minhash_signatures(
+                docs, num_perm=cfg.num_perm, shingle_k=cfg.shingle_k, seed=cfg.seed
+            ),
+            os.path.join(workdir, "04_fingerprints"),
+        )
         with pytest.raises(ValueError, match="fused"):
             FingerprintStore.from_workdir(spark, workdir)
     finally:

@@ -6,7 +6,7 @@ import shutil
 import tempfile
 
 from courlan_spark.plans.evaluate import dup_pair_recall
-from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline
+from courlan_spark.plans.pipeline import DURABLE, DedupConfig, DedupPipeline
 from courlan_spark.sources.pages import generate_pages, pages_view, truth_view
 
 N_PAGES = 1200
@@ -104,7 +104,7 @@ def test_partial_resume_after_failure(spark):
         # durable consumers instead of appearing as resumable snapshots
         ephemeral = {
             m["stage"] for m in summary["stages"]
-            if m.get("kind") == "ephemeral"
+            if m["materialize"] not in DURABLE
         }
         assert "01_canonical" in ephemeral and "08_clusters" in ephemeral
         assert "05_minhash_pairs" in rebuilt and "09_assignments" in rebuilt
