@@ -852,9 +852,9 @@ class DedupPipeline:
         staged = self._materialize_stages(group)
         minhash_pairs = staged["05_minhash_pairs"]
 
-        evidence = staged["03_exact_text_pairs"].unionByName(minhash_pairs)
+        pairs = staged["03_exact_text_pairs"].unionByName(minhash_pairs)
         if cfg.with_simhash_stage:
-            evidence = evidence.unionByName(staged["06_simhash_pairs"])
+            pairs = pairs.unionByName(staged["06_simhash_pairs"])
         if cfg.with_substring_stage:
             def build_substring_pairs():
                 cands = staged["07_substring_cands"].join(
@@ -869,7 +869,7 @@ class DedupPipeline:
                     cands, texts, min_length=cfg.substring_min_len
                 ).select("doc_a", "doc_b")
 
-            evidence = evidence.unionByName(
+            pairs = pairs.unionByName(
                 stage("07_substring_pairs", build_substring_pairs, EPHEMERAL)
             )
 
@@ -882,7 +882,7 @@ class DedupPipeline:
             clusters = stage(
                 "08_clusters",
                 lambda: dedup.cluster_assignments(
-                    url_unique, observed("evidence_pairs", evidence)
+                    url_unique, observed("evidence_pairs", pairs)
                 ),
                 EPHEMERAL,
             )
@@ -899,7 +899,7 @@ class DedupPipeline:
             # DAG for each walk
             evidence = stage(
                 "08_evidence",
-                lambda: observed("evidence_pairs", evidence),
+                lambda: observed("evidence_pairs", pairs),
                 Plan(COUNT, BACKGROUND),
             )
 
