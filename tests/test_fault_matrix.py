@@ -41,8 +41,8 @@ WRITES = {
 }
 CASES = [
     (mode, where, stage)
-    for mode, stages in (("full", BUILDS["full"]), ("incremental", BUILDS["incremental"]))
-    for where, names in (("build", stages), ("write", WRITES[mode]))
+    for mode in BUILDS
+    for where, names in (("build", BUILDS[mode]), ("write", WRITES[mode]))
     for stage in names
 ]
 
