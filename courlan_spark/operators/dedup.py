@@ -262,8 +262,8 @@ def attach_pair_payloads(
 
 def band_buckets(signatures: DataFrame, bands: int = hashing.DEFAULT_BANDS) -> DataFrame:
     """(doc_id, band_key) LSH band bucket membership rows.  The single
-    definition of the band key — batch self-join, bucketed-layout, and
-    incremental new-vs-store paths all derive keys here, so two
+    definition of the band key — the batch self-join and the incremental
+    new-vs-store path both derive keys here, so two
     signatures always meet in the same bucket regardless of path."""
     band_udf = hashing.make_band_hash_udf(bands=bands)
     return signatures.select(
@@ -302,44 +302,6 @@ def lsh_candidate_pairs(
             F.count("*").alias("bucket_size")
         ).where(F.lit(False))
     return pairs, dropped
-
-
-def lsh_candidate_pairs_bucketed(
-    signatures: DataFrame,
-    table_name: str,
-    bands: int = hashing.DEFAULT_BANDS,
-    n_buckets: int = 64,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """LSH candidate join over a *bucketed* band table (SURVEY.md §4
-    item 3): band keys are materialized once into a managed table
-    bucketed+sorted by band_key, so the self-join (and any re-run
-    against the same table) is exchange-free — both join inputs arrive
-    pre-partitioned and pre-sorted.  Verified by
-    tests/test_bucketed_layout.py, which asserts the physical plan has
-    no Exchange under the join."""
-    from ..sources.tables import replace_bucketed_table
-
-    buckets = band_buckets(signatures, bands)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band_key").agg(F.count("*").alias("sz"))
-        buckets = buckets.join(
-            sizes.where(
-                (F.col("sz") > 1) & (F.col("sz") <= max_bucket_size)
-            ).select("band_key"),
-            "band_key",
-        )
-    stored = replace_bucketed_table(buckets, table_name, n_buckets, "band_key")
-    left = stored.select("band_key", F.col("doc_id").alias("doc_a"))
-    right = stored.select("band_key", F.col("doc_id").alias("doc_b"))
-    # MERGE hint: sort-merge is the strategy that exploits the bucketed
-    # sorted layout (broadcast would be chosen for tiny test tables)
-    return (
-        left.hint("merge").join(right, "band_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 def verify_pairs_jaccard(

@@ -374,27 +374,31 @@ def prune_store_by_ids(
     return store_table.where(F.expr(predicate))
 
 
-def merge_assignments(
+def changed(
     old_assignments: DataFrame,
-    new_doc_ids: DataFrame,
+    new_docs: DataFrame,
     new_pairs: DataFrame,
     max_iterations: int = 25,
 ) -> DataFrame:
-    """Fold new pair evidence into an existing cluster table.
+    """The rows new pair evidence changes in an existing cluster table:
+    every new doc with its label, plus every old doc whose label moved.
 
     Connected components run over AFFECTED clusters only: the clusters
     containing a pair endpoint contribute their (cluster_id, doc_id)
     membership edges, the new pairs are added, and the iterative
     large-star/small-star relabel touches just that subgraph — a new
     doc bridging two old clusters merges them, both sides adopting the
-    min label.  Every other old doc keeps its label untouched, so the
-    merge cost scales with the delta's blast radius, not the corpus.
-    The result is identical to one full run's labels: an affected
-    cluster's members all appear in the subgraph (via their membership
-    edges, or via the pair itself for singletons), its old label is
-    the members' min doc_id already, and unaffected components have
-    the same membership either way.  Returns (doc_id, cluster_id)
-    covering old ∪ new docs."""
+    min label.  Every other old doc keeps its label, so the merge cost
+    and the output scale with the delta's blast radius, not the corpus.
+    The labels are identical to one full run's: an affected cluster's
+    members all appear in the subgraph (via their membership edges, or
+    via the pair itself for singletons), its old label is the members'
+    min doc_id already, and unaffected components have the same
+    membership either way.
+
+    ``old_assignments`` is (doc_id, cluster_id, ...); ``new_docs`` is
+    doc_id plus the same other columns, which both carry through.  The
+    rows come out in ``old_assignments``' column order."""
     endpoints = new_pairs.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
@@ -417,15 +421,42 @@ def merge_assignments(
     components = connected_components_bounded(
         edges, max_iterations=max_iterations
     ).withColumnRenamed("node", "doc_id")
-    merged_old = (
-        old_assignments.join(components, "doc_id", "left")
-        .withColumn("cluster_id", F.coalesce("component", "cluster_id"))
-        .select("doc_id", "cluster_id")
+    columns = old_assignments.columns
+    moved = (
+        old_assignments.join(components, "doc_id")
+        .where(F.col("component") != F.col("cluster_id"))
+        .withColumn("cluster_id", F.col("component"))
+        .select(*columns)
     )
-    merged_new = (
-        new_doc_ids.select("doc_id")
-        .join(components, "doc_id", "left")
+    labelled = (
+        new_docs.join(components, "doc_id", "left")
         .withColumn("cluster_id", F.coalesce("component", "doc_id"))
-        .select("doc_id", "cluster_id")
+        .select(*columns)
     )
-    return merged_old.unionByName(merged_new)
+    return moved.unionByName(labelled)
+
+
+def overlay(base: DataFrame, changes: DataFrame) -> DataFrame:
+    """``base`` with ``changes`` laid over it: every base row whose
+    doc_id ``changes`` holds is replaced by that row, and the rest of
+    ``changes`` is added.  Both share one schema (changes' columns)."""
+    return (
+        base.select(*changes.columns)
+        .join(changes.select("doc_id"), "doc_id", "left_anti")
+        .unionByName(changes)
+    )
+
+
+def merge_assignments(
+    old_assignments: DataFrame,
+    new_doc_ids: DataFrame,
+    new_pairs: DataFrame,
+    max_iterations: int = 25,
+) -> DataFrame:
+    """Fold new pair evidence into an existing cluster table: the
+    (doc_id, cluster_id) table over old ∪ new docs, i.e. the old
+    table overlaid with the rows the evidence ``changed``."""
+    old = old_assignments.select("doc_id", "cluster_id")
+    return overlay(
+        old, changed(old, new_doc_ids.select("doc_id"), new_pairs, max_iterations)
+    )

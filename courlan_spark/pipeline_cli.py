@@ -17,14 +17,19 @@ store — operators/incremental.py):
         --store-workdir /data/dedup_run [--store-workdir /data/dedup_day1]
 
 `--store-workdir` may repeat (oldest first) to chain delta batches;
-the run writes delta-scoped snapshots plus the fully merged
-09_assignments, so its own workdir becomes the next chain link.
+the run writes delta-scoped snapshots, so its own workdir becomes the
+next chain link.  Its 09_assignments is a segment: only the rows the
+delta changed (the delta's docs and the old docs it relabelled); the
+merged table is `FingerprintStore.from_workdirs(spark, <store
+workdirs>, <workdir>).assignments`, and the summary's `n_output`
+counts it.
 
 Input: a parquet table shaped (url string, warc_ts timestamp,
 html binary, text string, lang string) — the Common-Crawl-style page
 table of the north rule.  Output: `<workdir>/09_assignments` snapshot
-(doc_id, norm_url, domain, cluster_id) plus `<workdir>/metrics.json`;
-the run summary prints as one JSON line.  `--resume` skips every
+(doc_id, norm_url, domain, cluster_id) plus `<workdir>/metrics.json`,
+whose durable stages record the `bytes` their snapshots wrote; the
+run summary prints as one JSON line.  `--resume` skips every
 stage whose snapshot already committed (identical final clusters —
 see tests/test_pipeline_recall.py).
 

@@ -141,7 +141,7 @@ def get_session(
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        # managed-table warehouse (bucketed layouts) outside the repo
+        # managed-table warehouse outside the repo
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -16,6 +16,13 @@ catalog configured) and the same calls become Iceberg DDL:
 
 Every pipeline/frontier persistence path routes through this module,
 so the swap is a config change, not a code change.
+
+Snapshots are written zstd-compressed, the codec the Iceberg tables
+they stand in for write: a 300-page delta's 02_url_dedup snapshot
+measured 92 against 159 KB with Spark's default snappy, and its
+04_fingerprints 368 against 422 KB.  The codec is set on these
+writers only, so corpus inputs and catalog outputs keep the session
+default.
 """
 
 from __future__ import annotations
@@ -25,6 +32,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_FORMAT = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
+
+CODEC = "zstd"
+# marks a committed snapshot as a segment: rows that overlay an earlier
+# full table rather than a table of their own.  The parquet backend
+# keeps it as a file beside _SUCCESS, which an overwrite removes with
+# the rest of the directory; the iceberg backend as a table property.
+SEGMENT_MARKER = "_SEGMENT"
+SEGMENT_PROPERTY = "courlan.segment"
 
 
 def write_snapshot(
@@ -67,20 +82,29 @@ def write_snapshot(
     On the iceberg backend the request becomes the
     write.parquet.bloom-filter-enabled.column.<col> table property,
     set below on the replace; Iceberg sizes the filter through its own
-    write.parquet.bloom-filter-max-bytes property."""
+    write.parquet.bloom-filter-max-bytes property.  The codec becomes
+    the write.parquet.compression-codec table property there.  (The
+    iceberg branches of this module run only where the Iceberg runtime
+    jar is installed; tests/test_iceberg_seam.py skips without it.)"""
     if bloom_cols and bloom_ndv is None:
         raise ValueError("bloom_cols needs bloom_ndv, the expected distinct count")
     if order_by:
         df = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
     if TABLE_FORMAT == "iceberg":
-        writer_v2 = df.writeTo(target)
+        # REPLACE merges table properties, so a replaced segment is
+        # unmarked here, as the parquet overwrite drops its marker file
+        writer_v2 = (
+            df.writeTo(target)
+            .tableProperty("write.parquet.compression-codec", CODEC)
+            .tableProperty(SEGMENT_PROPERTY, "false")
+        )
         for col in bloom_cols or []:
             writer_v2 = writer_v2.tableProperty(
                 f"write.parquet.bloom-filter-enabled.column.{col}", "true"
             )
         writer_v2.createOrReplace()
     else:
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite").option("compression", CODEC)
         for col in bloom_cols or []:
             writer = writer.option(
                 f"parquet.bloom.filter.enabled#{col}", "true"
@@ -89,11 +113,12 @@ def write_snapshot(
 
 
 def append_rows(df: DataFrame, target: str) -> None:
-    "Append rows to the table/directory."
+    """Append rows to the table/directory (an Iceberg table keeps the
+    codec write_snapshot set as its property)."""
     if TABLE_FORMAT == "iceberg":
         df.writeTo(target).append()
     else:
-        df.write.mode("append").parquet(target)
+        df.write.mode("append").option("compression", CODEC).parquet(target)
 
 
 def read_snapshot(spark: SparkSession, target: str) -> DataFrame:
@@ -101,34 +126,6 @@ def read_snapshot(spark: SparkSession, target: str) -> DataFrame:
     if TABLE_FORMAT == "iceberg":
         return spark.read.table(target)
     return spark.read.parquet(target)
-
-
-def replace_bucketed_table(
-    df: DataFrame, table_name: str, n_buckets: int, bucket_col: str
-) -> DataFrame:
-    """Materialize df as a managed table bucketed+sorted by
-    ``bucket_col`` and return the stored table.  On the parquet
-    backend a dropped managed table can leave its directory behind
-    after a failed run, so the location is cleared too — the
-    local-warehouse counterpart of Iceberg's REPLACE TABLE."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    if TABLE_FORMAT != "iceberg":
-        import shutil
-
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "").replace(
-            "file:", ""
-        )
-        leftover = os.path.join(warehouse, table_name.lower())
-        if warehouse and os.path.isdir(leftover):
-            shutil.rmtree(leftover, ignore_errors=True)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table_name)
-    )
-    return spark.table(table_name)
 
 
 def has_snapshot(target: str) -> bool:
@@ -146,9 +143,7 @@ def table_exists(spark: SparkSession, target: str) -> bool:
     API), looking for a _SUCCESS marker or any parquet part file."""
     if TABLE_FORMAT == "iceberg":
         return spark.catalog.tableExists(target)
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(target)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, path = _hadoop_path(spark, target)
     if not fs.exists(path):
         return False
     for status in fs.listStatus(path):
@@ -156,3 +151,40 @@ def table_exists(spark: SparkSession, target: str) -> bool:
         if name == "_SUCCESS" or name.endswith(".parquet"):
             return True
     return False
+
+
+def _hadoop_path(spark: SparkSession, target: str):
+    "(FileSystem, Path) of ``target`` through the Hadoop FileSystem API."
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def snapshot_bytes(spark: SparkSession, target: str) -> int:
+    """Bytes the committed snapshot occupies: its data files on the
+    iceberg backend, on the parquet backend the directory's length as
+    the Hadoop FileSystem reports it (checksum side files excluded, so
+    an object store and the local disk agree)."""
+    if TABLE_FORMAT == "iceberg":
+        row = spark.sql(
+            f"SELECT coalesce(sum(file_size_in_bytes), 0) AS n FROM {target}.files"
+        ).first()
+        return int(row["n"])
+    fs, path = _hadoop_path(spark, target)
+    return int(fs.getContentSummary(path).getLength())
+
+
+def mark_segment(spark: SparkSession, target: str) -> None:
+    "Mark the committed snapshot at ``target`` as a segment."
+    if TABLE_FORMAT == "iceberg":
+        spark.sql(f"ALTER TABLE {target} SET TBLPROPERTIES ('{SEGMENT_PROPERTY}' = 'true')")
+    else:
+        with open(os.path.join(target, SEGMENT_MARKER), "w"):
+            pass
+
+
+def is_segment(spark: SparkSession, target: str) -> bool:
+    "True when the snapshot at ``target`` is marked as a segment."
+    if TABLE_FORMAT == "iceberg":
+        props = spark.sql(f"SHOW TBLPROPERTIES {target}").collect()
+        return any(r["key"] == SEGMENT_PROPERTY and r["value"] == "true" for r in props)
+    return os.path.exists(os.path.join(target, SEGMENT_MARKER))

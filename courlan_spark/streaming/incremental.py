@@ -143,13 +143,13 @@ def _ingest_batch(
 def latest_assignments(
     spark: SparkSession, base_workdir: str, out_root: str
 ) -> DataFrame:
-    """The current merged cluster table: the newest committed batch's
-    09_assignments (each incremental run writes the FULLY merged
-    table), or the base run's when no batch has committed yet."""
-    from ..sources.tables import read_snapshot
+    """The current merged cluster table: the store chain's fold of the
+    base run's table and every committed batch's 09_assignments segment
+    (each incremental run writes only the rows it changed), or the
+    base run's table when no batch has committed yet."""
+    from ..plans.pipeline import FingerprintStore
 
-    chain = _committed_deltas(out_root)
-    source = chain[-1] if chain else base_workdir
-    return read_snapshot(
-        spark, os.path.join(source, "09_assignments")
-    ).select("doc_id", "cluster_id")
+    chain = [base_workdir] + _committed_deltas(out_root)
+    return FingerprintStore.from_workdirs(spark, *chain).assignments.select(
+        "doc_id", "cluster_id"
+    )

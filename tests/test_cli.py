@@ -158,5 +158,16 @@ def test_pipeline_cli_incremental(spark, tmp_path):
     )
     assert summary["mode"] == "incremental"
     assert summary["n_output"] == 30
-    merged = spark.read.parquet(inc_dir + "/09_assignments")
+    # the run's 09_assignments is a segment: the 10 delta docs plus
+    # the old docs they relabelled; the chained store holds all 30
+    from courlan_spark.plans.pipeline import FingerprintStore
+
+    store = FingerprintStore.from_workdir(spark, base_dir)
+    merged = FingerprintStore.from_workdirs(spark, base_dir, inc_dir).assignments
     assert merged.count() == 30
+    before = {r["doc_id"]: r["cluster_id"] for r in store.assignments.collect()}
+    after = {r["doc_id"]: r["cluster_id"] for r in merged.collect()}
+    changed = {d for d, c in after.items() if before.get(d) != c}
+    segment = {r["doc_id"] for r in spark.read.parquet(inc_dir + "/09_assignments").collect()}
+    assert len(set(after) - set(before)) == 10
+    assert segment == changed

@@ -5,10 +5,10 @@ on the seam's parquet backend everywhere else in this suite.  This
 test PROVES the switch point instead of assuming it: when an
 iceberg-spark-runtime jar is present (a real cluster, or a dev box
 with the jar dropped into pyspark's jars/), the same seam calls —
-write_snapshot / append_rows / read_snapshot / table_exists /
-replace_bucketed_table — execute against a real Iceberg hadoop
-catalog in a fresh subprocess (Iceberg session extensions must be set
-before JVM start, so the suite's shared session cannot be reused).
+write_snapshot / append_rows / read_snapshot / table_exists —
+execute against a real Iceberg hadoop catalog in a fresh subprocess
+(Iceberg session extensions must be set before JVM start, so the
+suite's shared session cannot be reused).
 Without the jar it skips with that reason.
 """
 

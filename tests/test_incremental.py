@@ -251,6 +251,32 @@ def test_store_requires_fused_columns(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
+def test_store_requires_band_keys(spark):
+    """A 04 snapshot without the stored band keys is refused: the
+    delta's LSH leg joins the store's stored bands, never a band-hash
+    pass over the store's signatures."""
+    import os
+
+    import pytest
+
+    from courlan_spark.sources.tables import read_snapshot, write_snapshot
+
+    full = generate_pages(spark, 200).cache()
+    workdir = tempfile.mkdtemp(prefix="inc_nobands_")
+    try:
+        DedupPipeline(spark, workdir, DedupConfig(jaccard_threshold=0.6)).run(
+            pages_view(full)
+        )
+        # collected first: the rewrite replaces the files it reads
+        path = os.path.join(workdir, "04_fingerprints")
+        fps = read_snapshot(spark, path).drop("bands")
+        write_snapshot(spark.createDataFrame(fps.collect(), fps.schema), path)
+        with pytest.raises(ValueError, match="bands"):
+            FingerprintStore.from_workdir(spark, workdir)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
 def test_incremental_resume_after_failure(spark):
     """Snapshot-mode incremental runs resume like the batch pipeline:
     destroy everything from the candidates stage onward, re-run with
