@@ -11,13 +11,14 @@ Scale levers (north rule, /root/repo/BASELINE.json:6,14):
   distribution is hub-skewed;
 * LSH bucket-size caps with dropped-bucket accounting (no silent
   truncation);
-* signature-estimate prefilter before the exact-Jaccard verify join
-  so the pair verification never rejoins full text for hopeless pairs.
+* 8-bit MinHash sketch estimate prefilter before the exact-Jaccard
+  verify join so the pair verification never rejoins full text for
+  hopeless pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing
@@ -271,8 +272,24 @@ def band_buckets(signatures: DataFrame, bands: int = hashing.DEFAULT_BANDS) -> D
     )
 
 
+def minhash_sketch(signature: str | Column) -> Column:
+    """The 8-bit MinHash sketch of a ``signature`` array<long> column:
+    array<tinyint>, one entry per permutation, each the low 8 bits of
+    that minimum (b-bit minwise hashing, Li & König, WWW 2010).  The
+    single definition of the sketch — the pipeline's stored 04 column
+    and the estimate prefilter of ``verify_pairs_jaccard`` both derive
+    it here, so a sketch from the store and one from a fresh signature
+    always compare entry for entry.  Equal minima give equal entries,
+    so the sketch's agreement count is never below the signature's.
+    The low byte maps bijectively onto the tinyint range by shifting
+    it down by 128: a plain cast of 128..255 overflows under ANSI."""
+    return F.transform(
+        signature, lambda x: (x.bitwiseAND(F.lit(255)) - F.lit(128)).cast("tinyint")
+    )
+
+
 def lsh_candidate_pairs(
-    signatures: DataFrame,
+    signatures: DataFrame | None,
     bands: int = hashing.DEFAULT_BANDS,
     max_bucket_size: int | None = 1000,
     observation=None,
@@ -287,7 +304,8 @@ def lsh_candidate_pairs(
 
     ``buckets`` (optional): precomputed (doc_id, band_key) membership
     rows — e.g. exploded from the fused fingerprint frame's stored
-    ``bands`` column, which skips the band-hash Python pass entirely.
+    ``bands`` column, which skips the band-hash Python pass entirely;
+    ``signatures`` may then be None.
     """
     if buckets is None:
         buckets = band_buckets(signatures, bands)
@@ -313,40 +331,43 @@ def verify_pairs_jaccard(
     threshold: float = 0.8,
     estimate_margin: float = 0.2,
     shingle_k: int = hashing.DEFAULT_SHINGLE_K,
+    sketches: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs.
 
-    When signatures are supplied, a signature-agreement estimate
-    (fraction of equal permutation minima) prefilters pairs whose
-    estimate falls more than ``estimate_margin`` below the threshold,
-    so the expensive text rejoin only touches plausible pairs.
-    Returns (doc_a, doc_b, jaccard) for pairs with jaccard >= threshold.
+    When (doc_id, signature) ``signatures`` or (doc_id, sketch)
+    ``sketches`` are supplied, a sketch-agreement estimate (fraction of
+    equal sketch entries) prefilters pairs whose estimate falls more
+    than ``estimate_margin`` below the threshold, so the expensive text
+    rejoin only touches plausible pairs.  Signatures are sketched here
+    (``minhash_sketch``).  Returns (doc_a, doc_b, jaccard) for pairs
+    with jaccard >= threshold.
     """
     if signatures is not None:
-        # The estimate only needs per-position EQUALITY, not the minima
-        # themselves: hash each 61-bit signature value to int32 before
-        # the attach, quartering the bytes the estimate join and its
-        # pair-reassembly aggregation ship (array<long> 1KB+ -> ~0.5KB
-        # per side; measured 1.67 -> 1.06 s warm on the 294k-candidate
-        # bench corpus).  Equal longs stay equal, so the estimate can
-        # only RISE on an int32 collision -> the prefilter passes a
-        # superset -> the exact-Jaccard verify below yields the same
-        # output rows (collision rate ~2^-32/position; the bench corpus
-        # passes an identical 59,705-pair set either way).
-        sig32 = signatures.select(
-            "doc_id",
-            F.transform("signature", lambda x: F.hash(x)).alias("signature"),
+        sketches = signatures.select(
+            "doc_id", minhash_sketch("signature").alias("sketch")
         )
+    if sketches is not None:
+        # The estimate only needs per-position EQUALITY of the minima,
+        # which their low bytes keep: equal minima give equal entries,
+        # so the estimate can only RISE on a byte collision (1/256 per
+        # unequal position) -> the prefilter passes a superset of the
+        # 64-bit estimate's pairs -> the exact-Jaccard verify below
+        # yields the same output rows.  A sketch is an eighth of the
+        # signature's bytes in the estimate join and its pair-
+        # reassembly aggregation (on a 4,000-page corpus's 1,665 LSH
+        # candidates the 64-bit estimate passed 1,449 pairs and the
+        # sketch 1,450).
         est = attach_pair_payloads(
-            pairs, sig32, "doc_id", "signature", "sig_a", "sig_b"
+            pairs, sketches, "doc_id", "sketch", "sk_a", "sk_b"
         ).withColumn(
             "est_jaccard",
             F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
+                F.zip_with("sk_a", "sk_b", lambda a, b: (a == b).cast("int")),
                 F.lit(0),
                 lambda acc, x: acc + x,
             ).cast("double")
-            / F.size("sig_a"),
+            / F.size("sk_a"),
         )
         pairs = est.where(
             F.col("est_jaccard") >= F.lit(threshold - estimate_margin)

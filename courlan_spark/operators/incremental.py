@@ -1,8 +1,9 @@
 """Incremental near-duplicate dedup: a delta batch against a store.
 
 A daily 100 TB ingest must not re-fingerprint yesterday's corpus.  The
-pipeline's persisted stage-04 frame (doc_id, signature, simhash,
-winnow, text_hash — operators/fingerprints.py) doubles as that store:
+pipeline's persisted stage-04 frame (doc_id, sketch, bands, simhash,
+winnow, text_hash — operators/fingerprints.py, with the MinHash
+signature kept only as its 8-bit sketch) doubles as that store:
 a new batch is fingerprinted ONCE (the only text-column Arrow pass of
 the whole incremental run touches only the delta), its bucket keys are
 joined against the store's, and only pairs with at least one NEW side
@@ -159,8 +160,8 @@ def incremental_bucket_pairs(
 
 
 def incremental_minhash_pairs(
-    new_signatures: DataFrame,
-    old_signatures: DataFrame,
+    new_signatures: DataFrame | None,
+    old_signatures: DataFrame | None,
     bands: int = hashing.DEFAULT_BANDS,
     max_bucket_size: int | None = 1000,
     observation=None,
@@ -173,7 +174,8 @@ def incremental_minhash_pairs(
     Pass ``new_buckets``/``old_buckets`` (doc_id, band_key rows, e.g.
     exploded from the fused frame's stored ``bands`` column) to skip
     the band-hash Python pass — essential on the store side, where the
-    signatures may be the whole corpus."""
+    signatures may be the whole corpus.  A side whose buckets are
+    passed needs no signatures (None)."""
     return incremental_bucket_pairs(
         new_buckets if new_buckets is not None else band_buckets(new_signatures, bands),
         old_buckets if old_buckets is not None else band_buckets(old_signatures, bands),

@@ -95,7 +95,7 @@ class FingerprintStore:
     the incremental run uses, or bucket keys will not line up."""
 
     docs: DataFrame          # doc_id, norm_url, domain, warc_ts, text, lang
-    fingerprints: DataFrame  # doc_id, signature, bands, simhash, winnow, text_hash
+    fingerprints: DataFrame  # doc_id, sketch, simhash, winnow, bands, text_hash
     assignments: DataFrame   # ASSIGNMENT_COLUMNS: the merged cluster table
     # the DedupConfig (as a dict) the store was built with, loaded from
     # the workdir's config.json; None only for stores assembled by hand
@@ -160,11 +160,14 @@ class FingerprintStore:
             return _read_snapshot(spark, path)
 
         fps = need("04_fingerprints")
-        missing = [c for c in ("text_hash", "winnow", "bands") if c not in fps.columns]
+        missing = [
+            c for c in ("text_hash", "winnow", "bands", "sketch") if c not in fps.columns
+        ]
         if missing:
             raise ValueError(
                 f"04_fingerprints lacks fused columns {missing} — the "
-                "base run predates the fused store format; re-run it"
+                "base run predates the fused store format (a 04 holding "
+                "the 64-bit signature has no sketch); re-run it"
             )
         store = cls(
             docs=need("02_url_dedup"),
@@ -241,6 +244,20 @@ BROADCAST_KEY_BUDGET = 8_000_000
 # the compaction bytes of 4.  Unpersisted, each read re-ran the
 # overlays: the 09 leg took 1.7 s at 0 segments and 10.8 s at 8.
 SEGMENT_BOUND = 8
+
+# rows one part file of an unkeyed snapshot (08_evidence, a 09 segment)
+# holds before the write splits into more files.  Without a bound the
+# write keeps the frame's shuffle partitions: a 300-page delta wrote its
+# 08 as 10 files and its 09 segment as 9, most of their bytes footers.
+# A million of these rows is ~10-40 MB of zstd parquet.
+FILE_ROWS = 1_000_000
+
+
+def _sized_for(df: DataFrame, rows: int | None) -> DataFrame:
+    "``df`` in one partition per FILE_ROWS of ``rows``; as is when unknown."
+    if rows is None:
+        return df
+    return df.coalesce(max(1, -(-rows // FILE_ROWS)))
 
 
 def _snapshot_path(workdir: str, stage: str) -> str:
@@ -350,6 +367,8 @@ class DedupPipeline:
         self._write_pool = None
         # every frame a run persisted, unpersisted when the run ends
         self._persisted: list[DataFrame] = []
+        # the row count each counted stage of the current run took
+        self._counted: dict[str, int] = {}
         # the store of the last run_incremental: its 09_assignments is
         # a segment over this store's cluster table (assignments())
         self._store: FingerprintStore | None = None
@@ -402,6 +421,7 @@ class DedupPipeline:
                     df = self._persist(df)
                 if level in (COUNT, BACKGROUND):
                     n_rows = df.count()  # materialize the cache once
+                    self._counted[name] = n_rows
                     if self.count_rows:
                         metric["rows"] = n_rows
                 if level == BACKGROUND:
@@ -423,11 +443,11 @@ class DedupPipeline:
         rebuilds the stage, as it would for any interrupted write.  The
         count also sizes a key stage's doc_id bloom filter (doc_id is
         unique per row, so the row count bounds every file's distinct
-        keys)."""
+        keys), and an unkeyed stage's file count."""
         key_cols = self._STAGE_KEY_COLS.get(name)
         write = functools.partial(
             _write_snapshot,
-            df,
+            df if key_cols else _sized_for(df, n_rows),
             path,
             order_by=key_cols,
             bloom_cols=key_cols,
@@ -483,6 +503,7 @@ class DedupPipeline:
         persisted is unpersisted without blocking; a successful run
         joined its writes before writing its summary."""
         self._pending_writes.clear()
+        self._counted.clear()
         try:
             yield
         except BaseException as exc:
@@ -712,6 +733,10 @@ class DedupPipeline:
         # transfer and text decode (operators/fingerprints.py) — at
         # corpus scale this is one pass over the text column instead of
         # three, and a delta run's ONLY text scan.
+        # The MinHash signature is kept only as its 8-bit sketch, the
+        # estimate prefilter's whole need (dedup.minhash_sketch): the
+        # stored row, a delta's slice of the store and the cached
+        # minimal-mode frame shrink by 128 x 7 bytes before compression
         def build_fingerprints():
             fingerprints = fused_fingerprints(
                 url_unique,
@@ -719,6 +744,13 @@ class DedupPipeline:
                 shingle_k=cfg.shingle_k,
                 seed=cfg.seed,
                 bands=cfg.bands,
+            ).select(
+                "doc_id",
+                dedup.minhash_sketch("signature").alias("sketch"),
+                "simhash",
+                "winnow",
+                "bands",
+                "text_hash",
             )
             if store is None:
                 return fingerprints
@@ -728,7 +760,7 @@ class DedupPipeline:
             )
 
         fingerprints = stage("04_fingerprints", build_fingerprints, Plan(COUNT, BACKGROUND))
-        signatures = fingerprints.select("doc_id", "signature")
+        sketches = fingerprints.select("doc_id", "sketch")
 
         if store is not None:
             store_fps = store.fingerprints
@@ -771,8 +803,8 @@ class DedupPipeline:
         # observation must record on exactly one execution of the pass
         def build_candidates():
             return inc.incremental_minhash_pairs(
-                signatures,
-                store_fps.select("doc_id", "signature"),
+                None,
+                None,
                 prune_old_by_new_keys=prune_old,
                 bands=cfg.bands,
                 max_bucket_size=cfg.max_bucket_size,
@@ -784,13 +816,13 @@ class DedupPipeline:
         def build_minhash_pairs(candidates):
             if store is None:
                 candidates, _ = dedup.lsh_candidate_pairs(
-                    signatures,
+                    None,
                     bands=cfg.bands,
                     max_bucket_size=cfg.max_bucket_size,
                     observation=lsh_observation(),
                     buckets=band_rows(fingerprints),
                 )
-                texts, sigs = url_unique, signatures
+                texts, sketched = url_unique, sketches
             else:
                 # verify inputs: the delta side unions with a store side
                 # PRUNED to candidate partners — one bounded id collect
@@ -805,13 +837,13 @@ class DedupPipeline:
                 texts = url_unique.select("doc_id", "text").unionByName(
                     inc.prune_store_by_ids(store.docs.select("doc_id", "text"), cand_ids)
                 )
-                sigs = signatures.unionByName(
-                    inc.prune_store_by_ids(store_fps.select("doc_id", "signature"), cand_ids)
+                sketched = sketches.unionByName(
+                    inc.prune_store_by_ids(store_fps.select("doc_id", "sketch"), cand_ids)
                 )
             return dedup.verify_pairs_jaccard(
                 candidates,
                 texts,
-                signatures=sigs,
+                sketches=sketched,
                 threshold=cfg.jaccard_threshold,
                 shingle_k=cfg.shingle_k,
             ).select("doc_a", "doc_b")
@@ -981,7 +1013,15 @@ class DedupPipeline:
                 changes = inc.changed(
                     view, url_unique.select("doc_id", "norm_url", "domain"), evidence
                 )
-                return inc.overlay(view, changes) if compact else changes
+                if compact:
+                    return inc.overlay(view, changes)
+                # a segment holds the delta's new docs and the old docs
+                # their evidence relabels; sized by the counts the run
+                # took (none when the caller pinned the shuffle width)
+                rows = self._delta_rows
+                if rows is not None:
+                    rows += self._counted.get("08_evidence", 0)
+                return _sized_for(changes, rows)
 
         # ---- final output: url -> cluster, a snapshot in every mode ----
         output = stage("09_assignments", build_output, Plan(SNAPSHOT, SNAPSHOT))

@@ -53,6 +53,20 @@ def test_fused_equals_standalone_kernels(spark):
         ).tolist()
         assert fused[doc_id]["bands"] == expect, doc_id
 
+    # the fused signature, sketched, equals the sketch of the standalone
+    # kernel's signature (the store keeps only the sketch)
+    def sketched(frame):
+        return {
+            r["doc_id"]: r["sketch"]
+            for r in frame.select(
+                "doc_id", dedup.minhash_sketch("signature").alias("sketch")
+            ).collect()
+        }
+
+    assert sketched(fused_fingerprints(docs)) == sketched(
+        dedup.minhash_signatures(docs)
+    )
+
 
 def test_substring_candidates_from_precomputed_winnow(spark):
     base = ("one very long boilerplate navigation footer that sites "

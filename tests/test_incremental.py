@@ -277,6 +277,33 @@ def test_store_requires_band_keys(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
+def test_store_requires_sketch(spark):
+    """A 04 snapshot holding the 64-bit signature and no sketch is
+    refused: there is no read-time conversion of an old store."""
+    import os
+
+    import pytest
+
+    from courlan_spark.sources.tables import read_snapshot, write_snapshot
+
+    full = generate_pages(spark, 200).cache()
+    workdir = tempfile.mkdtemp(prefix="inc_nosketch_")
+    try:
+        DedupPipeline(spark, workdir, DedupConfig(jaccard_threshold=0.6)).run(
+            pages_view(full)
+        )
+        # collected first: the rewrite replaces the files it reads
+        path = os.path.join(workdir, "04_fingerprints")
+        fps = read_snapshot(spark, path).withColumn(
+            "signature", F.transform("sketch", lambda x: x.cast("long"))
+        ).drop("sketch")
+        write_snapshot(spark.createDataFrame(fps.collect(), fps.schema), path)
+        with pytest.raises(ValueError, match="sketch"):
+            FingerprintStore.from_workdir(spark, workdir)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
 def test_incremental_resume_after_failure(spark):
     """Snapshot-mode incremental runs resume like the batch pipeline:
     destroy everything from the candidates stage onward, re-run with

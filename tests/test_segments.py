@@ -141,6 +141,27 @@ def test_every_snapshot_file_is_zstd(chain):
         assert found == {"ZSTD"}, workdir
 
 
+def test_delta_writes_evidence_and_segment_as_one_file(chain):
+    """A 100-page delta's 08_evidence and 09 segment are one part file
+    each, sized by the rows the run counted rather than by the shuffle
+    partitions their frames carry (a 300-page delta wrote 10 and 9)."""
+    for i, store in enumerate(chain["stores"], start=1):
+        stages = ["08_evidence"]
+        if store.segments < 2:  # not the compaction
+            stages.append("09_assignments")
+        for stage in stages:
+            files = glob.glob(os.path.join(chain["dirs"][i], stage, "part-*.parquet"))
+            assert len(files) == 1, (i, stage, files)
+
+
+def test_sized_for_splits_by_file_rows(spark, monkeypatch):
+    df = spark.range(40).repartition(8)
+    monkeypatch.setattr(P, "FILE_ROWS", 16)
+    assert P._sized_for(df, 40).rdd.getNumPartitions() == 3
+    assert P._sized_for(df, 0).rdd.getNumPartitions() == 1
+    assert P._sized_for(df, None).rdd.getNumPartitions() == 8
+
+
 def test_durable_stages_report_the_bytes_they_wrote(chain):
     """run "all" and run_incremental: each durable stage's record (a
     background write's on its <stage>_write_join record) carries the
