@@ -26,46 +26,11 @@ from numpy.lib.stride_tricks import sliding_window_view
 
 MERSENNE61 = (1 << 61) - 1
 _SHINGLE_BASE = np.uint64(1000003)
-_CHUNK = 16384
 
 DEFAULT_NUM_PERM = 128
 DEFAULT_SHINGLE_K = 9
 DEFAULT_BANDS = 32
 DEFAULT_SEED = 42
-
-
-def _permutation_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, MERSENNE61, size=num_perm, dtype=np.uint64)
-    b = rng.integers(0, MERSENNE61, size=num_perm, dtype=np.uint64)
-    return a, b
-
-
-def _mod_p_affine(a: np.ndarray, x: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Exact (a*x + b) mod (2^61-1) for a,b < p and x < 2^32, computed
-    entirely in uint64 without overflow.
-
-    Split a = a_hi*2^32 + a_lo: a_hi*x < 2^61 and multiplying by 2^32
-    mod 2^61-1 is a 61-bit rotation; a_lo*x < 2^64 folds with the
-    standard Mersenne reduction w -> (w & p) + (w >> 61).
-
-    An inexact version of this (letting a*x wrap, or keeping a small
-    enough never to wrap) makes the map near-monotone in x, so every
-    "permutation" picks the same minimum shingle and the Jaccard
-    estimate biases high — caught by tests/test_kernels.py.
-    """
-    p = np.uint64(MERSENNE61)
-    mask32 = np.uint64(0xFFFFFFFF)
-    a_hi = a >> np.uint64(32)          # < 2^29
-    a_lo = a & mask32
-    hi = a_hi * x                      # < 2^61, exact
-    # hi * 2^32 mod p == rot61(hi, 32)
-    hi = ((hi & np.uint64(0x1FFFFFFF)) << np.uint64(32)) | (hi >> np.uint64(29))
-    lo = a_lo * x                      # < 2^64, exact in uint64
-    lo = (lo & p) + (lo >> np.uint64(61))
-    s = hi + lo + b                    # < 2^63, exact
-    s = (s & p) + (s >> np.uint64(61))
-    return np.where(s >= p, s - p, s)
 
 
 def _shingle_powers(k: int) -> np.ndarray:
@@ -79,7 +44,6 @@ def _shingle_powers(k: int) -> np.ndarray:
 
 
 _POWERS_CACHE: dict[int, np.ndarray] = {}
-_PERM_CACHE: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
 
 # --- O(n) rolling-hash evaluation (round 6) -------------------------------
 #
@@ -141,27 +105,6 @@ def shingle_hashes(text: str, k: int = DEFAULT_SHINGLE_K) -> np.ndarray:
         value = (codes32.astype(np.uint64) * powers).sum() & np.uint64(0xFFFFFFFF)
         return np.array([value], dtype=np.uint32)
     return np.unique(_rolling_hashes(codes32, k))
-
-
-def minhash_signature_exact(
-    shingles: np.ndarray,
-    num_perm: int = DEFAULT_NUM_PERM,
-    seed: int = DEFAULT_SEED,
-) -> np.ndarray:
-    """Classic k-permutation MinHash (int64).  O(num_perm * n) work and
-    memory traffic per document — kept as the reference estimator, but
-    it is DRAM-bandwidth-bound at scale (the (128, n) uint64 temporary
-    matrices saturate memory before the cores do)."""
-    key = (num_perm, seed)
-    if key not in _PERM_CACHE:
-        _PERM_CACHE[key] = _permutation_params(num_perm, seed)
-    a, b = _PERM_CACHE[key]
-    sig = np.full(num_perm, np.iinfo(np.uint64).max, dtype=np.uint64)
-    for start in range(0, shingles.size, _CHUNK):
-        block = shingles[start : start + _CHUNK]
-        values = _mod_p_affine(a[:, None], block[None, :], b[:, None])
-        np.minimum(sig, values.min(axis=1), out=sig)
-    return sig.astype(np.int64)
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:

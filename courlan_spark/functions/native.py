@@ -42,10 +42,3 @@ def canonical_key_col(url: Column) -> Column:
     four known-link variants collide (urlkit.canonical_dedup_key) —
     the anti-join key for distributed known-link dedup."""
     return F.regexp_replace(F.regexp_replace(url, r"^https?://", ""), r"/+$", "")
-
-
-def md5_long_col(col: Column, salt: str = "") -> Column:
-    """Deterministic 60-bit positive hash usable identically in Spark
-    and DuckDB oracles: first 15 hex digits of md5 as a bigint."""
-    payload = F.concat(F.lit(salt), col) if salt else col
-    return F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("long")

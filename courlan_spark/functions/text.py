@@ -1,15 +1,12 @@
 """Text-analytics column functions for training-data pipelines.
 
-Token counting, quality scoring and document fingerprinting are pure
-native Column expressions (JVM-side, whole-stage codegen, and
-reproducible 1:1 in the DuckDB oracle).  Language identification is a
-character-n-gram/stopword heuristic evaluated as a vectorized UDF
-with a native stopword-scoring fallback for oracle checking.
+Token counting, quality scoring and stopword language identification
+are pure native Column expressions (JVM-side, whole-stage codegen, and
+reproducible 1:1 in the DuckDB oracle).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -93,43 +90,3 @@ def langid_best_col(text: Column) -> Column:
         ]
     )
     return F.array_max(pairs).getField("lang")
-
-
-def fingerprint64_col(text: Column) -> Column:
-    "Deterministic 64-bit content fingerprint (native xxhash64)."
-    return F.xxhash64(text)
-
-
-def make_langid_udf(ngram_n: int = 3):
-    """Vectorized character-n-gram language ID.  Profiles are built
-    from the stopword banks (public lists) at import; returns the
-    best-scoring language or 'und' when nothing matches."""
-    from pyspark.sql.functions import pandas_udf
-
-    profiles = {
-        lang: {
-            word[i : i + ngram_n]
-            for word in words
-            for i in range(max(len(word) - ngram_n + 1, 1))
-        }
-        for lang, words in STOPWORDS.items()
-    }
-
-    @pandas_udf("string")
-    def langid_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            if not isinstance(text, str) or not text:
-                out.append("und")
-                continue
-            sample = text[:2000].lower()
-            grams = {sample[i : i + ngram_n] for i in range(len(sample) - ngram_n + 1)}
-            best_lang, best_score = "und", 0
-            for lang, profile in profiles.items():
-                score = len(grams & profile)
-                if score > best_score:
-                    best_lang, best_score = lang, score
-            out.append(best_lang)
-        return pd.Series(out)
-
-    return langid_udf

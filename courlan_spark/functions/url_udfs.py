@@ -242,12 +242,6 @@ def make_normalize_udf(
     return normalize_udf.asNondeterministic()
 
 
-@pandas_udf(StringType())
-def scrub_url_udf(urls: pd.Series) -> pd.Series:
-    "Vectorized textual URL repair."
-    return urls.map(lambda u: scrub_url(u) if isinstance(u, str) else None)
-
-
 def make_extract_domain_udf(fast: bool = True, blacklist: frozenset[str] | None = None):
     "Vectorized registrable-domain extraction with a per-batch cache."
 

@@ -1,10 +1,18 @@
 """Deduplication operators: exact (hash-agg), MinHash+LSH, SimHash,
-n-gram Jaccard brute force, and cluster assembly.
+exact-text edges, n-gram Jaccard brute force, and cluster assembly.
 
 All operators are declarative DataFrame compositions: aggregations
 are partial+final hash aggregations (map-side combine for free),
 joins are equi-joins that AQE can re-plan, and the only Python
 boundaries are the numpy fingerprint kernels in functions.hashing.
+
+The MinHash LSH, SimHash and winnowing candidates (and the embedding
+buckets in operators/similarity.py) are one operation, a bucketed
+self-join over (doc_id, key) rows, and ``bucket_pairs`` is its only
+implementation.  Each candidate operator takes an optional store side
+(``old_*``): without one it pairs a whole corpus, with one it pairs a
+delta batch against the store and gives only pairs touching a new doc
+(operators/incremental.py).
 
 Scale levers (north rule, /root/repo/BASELINE.json:6,14):
 * optional key salting for the exact-dedup aggregation when the key
@@ -86,113 +94,110 @@ def minhash_signatures(
     )
 
 
-def capped_buckets(
-    exploded: DataFrame,
+def bucket_pairs(
+    rows: DataFrame,
     key_col: str,
     max_bucket_size: int | None,
-    min_bucket_size: int = 2,
-    observation=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Annotate bucket membership rows with their bucket size via a
-    window aggregate (ONE shuffle on the key — no groupBy+join pair)
-    and split into (kept, dropped).  The kept side arrives hash-
-    partitioned and sorted by the key, so a following self-join on the
-    same key reuses the exchange.  dropped carries one row per
-    oversized bucket for the no-silent-caps accounting."""
-    from pyspark.sql import Window
-
-    sized = exploded.withColumn(
-        "bucket_size", F.count(F.lit(1)).over(Window.partitionBy(key_col))
-    )
-    if observation is not None:
-        raise ValueError(
-            "capped_buckets cannot observe: the windowed plan is cloned "
-            "into both sides of a following self-join, which duplicates "
-            "the CollectMetrics node; use bucket_pair_explode instead"
-        )
-    upper = (
-        (F.col("bucket_size") <= max_bucket_size)
-        if max_bucket_size is not None
-        else F.lit(True)
-    )
-    kept = sized.where((F.col("bucket_size") >= min_bucket_size) & upper)
-    if max_bucket_size is not None:
-        dropped = (
-            sized.where(F.col("bucket_size") > max_bucket_size)
-            .groupBy(key_col)
-            .agg(F.first("bucket_size").alias("bucket_size"))
-        )
-    else:
-        dropped = sized.where(F.lit(False)).select(key_col, "bucket_size")
-    return kept, dropped
-
-
-def bucket_pair_explode(
-    exploded: DataFrame,
-    key_col: str,
-    max_bucket_size: int | None,
+    *,
+    old_rows: DataFrame | None = None,
+    prune_old_by_new_keys: bool = False,
     observation=None,
     payload_col: str | None = None,
     out_payload: tuple[str, str] = ("payload_a", "payload_b"),
 ) -> DataFrame:
-    """One-shuffle candidate generation over (doc_id[, payload], key)
-    bucket membership rows: group the members per key (bounded by
-    ``max_bucket_size``), and expand the i<j pairs with native array
-    expressions — the whole candidate stage is a single hash
-    aggregation, where the window+self-join formulation costs a
-    shuffle+sort plus a sort-merge join over the same data.
+    """The engine's bucketed self-join: (doc_a, doc_b[, payloads]) pairs
+    of docs sharing a key, over (doc_id[, payload], key) membership rows,
+    with doc_a < doc_b.  One shuffle: the members are grouped per key
+    (bounded by ``max_bucket_size``) and the pairs expanded with native
+    array expressions, where a window+self-join costs a shuffle+sort
+    plus a sort-merge join over the same data.
 
-    The sorted member array makes doc_a < doc_b by construction.
+    ``old_rows`` (optional) is the store side: ``rows`` are then a
+    delta's members, and only pairs with at least one new side come
+    out — new x new plus new x old, never old x old (the base run owns
+    those).  The cap counts old+new members, so a pair with a new side
+    comes out exactly when a run over the union gives it.  Buckets
+    without a new member are pruned on the membership rows by a
+    windowed new-member count sharing the exchange, so the store's
+    buckets never materialize as arrays unless a new doc landed in
+    them.  Every store-side term (union, new count, ``olds`` list,
+    new x old expansion) exists only when ``old_rows`` is passed: a
+    call without it, uncapped, is one hash aggregation with no window.
+
+    ``prune_old_by_new_keys`` (guide §3.2, big-side pre-filter): drop
+    store rows whose key no delta row carries with a BROADCAST
+    semi-join BEFORE the exchange.  Keys are 61-bit hashes, so a store
+    row survives essentially only when it truly shares a bucket with
+    the delta, and the exchange shrinks from O(store) to O(delta + true
+    partners).  Pair output is IDENTICAL: surviving buckets keep every
+    old member (the semi-join filters by key, not row), so the old+new
+    cap counts are unchanged; only the drop ACCOUNTING stops counting
+    over-cap buckets no delta row touches (they could never give a
+    pair).  Enable it only when the delta's distinct keys fit a
+    broadcast — the pipeline gates it on counted key totals; past that
+    bound one exchange of the store rows beats a shuffled semi-join
+    plus that same exchange.
+
+    Memory bound: with ``max_bucket_size`` set, oversized buckets are
+    pruned on the membership ROWS by a windowed count over the key,
+    which shares the aggregation's exchange, BEFORE the collect_list,
+    so a hub bucket never materializes as an in-memory array (the
+    window sort is spillable; collect_list is not).
+
     ``observation`` (optional pyspark Observation) records
-    dropped-bucket accounting on the pass itself — no count() job, and
-    the node executes exactly once (attaching metrics below a
-    self-join would clone the CollectMetrics node and break
-    Observation.get).  Callers passing an observation must act on the
-    returned pairs exactly once.
-
-    Memory bound: when ``max_bucket_size`` is set, oversized buckets
-    are pruned on the membership ROWS — a windowed count over the
-    bucket key, which shares the aggregation's exchange — BEFORE the
-    collect_list, so a hub bucket (millions of members under one band
-    key) never materializes as an in-memory array on any executor.
-    The window sort is spillable; collect_list is not.  Accounting
-    therefore also rides the membership rows (dropped_rows = member
-    rows in oversized buckets; dropped_buckets via each bucket's
-    row_number()==1 representative).
+    dropped_buckets, dropped_rows (member rows in oversized buckets) and
+    buckets (those with a new member: every bucket without a store
+    side) on the pass itself — no count() job, and the node executes
+    exactly once (metrics below a self-join would clone the
+    CollectMetrics node and break Observation.get).  Callers passing an
+    observation must act on the returned pairs exactly once.
     """
+    from pyspark.sql import Window
+
     if payload_col is None:
         member = F.col("doc_id")
     else:
         member = F.struct(
             F.col("doc_id").alias("id"), F.col(payload_col).alias("pl")
         )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        over = F.col("_bsz") > max_bucket_size
-        sized = exploded.withColumn(
-            "_bsz", F.count(F.lit(1)).over(Window.partitionBy(key_col))
-        ).withColumn(
-            "_brn",
-            F.row_number().over(Window.partitionBy(key_col).orderBy("doc_id")),
+    win = Window.partitionBy(key_col)
+    # "news" holds the new members: every member without a store side
+    if old_rows is None:
+        lists = [F.array_sort(F.collect_list(member)).alias("news")]
+        active = F.lit(True)
+    else:
+        if prune_old_by_new_keys:
+            new_keys = rows.select(key_col).distinct()
+            old_rows = old_rows.join(F.broadcast(new_keys), key_col, "left_semi")
+        cols = ["doc_id", key_col] + ([payload_col] if payload_col else [])
+        rows = rows.select(*cols, F.lit(True).alias("_new")).unionByName(
+            old_rows.select(*cols, F.lit(False).alias("_new"))
+        ).withColumn("_nnew", F.sum(F.col("_new").cast("long")).over(win))
+        lists = [
+            F.array_sort(F.collect_list(F.when(F.col("_new"), member))).alias("news"),
+            F.collect_list(F.when(~F.col("_new"), member)).alias("olds"),
+        ]
+        active = F.col("_nnew") >= 1
+    windowed = old_rows is not None or max_bucket_size is not None
+    if windowed:
+        rows = rows.withColumn("_bsz", F.count(F.lit(1)).over(win))
+        over = (
+            (F.col("_bsz") > max_bucket_size)
+            if max_bucket_size is not None
+            else F.lit(False)
         )
         if observation is not None:
-            first = F.col("_brn") == 1
-            sized = sized.observe(
+            rows = rows.withColumn(
+                "_first", F.row_number().over(win.orderBy("doc_id")) == 1
+            ).observe(
                 observation,
-                F.sum((over & first).cast("long")).alias("dropped_buckets"),
+                F.sum((over & F.col("_first")).cast("long")).alias("dropped_buckets"),
                 F.sum(over.cast("long")).alias("dropped_rows"),
-                F.sum(first.cast("long")).alias("buckets"),
+                F.sum((F.col("_first") & active).cast("long")).alias("buckets"),
             )
-        bounded = sized.where((F.col("_bsz") >= 2) & ~over)
-        grouped = bounded.groupBy(key_col).agg(
-            F.array_sort(F.collect_list(member)).alias("ids")
-        )
-        kept = grouped
-    else:
-        grouped = exploded.groupBy(key_col).agg(
-            F.array_sort(F.collect_list(member)).alias("ids")
-        )
+        rows = rows.where((F.col("_bsz") >= 2) & active & ~over)
+    grouped = rows.groupBy(key_col).agg(*lists)
+    if not windowed:
         if observation is not None:
             grouped = grouped.observe(
                 observation,
@@ -200,31 +205,46 @@ def bucket_pair_explode(
                 F.sum(F.lit(0).cast("long")).alias("dropped_rows"),
                 F.count(F.lit(1)).alias("buckets"),
             )
-        kept = grouped.where(F.size("ids") >= 2)
-    pair_expr = F.explode(
-        F.flatten(
-            F.transform(
-                "ids",
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
+        grouped = grouped.where(F.size("news") >= 2)
+    # new x new: i<j over the sorted array, so a <= b by construction
+    expanded = F.flatten(
+        F.transform(
+            "news",
+            lambda x, i: F.transform(
+                F.slice(F.col("news"), i + F.lit(2), F.size(F.col("news"))),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
         )
-    ).alias("p")
-    pairs = kept.select(pair_expr)
-    if payload_col is None:
-        # strict < also drops self-pairs from a doc landing twice in
-        # one bucket (possible under key collisions across bands)
-        return pairs.where(F.col("p.a") < F.col("p.b")).select(
-            F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
-        )
-    return pairs.where(F.col("p.a.id") < F.col("p.b.id")).select(
-        F.col("p.a.id").alias("doc_a"),
-        F.col("p.b.id").alias("doc_b"),
-        F.col("p.a.pl").alias(out_payload[0]),
-        F.col("p.b.pl").alias(out_payload[1]),
     )
+    if old_rows is not None:
+        expanded = F.concat(
+            expanded,
+            F.flatten(
+                F.transform(
+                    "news",
+                    lambda x: F.transform(
+                        "olds", lambda y: F.struct(x.alias("a"), y.alias("b"))
+                    ),
+                )
+            ),
+        )
+    pairs = grouped.select(F.explode(expanded).alias("p"))
+    a, b = F.col("p.a"), F.col("p.b")
+    a_id, b_id = (a, b) if payload_col is None else (a["id"], b["id"])
+    # only a new x old pair can come out reversed
+    flip = (a_id > b_id) if old_rows is not None else F.lit(False)
+    out = [
+        F.when(flip, b_id).otherwise(a_id).alias("doc_a"),
+        F.when(flip, a_id).otherwise(b_id).alias("doc_b"),
+    ]
+    if payload_col is not None:
+        out += [
+            F.when(flip, b["pl"]).otherwise(a["pl"]).alias(out_payload[0]),
+            F.when(flip, a["pl"]).otherwise(b["pl"]).alias(out_payload[1]),
+        ]
+    # != also drops self-pairs from a doc landing twice in one bucket
+    # (possible under key collisions across bands)
+    return pairs.where(a_id != b_id).select(*out)
 
 
 def attach_pair_payloads(
@@ -263,9 +283,9 @@ def attach_pair_payloads(
 
 def band_buckets(signatures: DataFrame, bands: int = hashing.DEFAULT_BANDS) -> DataFrame:
     """(doc_id, band_key) LSH band bucket membership rows.  The single
-    definition of the band key — the batch self-join and the incremental
-    new-vs-store path both derive keys here, so two
-    signatures always meet in the same bucket regardless of path."""
+    definition of the band key — a full run and a delta's store side
+    both derive keys here, so two signatures always meet in the same
+    bucket regardless of mode."""
     band_udf = hashing.make_band_hash_udf(bands=bands)
     return signatures.select(
         "doc_id", F.explode(band_udf("signature")).alias("band_key")
@@ -294,6 +314,9 @@ def lsh_candidate_pairs(
     max_bucket_size: int | None = 1000,
     observation=None,
     buckets: DataFrame | None = None,
+    old_signatures: DataFrame | None = None,
+    old_buckets: DataFrame | None = None,
+    prune_old_by_new_keys: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Banded LSH: signature -> band bucket keys -> bucket self-join.
 
@@ -305,20 +328,29 @@ def lsh_candidate_pairs(
     ``buckets`` (optional): precomputed (doc_id, band_key) membership
     rows — e.g. exploded from the fused fingerprint frame's stored
     ``bands`` column, which skips the band-hash Python pass entirely;
-    ``signatures`` may then be None.
+    ``signatures`` may then be None.  ``old_signatures`` /
+    ``old_buckets`` are a store side the same way: only pairs with at
+    least one new side come out (``bucket_pairs``).
     """
     if buckets is None:
         buckets = band_buckets(signatures, bands)
-    pairs = bucket_pair_explode(
-        buckets, "band_key", max_bucket_size, observation=observation
+    if old_buckets is None and old_signatures is not None:
+        old_buckets = band_buckets(old_signatures, bands)
+    pairs = bucket_pairs(
+        buckets,
+        "band_key",
+        max_bucket_size,
+        old_rows=old_buckets,
+        prune_old_by_new_keys=prune_old_by_new_keys,
+        observation=observation,
     ).distinct()
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band_key").agg(F.count("*").alias("bucket_size"))
-        dropped = sizes.where(F.col("bucket_size") > max_bucket_size)
-    else:
-        dropped = buckets.groupBy("band_key").agg(
-            F.count("*").alias("bucket_size")
-        ).where(F.lit(False))
+    members = buckets if old_buckets is None else buckets.unionByName(old_buckets)
+    sizes = members.groupBy("band_key").agg(F.count("*").alias("bucket_size"))
+    dropped = sizes.where(
+        (F.col("bucket_size") > max_bucket_size)
+        if max_bucket_size is not None
+        else F.lit(False)
+    )
     return pairs, dropped
 
 
@@ -407,9 +439,9 @@ def simhash_block_keys(
 ) -> DataFrame:
     """(doc_id, simhash, block_key) — one row per Manku block-subset
     key (C(n_blocks, n_blocks - max_hamming) keys per doc), all native
-    bit/hash expressions.  Shared by the batch self-join path and the
-    incremental new-vs-store path (operators/incremental.py), which
-    must derive IDENTICAL keys for both sides to meet in a bucket."""
+    bit/hash expressions.  The single definition of the block key: a
+    delta and its store side derive IDENTICAL keys here, so both sides
+    meet in a bucket."""
     from itertools import combinations
 
     if n_blocks <= max_hamming:
@@ -438,6 +470,8 @@ def simhash_candidate_pairs(
     max_hamming: int = 3,
     max_bucket_size: int | None = 1000,
     n_blocks: int = 6,
+    old_fingerprints: DataFrame | None = None,
+    prune_old_by_new_keys: bool = False,
 ) -> DataFrame:
     """Fuzzy-duplicate candidates within `max_hamming` bits.
 
@@ -450,12 +484,19 @@ def simhash_candidate_pairs(
     bucket occupancy stays O(true duplicates) as the corpus grows, so
     the self-join does not go quadratic at web scale.  Pairs are
     confirmed with an exact popcount on the XOR (native bit ops).
+    ``old_fingerprints`` (optional) is a store side of (doc_id,
+    simhash) rows: only pairs with at least one new side come out.
     """
-    fp = simhash_block_keys(fingerprints, max_hamming, n_blocks)
-    pairs = bucket_pair_explode(
-        fp,
+    pairs = bucket_pairs(
+        simhash_block_keys(fingerprints, max_hamming, n_blocks),
         "block_key",
         max_bucket_size,
+        old_rows=(
+            None
+            if old_fingerprints is None
+            else simhash_block_keys(old_fingerprints, max_hamming, n_blocks)
+        ),
+        prune_old_by_new_keys=prune_old_by_new_keys,
         payload_col="simhash",
         out_payload=("fp_a", "fp_b"),
     )
@@ -464,6 +505,36 @@ def simhash_candidate_pairs(
         .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
+    )
+
+
+def exact_text_pairs(
+    hashes: DataFrame, old_hashes: DataFrame | None = None
+) -> DataFrame:
+    """Exact-text evidence edges over (doc_id, text_hash) rows: every
+    doc pairs to its hash group's representative, the group's min
+    doc_id.  ``old_hashes`` (optional) is a store side: a hash the
+    store knows takes the store's min as representative, and only the
+    new docs get edges.  That edge set differs from one run over the
+    union only in shape, never in connectivity: old docs sharing the
+    hash are already clustered by the base run, so linking new docs to
+    ANY old member yields the same transitive closure.  The store side
+    is a plain aggregation over stored hashes — no old text is read."""
+    reps = hashes.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
+    if old_hashes is not None:
+        old_reps = old_hashes.groupBy("text_hash").agg(
+            F.min("doc_id").alias("old_rep")
+        )
+        reps = reps.join(old_reps, "text_hash", "left").select(
+            "text_hash", F.coalesce("old_rep", "rep").alias("rep")
+        )
+    return (
+        hashes.join(reps, "text_hash")
+        .where(F.col("doc_id") != F.col("rep"))
+        .select(
+            F.least("rep", "doc_id").alias("doc_a"),
+            F.greatest("rep", "doc_id").alias("doc_b"),
+        )
     )
 
 

@@ -5,9 +5,11 @@ pipeline's persisted stage-04 frame (doc_id, sketch, bands, simhash,
 winnow, text_hash — operators/fingerprints.py, with the MinHash
 signature kept only as its 8-bit sketch) doubles as that store:
 a new batch is fingerprinted ONCE (the only text-column Arrow pass of
-the whole incremental run touches only the delta), its bucket keys are
-joined against the store's, and only pairs with at least one NEW side
-are generated, verified, and folded into the existing cluster table.
+the whole incremental run touches only the delta), its bucket keys
+meet the store's in the same candidate operators a full run uses —
+each takes the store's stored keys as its optional store side
+(dedup.bucket_pairs) — and only pairs with at least one NEW side are
+generated, verified, and folded into the existing cluster table.
 
 Candidate completeness equals the full-run path by construction: both
 sides derive bucket keys through the same single definition
@@ -18,12 +20,10 @@ base-run + delta-run == one full run, bit-for-bit on (doc_id,
 cluster_id), including cross-batch duplicate groups and cluster merges
 caused by a new doc bridging two old clusters.
 
-Scale shape: the store side ships only (doc_id, key[, payload]) rows
-— never text — through ONE exchange per kernel; buckets containing no
-new member (the overwhelming majority in a small-delta run) are pruned
-by a windowed new-count sharing that exchange, BEFORE any collect;
-pair expansion is new x new plus new x old, never old x old.  Verify
-stages attach pair payloads by exploding the (small) pair set and
+This module holds what only a delta run needs: the store-side prune
+of the verify inputs (collect_pair_ids / prune_store_by_ids) and the
+cluster merge (changed / overlay / merge_assignments).  Verify stages
+attach pair payloads by exploding the (small) pair set and
 broadcast-joining it against the corpus union, so only matched store
 rows ever shuffle — in the same scan, with no separate prune pass.
 """
@@ -33,238 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import hashing
 from .cc import connected_components_bounded
-from .dedup import band_buckets, simhash_block_keys
-
-
-def incremental_bucket_pairs(
-    new_rows: DataFrame,
-    old_rows: DataFrame,
-    key_col: str,
-    max_bucket_size: int | None,
-    observation=None,
-    payload_col: str | None = None,
-    out_payload: tuple[str, str] = ("payload_a", "payload_b"),
-    prune_old_by_new_keys: bool = False,
-) -> DataFrame:
-    """Candidate pairs touching at least one NEW doc, in one shuffle.
-
-    Inputs are (doc_id[, payload], key_col) bucket-membership rows for
-    the delta and the store.  Semantics match bucket_pair_explode run
-    over the union — same bucket-size cap counted over old+new members,
-    same dropped accounting riding the pass via ``observation`` — minus
-    every pair whose sides are both old (the base run already owns
-    those).  Old-only buckets are pruned on membership rows by a
-    windowed count of new members (shares the exchange), so the store's
-    buckets never materialize as arrays unless a new doc landed in
-    them.
-
-    ``prune_old_by_new_keys`` (guide §3.2, big-side pre-filter): drop
-    store rows whose key no delta row carries with a BROADCAST
-    semi-join BEFORE the exchange, instead of only after it via the
-    windowed new-member count.  Keys are 61-bit hashes, so a store row
-    survives essentially only when it truly shares a bucket with the
-    delta — the exchange shrinks from O(store) to O(delta + true
-    partners) membership rows.  Pair output is IDENTICAL: surviving
-    buckets keep every old member (the semi-join filters by key, not
-    row), so the old+new cap counts are unchanged; the only observable
-    difference is the drop ACCOUNTING, which stops counting over-cap
-    buckets no delta row touches (they could never produce a pair in
-    this pass, so nothing is silently lost).  Callers must enable this
-    only when the delta's distinct keys comfortably fit a broadcast —
-    the pipeline gates it on the counted delta size; at a delta scale
-    past that bound the union shape below is the right one (one
-    exchange of the store rows beats a shuffled semi-join PLUS that
-    same exchange).
-    """
-    from pyspark.sql import Window
-
-    if payload_col is None:
-        member = F.col("doc_id")
-    else:
-        member = F.struct(
-            F.col("doc_id").alias("id"), F.col(payload_col).alias("pl")
-        )
-    if prune_old_by_new_keys:
-        new_keys = new_rows.select(key_col).distinct()
-        old_rows = old_rows.join(F.broadcast(new_keys), key_col, "left_semi")
-    cols = ["doc_id", key_col] + ([payload_col] if payload_col else [])
-    tagged = new_rows.select(*cols, F.lit(True).alias("_new")).unionByName(
-        old_rows.select(*cols, F.lit(False).alias("_new"))
-    )
-
-    win = Window.partitionBy(key_col)
-    sized = tagged.withColumn(
-        "_bsz", F.count(F.lit(1)).over(win)
-    ).withColumn("_nnew", F.sum(F.col("_new").cast("long")).over(win))
-    over = (
-        (F.col("_bsz") > max_bucket_size)
-        if max_bucket_size is not None
-        else F.lit(False)
-    )
-    if observation is not None:
-        first = (
-            F.row_number().over(win.orderBy("doc_id")) == 1
-        )
-        sized = sized.withColumn("_first", first).observe(
-            observation,
-            F.sum((over & F.col("_first")).cast("long")).alias("dropped_buckets"),
-            F.sum(over.cast("long")).alias("dropped_rows"),
-            F.sum(
-                (F.col("_first") & (F.col("_nnew") >= 1)).cast("long")
-            ).alias("active_buckets"),
-        )
-    bounded = sized.where(
-        (F.col("_bsz") >= 2) & (F.col("_nnew") >= 1) & ~over
-    )
-    grouped = bounded.groupBy(key_col).agg(
-        F.array_sort(
-            F.collect_list(F.when(F.col("_new"), member))
-        ).alias("news"),
-        F.collect_list(F.when(~F.col("_new"), member)).alias("olds"),
-    )
-    # new x new (i<j over the sorted array: a < b by construction)
-    nn = F.flatten(
-        F.transform(
-            "news",
-            lambda x, i: F.transform(
-                F.slice(F.col("news"), i + F.lit(2), F.size(F.col("news"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    # new x old (normalized below so doc_a < doc_b holds everywhere)
-    no = F.flatten(
-        F.transform(
-            "news",
-            lambda x: F.transform(
-                "olds", lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    pairs = grouped.select(F.explode(F.concat(nn, no)).alias("p"))
-    if payload_col is None:
-        a, b = F.col("p.a"), F.col("p.b")
-        return pairs.where(a != b).select(
-            F.least(a, b).alias("doc_a"), F.greatest(a, b).alias("doc_b")
-        )
-    a, b = F.col("p.a"), F.col("p.b")
-    flip = a["id"] > b["id"]
-    return pairs.where(a["id"] != b["id"]).select(
-        F.when(flip, b["id"]).otherwise(a["id"]).alias("doc_a"),
-        F.when(flip, a["id"]).otherwise(b["id"]).alias("doc_b"),
-        F.when(flip, b["pl"]).otherwise(a["pl"]).alias(out_payload[0]),
-        F.when(flip, a["pl"]).otherwise(b["pl"]).alias(out_payload[1]),
-    )
-
-
-def incremental_minhash_pairs(
-    new_signatures: DataFrame | None,
-    old_signatures: DataFrame | None,
-    bands: int = hashing.DEFAULT_BANDS,
-    max_bucket_size: int | None = 1000,
-    observation=None,
-    new_buckets: DataFrame | None = None,
-    old_buckets: DataFrame | None = None,
-    prune_old_by_new_keys: bool = False,
-) -> DataFrame:
-    """Distinct LSH candidate (doc_a, doc_b) with >= one new side.
-
-    Pass ``new_buckets``/``old_buckets`` (doc_id, band_key rows, e.g.
-    exploded from the fused frame's stored ``bands`` column) to skip
-    the band-hash Python pass — essential on the store side, where the
-    signatures may be the whole corpus.  A side whose buckets are
-    passed needs no signatures (None)."""
-    return incremental_bucket_pairs(
-        new_buckets if new_buckets is not None else band_buckets(new_signatures, bands),
-        old_buckets if old_buckets is not None else band_buckets(old_signatures, bands),
-        "band_key",
-        max_bucket_size,
-        observation=observation,
-        prune_old_by_new_keys=prune_old_by_new_keys,
-    ).distinct()
-
-
-def incremental_simhash_pairs(
-    new_fps: DataFrame,
-    old_fps: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 1000,
-    n_blocks: int = 6,
-    prune_old_by_new_keys: bool = False,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) within ``max_hamming`` bits, >= one new
-    side.  Inputs are (doc_id, simhash) frames (delta and store)."""
-    pairs = incremental_bucket_pairs(
-        simhash_block_keys(new_fps, max_hamming, n_blocks),
-        simhash_block_keys(old_fps, max_hamming, n_blocks),
-        "block_key",
-        max_bucket_size,
-        payload_col="simhash",
-        out_payload=("fp_a", "fp_b"),
-        prune_old_by_new_keys=prune_old_by_new_keys,
-    )
-    return (
-        pairs.distinct()
-        .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-def incremental_substring_candidates(
-    new_winnow: DataFrame,
-    old_winnow: DataFrame,
-    max_bucket_size: int | None = 128,
-    min_shared_fps: int = 2,
-    prune_old_by_new_keys: bool = False,
-) -> DataFrame:
-    """Winnowing-fingerprint candidates with >= one new side.  Inputs
-    are (doc_id, winnow array<long>) — the stored column; no text is
-    touched here."""
-    new_fps = new_winnow.select("doc_id", F.explode("winnow").alias("fp"))
-    old_fps = old_winnow.select("doc_id", F.explode("winnow").alias("fp"))
-    return (
-        incremental_bucket_pairs(new_fps, old_fps, "fp", max_bucket_size,
-                                 prune_old_by_new_keys=prune_old_by_new_keys)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared_fps)
-        .select("doc_a", "doc_b")
-    )
-
-
-def incremental_text_pairs(
-    new_hashes: DataFrame, old_hashes: DataFrame
-) -> DataFrame:
-    """Exact-text evidence edges for new docs: every new doc pairs to
-    its hash group's representative (the store's min doc_id when the
-    hash is known, else the delta group's min).  Inputs are (doc_id,
-    text_hash).  The store side is a plain aggregation over stored
-    hashes — the old text column is never read.  The edge set differs
-    from the full run's (rep = global min) only in shape, never in
-    connectivity: old docs sharing the hash are already clustered by
-    the base run, so linking new docs to ANY old member yields the same
-    transitive closure."""
-    old_reps = old_hashes.groupBy("text_hash").agg(
-        F.min("doc_id").alias("old_rep")
-    )
-    new_min = new_hashes.groupBy("text_hash").agg(
-        F.min("doc_id").alias("new_min")
-    )
-    reps = new_min.join(old_reps, "text_hash", "left").select(
-        "text_hash", F.coalesce("old_rep", "new_min").alias("rep")
-    )
-    edges = (
-        new_hashes.join(reps, "text_hash")
-        .where(F.col("doc_id") != F.col("rep"))
-        .select(
-            F.least("rep", "doc_id").alias("doc_a"),
-            F.greatest("rep", "doc_id").alias("doc_b"),
-        )
-    )
-    return edges
 
 
 def prune_store_by_pair_ids(

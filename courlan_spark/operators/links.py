@@ -22,27 +22,6 @@ from ..functions.native import (
     is_navigation_col,
     is_not_crawlable_col,
 )
-from ..functions.url_udfs import make_extract_links_udf
-
-
-def extract_page_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    language: str | None = None,
-    strict: bool = False,
-    with_nav: bool = True,
-    external: bool = False,
-) -> DataFrame:
-    """One row per (page_url, link), links already check_url-validated
-    inside the vectorized UDF."""
-    links_udf = make_extract_links_udf(
-        external_bool=external, language=language, strict=strict, with_nav=with_nav
-    )
-    return pages.select(
-        F.col(url_col).alias("page_url"),
-        F.explode(links_udf(F.col(html_col), F.col(url_col))).alias("link"),
-    )
 
 
 def crawlable_links(

@@ -255,8 +255,7 @@ def incremental_embedding_neardup(
     ``old_buckets``/``new_buckets`` ((doc_id, bucket) rows, e.g.
     persisted at store-build time) to skip the hyperplane UDF pass —
     on the store side that pass would cover the whole corpus."""
-    from .dedup import attach_pair_payloads
-    from .incremental import incremental_bucket_pairs
+    from .dedup import attach_pair_payloads, bucket_pairs
 
     bucket_udf = make_hyperplane_bucket_udf(dim, planes, tables, seed)
 
@@ -266,11 +265,11 @@ def incremental_embedding_neardup(
             F.explode(bucket_udf(F.col(vec_col))).alias("bucket"),
         )
 
-    pairs = incremental_bucket_pairs(
+    pairs = bucket_pairs(
         new_buckets if new_buckets is not None else rows(new_vectors),
-        old_buckets if old_buckets is not None else rows(old_vectors),
         "bucket",
         max_bucket_size,
+        old_rows=old_buckets if old_buckets is not None else rows(old_vectors),
     ).distinct()
     union_vecs = new_vectors.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")
@@ -330,7 +329,7 @@ def embedding_neardup_pairs(
 
     * **ids-only + attach** (the default, and always the choice when
       the payload estimate exceeds _INLINE_PAYLOAD_BYTES or no hint is
-      given): the bucket self-join ships ONLY (vec_id, bucket) rows —
+      given): the bucket pairing ships ONLY (id, bucket) rows —
       the embedding array never rides the bucket exchange (the round-4
       shape carried the full vector on BOTH sides of the self-join, so
       each vector crossed the wire ~2x per LSH table it landed in —
@@ -340,14 +339,14 @@ def embedding_neardup_pairs(
       the embedding column on this path.
 
     * **inline payload** (small corpora): vectors ride the single
-      bucket exchange (bucket_pair_explode with payload, cap pruned on
+      bucket exchange (bucket_pairs with payload, cap pruned on
       membership rows before any collect), skipping the attach join's
       explode + join + two aggregation waves entirely — measured 2.4x
       at sandbox scale where the whole corpus is a few MB.  Output is
       row-identical: same candidate pair set, same vectors, same
       cosine expression (pinned by tests/test_similarity.py).
     """
-    from .dedup import attach_pair_payloads, bucket_pair_explode, capped_buckets
+    from .dedup import attach_pair_payloads, bucket_pairs
 
     if inline_payload is None:
         inline_payload = (
@@ -377,7 +376,7 @@ def embedding_neardup_pairs(
             F.col(vec_col).alias("vec"),
             F.explode(bucket_udf(F.col(vec_col))).alias("bucket"),
         )
-        pairs = bucket_pair_explode(
+        pairs = bucket_pairs(
             bucketed,
             "bucket",
             max_bucket_size,
@@ -387,18 +386,10 @@ def embedding_neardup_pairs(
         return finish(pairs)
 
     bucketed = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(id_col).alias("doc_id"),
         F.explode(bucket_udf(F.col(vec_col))).alias("bucket"),
     )
-    bucketed, _ = capped_buckets(bucketed, "bucket", max_bucket_size)
-    left = bucketed.select("bucket", F.col("vec_id").alias("doc_a"))
-    right = bucketed.select("bucket", F.col("vec_id").alias("doc_b"))
-    pairs = (
-        left.join(right, "bucket")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    pairs = bucket_pairs(bucketed, "bucket", max_bucket_size).distinct()
     vecs = vectors.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")
     )

@@ -208,6 +208,8 @@ def substring_candidate_pairs(
     max_bucket_size: int | None = 128,
     min_shared_fps: int = 2,
     winnow: DataFrame | None = None,
+    old_winnow: DataFrame | None = None,
+    prune_old_by_new_keys: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b) sharing >= min_shared_fps winnowed fingerprints.
 
@@ -224,8 +226,10 @@ def substring_candidate_pairs(
     fingerprints — e.g. from operators.fingerprints.fused_fingerprints,
     which shares one text scan across all three fingerprint kernels;
     when given, the text column is never touched here.
+    ``old_winnow`` (optional) is a store side of the same shape: only
+    pairs with at least one new side come out (dedup.bucket_pairs).
     """
-    from .dedup import bucket_pair_explode
+    from . import dedup
 
     if winnow is not None:
         fps = winnow.select(
@@ -241,8 +245,19 @@ def substring_candidate_pairs(
         fps = source.select(
             F.col(id_col).alias("doc_id"), F.explode(udf(F.col(text_col))).alias("fp")
         )
+    old_fps = None
+    if old_winnow is not None:
+        old_fps = old_winnow.select(
+            F.col(id_col).alias("doc_id"), F.explode("winnow").alias("fp")
+        )
     joined = (
-        bucket_pair_explode(fps, "fp", max_bucket_size)
+        dedup.bucket_pairs(
+            fps,
+            "fp",
+            max_bucket_size,
+            old_rows=old_fps,
+            prune_old_by_new_keys=prune_old_by_new_keys,
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared_fps"))
     )

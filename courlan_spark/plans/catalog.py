@@ -1264,7 +1264,7 @@ def q_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     delta_sigs = dedup.minhash_signatures(delta).persist()
-    cands = inc.incremental_minhash_pairs(delta_sigs, base_sigs)
+    cands, _ = dedup.lsh_candidate_pairs(delta_sigs, old_signatures=base_sigs)
     verified = dedup.verify_pairs_jaccard(
         cands,
         docs.select("doc_id", "text"),

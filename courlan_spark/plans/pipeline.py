@@ -30,7 +30,7 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -71,7 +71,6 @@ class DedupConfig:
     # snapshot to parquet — fewer driver barriers, better scaling when
     # stage outputs are small relative to job overhead.
     snapshot_mode: str = "all"
-    extra: dict = field(default_factory=dict)
 
 
 from ..sources.tables import has_snapshot as _has_snapshot
@@ -381,11 +380,7 @@ class DedupPipeline:
         silently wrong merged clusters — the band/block keys simply
         would not line up)."""
         with open(os.path.join(self.workdir, "config.json"), "w") as fh:
-            json.dump(
-                {k: v for k, v in vars(self.config).items()
-                 if not isinstance(v, dict)},
-                fh,
-            )
+            json.dump(vars(self.config), fh)
 
     # the key column the store stages are scanned by.  A later
     # incremental run scans these snapshots selectively, so they are
@@ -663,13 +658,21 @@ class DedupPipeline:
         self, pages: DataFrame, store: FingerprintStore | None, resume: bool
     ) -> dict:
         """The stage graph of both modes.  Without a store, ``pages``
-        is the whole corpus; with one, ``pages`` is a delta batch and
-        every leg that differs joins the store with its incremental
-        operator.  A full run is NOT run as a delta against an empty
-        store: Spark's empty-relation propagation does not remove the
-        windowed bucket pairing, the pair-id collects or the cluster
-        merge, and that shape measured 2.4x the full operators' wall on
-        a 4,000-page corpus (4-core host, local[4])."""
+        is the whole corpus; with one, ``pages`` is a delta batch whose
+        02 drops the norm_urls the store already holds.  The 03/05/06/07
+        evidence legs call the same operator in both modes, handing it
+        the store's slice of the 04 frame as its store side (None in a
+        full run).  Only three things still differ between the modes'
+        evidence paths: a delta persists its LSH candidates as
+        05_candidates, prunes the store side of its verify inputs to
+        the candidates' ids, and folds its evidence into the store's
+        cluster table (08_evidence / 09 segment) where a full run
+        clusters from scratch (08_clusters).  A full run is NOT run as
+        a delta against an empty store: Spark's empty-relation
+        propagation does not remove the windowed bucket pairing, the
+        pair-id collects or the cluster merge, and that shape measured
+        2.4x the full operators' wall on a 4,000-page corpus (4-core
+        host, local[4])."""
         cfg = self.config
         self._persist_config()
 
@@ -762,8 +765,11 @@ class DedupPipeline:
         fingerprints = stage("04_fingerprints", build_fingerprints, Plan(COUNT, BACKGROUND))
         sketches = fingerprints.select("doc_id", "sketch")
 
+        # each evidence leg's one operator takes the store's slice of
+        # the 04 frame as its optional store side: None in a full run
+        store_fps = None if store is None else store.fingerprints
+        prune_old = prune_winnow = False
         if store is not None:
-            store_fps = store.fingerprints
             # guide §3.2 pre-filter gate, per leg: the delta's distinct
             # bucket keys must comfortably fit a broadcast before the
             # store side may be semi-join-pruned ahead of its exchange.
@@ -786,42 +792,35 @@ class DedupPipeline:
             )
             prune_winnow = winnow_keys is not None and winnow_keys <= BROADCAST_KEY_BUDGET
 
+        def store_side(*cols):
+            return None if store_fps is None else store_fps.select(*cols)
+
         def band_rows(df):
             # STORED band keys: no band-hash Python pass, and the store
             # never pays one however large it has grown
+            if df is None:
+                return None
             return df.select("doc_id", F.explode("bands").alias("band_key"))
 
-        def lsh_observation():
+        def build_candidates():
             # dropped-bucket accounting rides observe() on the pass
             # that computes the buckets anyway — zero extra jobs
             obs = Observation("05_lsh_buckets")
             self._observations["lsh_buckets"] = obs
-            return obs
-
-        # a delta's LSH candidates persist: the verify stage walks them
-        # twice (estimate prefilter + payload attach), and the
-        # observation must record on exactly one execution of the pass
-        def build_candidates():
-            return inc.incremental_minhash_pairs(
+            candidates, _ = dedup.lsh_candidate_pairs(
                 None,
-                None,
-                prune_old_by_new_keys=prune_old,
                 bands=cfg.bands,
                 max_bucket_size=cfg.max_bucket_size,
-                observation=lsh_observation(),
-                new_buckets=band_rows(fingerprints),
+                observation=obs,
+                buckets=band_rows(fingerprints),
                 old_buckets=band_rows(store_fps),
+                prune_old_by_new_keys=prune_old,
             )
+            return candidates
 
         def build_minhash_pairs(candidates):
             if store is None:
-                candidates, _ = dedup.lsh_candidate_pairs(
-                    None,
-                    bands=cfg.bands,
-                    max_bucket_size=cfg.max_bucket_size,
-                    observation=lsh_observation(),
-                    buckets=band_rows(fingerprints),
-                )
+                candidates = build_candidates()
                 texts, sketched = url_unique, sketches
             else:
                 # verify inputs: the delta side unions with a store side
@@ -850,7 +849,10 @@ class DedupPipeline:
 
         # 05 persisted (it's tiny — two longs per verified pair): the
         # substring verify anti-joins against it, and a lazy plan would
-        # re-run the whole verify DAG for that second consumer
+        # re-run the whole verify DAG for that second consumer.  A
+        # delta's LSH candidates persist too: the verify stage walks
+        # them twice (estimate prefilter + payload attach), and the
+        # observation must record on exactly one execution of the pass
         def minhash_chain():
             candidates = None
             if store is not None:
@@ -862,21 +864,13 @@ class DedupPipeline:
             )
 
         def build_simhash_pairs():
-            if store is None:
-                pairs = dedup.simhash_candidate_pairs(
-                    fingerprints.select("doc_id", "simhash"),
-                    max_hamming=cfg.simhash_max_hamming,
-                    max_bucket_size=cfg.max_bucket_size,
-                )
-            else:
-                pairs = inc.incremental_simhash_pairs(
-                    fingerprints.select("doc_id", "simhash"),
-                    store_fps.select("doc_id", "simhash"),
-                    max_hamming=cfg.simhash_max_hamming,
-                    max_bucket_size=cfg.max_bucket_size,
-                    prune_old_by_new_keys=prune_old,
-                )
-            return pairs.select("doc_a", "doc_b")
+            return dedup.simhash_candidate_pairs(
+                fingerprints.select("doc_id", "simhash"),
+                max_hamming=cfg.simhash_max_hamming,
+                max_bucket_size=cfg.max_bucket_size,
+                old_fingerprints=store_side("doc_id", "simhash"),
+                prune_old_by_new_keys=prune_old,
+            ).select("doc_a", "doc_b")
 
         # candidates WITHOUT the anti-join against the MinHash verdicts
         # (that dependency would serialize this stage behind the whole
@@ -886,34 +880,20 @@ class DedupPipeline:
         # verification changes nothing (measured 100% overlap on the
         # bench corpus)
         def build_substring_cands():
-            if store is None:
-                return suffix.substring_candidate_pairs(
-                    url_unique,
-                    max_bucket_size=cfg.max_bucket_size,
-                    winnow=fingerprints.select("doc_id", "winnow"),
-                )
-            return inc.incremental_substring_candidates(
-                fingerprints.select("doc_id", "winnow"),
-                store_fps.select("doc_id", "winnow"),
+            return suffix.substring_candidate_pairs(
+                url_unique,
                 max_bucket_size=cfg.max_bucket_size,
+                winnow=fingerprints.select("doc_id", "winnow"),
+                old_winnow=store_side("doc_id", "winnow"),
                 prune_old_by_new_keys=prune_winnow,
             )
 
         def build_text_pairs():
-            if store is not None:
-                # exact-text edges from stored hashes — no old text read
-                return inc.incremental_text_pairs(
-                    fingerprints.select("doc_id", "text_hash"),
-                    store_fps.select("doc_id", "text_hash"),
-                )
-            hashed = url_unique.select(
-                "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("text_hash")
-            )
-            reps = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
-            return (
-                hashed.join(reps, "text_hash")
-                .where(F.col("doc_id") != F.col("rep"))
-                .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+            # exact-text edges from the 04 frame's stored hashes: no
+            # text re-read in either mode
+            return dedup.exact_text_pairs(
+                fingerprints.select("doc_id", "text_hash"),
+                store_side("doc_id", "text_hash"),
             )
 
         # ---- stages 5-7 and 3: evidence stages, OVERLAPPED (guide §2.6) ----
@@ -928,7 +908,7 @@ class DedupPipeline:
         # INSIDE the group: as an ephemeral frame it was recomputed
         # inside the full run's clustering — ~0.9-1.4 s of md5+groupBy+
         # join on the post-overlap critical path (tools/exp_r06_stage08.py);
-        # it only needs the 02 cache, which 04's count fills first.
+        # it only needs the 04 frame's stored hashes.
         # A delta's exact-text and SimHash pairs come from stored keys
         # and are counted only by 08_evidence in "minimal" mode.
         stored_key_plan = Plan(COUNT, SNAPSHOT) if store is None else Plan(LAZY, SNAPSHOT)
@@ -1034,9 +1014,7 @@ class DedupPipeline:
         with _failing_as("summary"):
             summary = {
                 "mode": "full" if store is None else "incremental",
-                "config": {
-                    k: v for k, v in vars(cfg).items() if not isinstance(v, dict)
-                },
+                "config": dict(vars(cfg)),
                 "stages": self.metrics,
                 "n_output": self.assignments().count() if self.count_rows else None,
                 # observe()-based counters, recorded on the physical pass

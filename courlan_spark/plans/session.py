@@ -169,11 +169,8 @@ def _warm_engine(spark: SparkSession) -> None:
     Runs on spark.range data only — no input tables, nothing cached,
     no result reused — i.e. the engine analog of the worker/numpy
     warm-up the bench already performs untimed for the same reason.
-    Once per SparkContext (conf marker); SPARK_GRAFT_SESSION_WARMUP=0
-    disables it.  A warm-up that fails is dropped: it never fails the
-    session build."""
-    if os.environ.get("SPARK_GRAFT_SESSION_WARMUP", "1") == "0":
-        return
+    Once per SparkContext (conf marker).  A warm-up that fails is
+    dropped: it never fails the session build."""
     try:
         if spark.conf.get("spark.courlan.engineWarmed", "0") == "1":
             return
@@ -214,9 +211,3 @@ def _warm_up_query(spark: SparkSession) -> None:
         .mode("overwrite")
         .save()
     )
-
-
-def sf_tables(spark: SparkSession, sf_dir: str, *names: str):
-    "Load driver test-data parquet tables as DataFrames."
-    dfs = [spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names]
-    return dfs[0] if len(dfs) == 1 else dfs

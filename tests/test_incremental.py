@@ -13,6 +13,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from courlan_spark.operators import dedup
 from courlan_spark.operators import incremental as inc
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
 from courlan_spark.sources.pages import generate_pages, pages_view
@@ -147,8 +148,8 @@ def test_incremental_bucket_pairs_semantics(spark):
         "doc_id long, k string",
     )
     obs = Observation("acct")
-    pairs = inc.incremental_bucket_pairs(
-        new_rows, old_rows, "k", max_bucket_size=3, observation=obs
+    pairs = dedup.bucket_pairs(
+        new_rows, "k", max_bucket_size=3, old_rows=old_rows, observation=obs
     )
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     # k1: news {100,101} x old {1} -> (100,101), (1,100), (1,101)
@@ -157,7 +158,7 @@ def test_incremental_bucket_pairs_semantics(spark):
     acct = dict(obs.get)
     assert acct["dropped_buckets"] == 1
     assert acct["dropped_rows"] == 4
-    assert acct["active_buckets"] == 2  # k1 and (dropped) k3 have a new member
+    assert acct["buckets"] == 2  # k1 and (dropped) k3 have a new member
 
 
 def test_incremental_bucket_pairs_prune_identical(spark):
@@ -176,8 +177,8 @@ def test_incremental_bucket_pairs_prune_identical(spark):
     def pairs(prune):
         return {
             (r["doc_a"], r["doc_b"])
-            for r in inc.incremental_bucket_pairs(
-                new_rows, old_rows, "k", max_bucket_size=3,
+            for r in dedup.bucket_pairs(
+                new_rows, "k", max_bucket_size=3, old_rows=old_rows,
                 prune_old_by_new_keys=prune,
             ).collect()
         }
@@ -197,8 +198,8 @@ def test_incremental_bucket_pairs_prune_identical(spark):
     )
     def ppairs(prune):
         return {
-            tuple(r) for r in inc.incremental_bucket_pairs(
-                new_p, old_p, "k", max_bucket_size=3, payload_col="pl",
+            tuple(r) for r in dedup.bucket_pairs(
+                new_p, "k", max_bucket_size=3, old_rows=old_p, payload_col="pl",
                 prune_old_by_new_keys=prune,
             ).collect()
         }
@@ -207,7 +208,9 @@ def test_incremental_bucket_pairs_prune_identical(spark):
 
 def test_incremental_text_pairs_connectivity(spark):
     """New docs link to the store's hash representative when the hash
-    is known, and to the delta-min otherwise."""
+    is known, and to the delta-min otherwise.  Without a store side the
+    edges are the full run's md5-group edges: every doc to its hash
+    group's min."""
     new_hashes = spark.createDataFrame(
         [(200, "h1"), (201, "h1"), (202, "h9"), (203, "h9")],
         "doc_id long, text_hash string",
@@ -217,9 +220,27 @@ def test_incremental_text_pairs_connectivity(spark):
     )
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in inc.incremental_text_pairs(new_hashes, old_hashes).collect()
+        for r in dedup.exact_text_pairs(new_hashes, old_hashes).collect()
     }
     assert got == {(7, 200), (7, 201), (202, 203)}
+
+    docs = spark.createDataFrame(
+        [(5, "a"), (3, "a"), (9, "a"), (4, "b"), (8, None), (6, None), (1, "c")],
+        "doc_id long, text string",
+    )
+    hashed = docs.select(
+        "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("text_hash")
+    )
+    reps = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
+    md5_group_edges = {
+        (r["rep"], r["doc_id"])
+        for r in hashed.join(reps, "text_hash")
+        .where(F.col("doc_id") != F.col("rep"))
+        .collect()
+    }
+    assert md5_group_edges == {(3, 5), (3, 9), (6, 8)}
+    full = {(r["doc_a"], r["doc_b"]) for r in dedup.exact_text_pairs(hashed).collect()}
+    assert full == md5_group_edges
 
 
 def test_store_requires_fused_columns(spark):
@@ -372,12 +393,13 @@ def test_incremental_bucket_pairs_matches_model_randomized(spark):
     configurations evaluated in ONE Spark job (case-prefixed keys keep
     them disjoint) against a brute-force Python model of the contract:
     pairs = all i<j row pairs of buckets with >=2 member rows and
-    row-count <= cap, minus pairs whose sides are both old."""
+    row-count <= cap, minus pairs whose sides are both old.  Without a
+    store side, the same rows as new give every such i<j pair."""
     import numpy as np
 
     rng = np.random.default_rng(7)
     cap = 6
-    new_rows, old_rows, expected = [], [], set()
+    new_rows, old_rows, expected, expected_all = [], [], set(), set()
     for case in range(40):
         n_new, n_old = int(rng.integers(0, 6)), int(rng.integers(0, 8))
         news = [(int(rng.integers(0, 12)), f"{case}:{rng.integers(0, 4)}")
@@ -396,18 +418,24 @@ def test_incremental_bucket_pairs_matches_model_randomized(spark):
                 continue
             for i, (a, a_new) in enumerate(members):
                 for b, b_new in members[i + 1:]:
-                    if a != b and (a_new or b_new):
-                        expected.add((min(a, b), max(a, b)))
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in inc.incremental_bucket_pairs(
-            spark.createDataFrame(new_rows or [(0, "z:z")], "doc_id long, k string"),
-            spark.createDataFrame(old_rows or [(0, "z:y")], "doc_id long, k string"),
-            "k",
-            max_bucket_size=cap,
-        ).collect()
-    }
-    assert got == expected
+                    if a != b:
+                        expected_all.add((min(a, b), max(a, b)))
+                        if a_new or b_new:
+                            expected.add((min(a, b), max(a, b)))
+    schema = "doc_id long, k string"
+    new_df = spark.createDataFrame(new_rows or [(0, "z:z")], schema)
+    old_df = spark.createDataFrame(old_rows or [(0, "z:y")], schema)
+
+    def pairs(rows, old=None):
+        return {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.bucket_pairs(
+                rows, "k", max_bucket_size=cap, old_rows=old
+            ).collect()
+        }
+
+    assert pairs(new_df, old_df) == expected
+    assert pairs(new_df.unionByName(old_df)) == expected_all
 
 
 def test_empty_delta_keeps_store_assignments(spark):

@@ -27,7 +27,7 @@ def test_bucket_pair_explode_single_aggregation(spark):
     df = spark.range(0, 5000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 37).alias("k")
     )
-    pairs = dedup.bucket_pair_explode(df, "k", 500)
+    pairs = dedup.bucket_pairs(df, "k", 500)
     plan = _optimized(pairs)
     assert "Join" not in plan
     physical = _plan(pairs)
@@ -38,11 +38,12 @@ def test_bucket_pair_explode_single_aggregation(spark):
 
 
 def test_bucket_pair_explode_uncapped_no_window(spark):
-    "Without a cap there is no window pass — one pure hash aggregation."
+    """Without a cap or a store side there is no window pass — one
+    pure hash aggregation (dedup.bucket_pairs)."""
     df = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 7).alias("k")
     )
-    pairs = dedup.bucket_pair_explode(df, "k", None)
+    pairs = dedup.bucket_pairs(df, "k", None)
     physical = _plan(pairs)
     assert "Window" not in physical
     assert physical.count("Exchange") == 1
@@ -59,7 +60,7 @@ def test_bucket_pair_explode_cap_bounds_aggregation_input(spark):
         F.when(F.col("id") < 4000, F.lit(0)).otherwise(F.col("id") % 2 + 1).alias("k"),
     )
     obs = Observation("cap_acct")
-    pairs = dedup.bucket_pair_explode(df, "k", 50, observation=obs)
+    pairs = dedup.bucket_pairs(df, "k", 50, observation=obs)
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     # hub key 0 dropped; keys 1 and 2 hold 20 docs each -> C(20,2) pairs
     assert len(got) == 2 * (20 * 19) // 2
@@ -100,24 +101,41 @@ def test_lsh_candidates_no_self_join(spark):
 
 
 def test_incremental_bucket_pairs_single_exchange(spark):
-    """The incremental (delta vs store) candidate stage keeps the
+    """With a store side (delta vs store) the bucket pairing keeps the
     one-shuffle property: new/old membership rows union map-side, ONE
     exchange on the bucket key feeds the new-count/size windows AND the
     two-list aggregation, and pair expansion is native array code — no
     join against the store anywhere."""
-    from courlan_spark.operators import incremental as inc
-
     new = spark.range(0, 500).select(
         F.col("id").alias("doc_id"), (F.col("id") % 37).alias("k")
     )
     old = spark.range(1000, 6000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 37).alias("k")
     )
-    pairs = inc.incremental_bucket_pairs(new, old, "k", 500)
+    pairs = dedup.bucket_pairs(new, "k", 500, old_rows=old)
     assert "Join" not in _optimized(pairs)
     physical = _plan(pairs)
     assert physical.count("Exchange") == 1
     assert "Window" in physical
+
+
+def test_bucket_pairs_store_terms_only_with_store_side(spark):
+    """Without a store side the bucket pairing carries none of the
+    store side's terms: ONE collect_list (no olds list) and no
+    new-member count, capped or not and with or without an
+    observation — a full run pays nothing for the delta mode sharing
+    its operator.  With a store side both appear."""
+    from pyspark.sql import Observation
+
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("k")
+    )
+    for cap, obs in ((None, None), (500, None), (500, Observation("lean"))):
+        plan = _optimized(dedup.bucket_pairs(df, "k", cap, observation=obs))
+        assert plan.count("collect_list(") == 1, plan
+        assert "_nnew" not in plan and "_new" not in plan, plan
+    plan = _optimized(dedup.bucket_pairs(df, "k", 500, old_rows=df))
+    assert plan.count("collect_list(") == 2 and "_nnew" in plan
 
 
 def test_fused_fingerprints_prunes_unused_page_columns(spark, tmp_path):
@@ -164,7 +182,7 @@ def _exchange_inputs(formatted: str, partition_key: str) -> list[str]:
 
 
 def test_embedding_neardup_bucket_exchange_ships_ids_only(spark):
-    """The embedding near-dup bucket self-join must exchange ONLY
+    """The embedding near-dup bucket pairing must exchange ONLY
     (vec_id, bucket) rows: the round-4 shape carried the full embedding
     array on both sides, shipping each vector ~2x per LSH table through
     the shuffle.  Vectors now attach once, to the surviving pairs, via
@@ -181,8 +199,9 @@ def test_embedding_neardup_bucket_exchange_ships_ids_only(spark):
     out = embedding_neardup_pairs(vecs, dim=dim, threshold=0.5, max_bucket_size=100)
 
     optimized = _optimized(out)
-    # two joins total: the ids-only bucket self-join + ONE payload join
-    assert optimized.count("Join") == 2
+    # one join total: the ONE payload join (the ids-only bucket
+    # pairing is an aggregation, not a self-join)
+    assert optimized.count("Join") == 1
     # the old shape projected the embedding straight onto the join
     # inputs (`embedding#n AS va#m`); the new shape only ever aliases
     # it into attach_pair_payloads' single `_payload` pass

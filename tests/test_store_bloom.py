@@ -18,6 +18,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from courlan_spark.operators import dedup
 from courlan_spark.operators import incremental as inc
 from courlan_spark.plans import pipeline as P
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
@@ -163,21 +164,19 @@ def test_sized_filter_skips_delta_files_without_candidates(spark, chained):
 
 
 def _spy_prune_flags(monkeypatch) -> dict:
-    "The prune_old_by_new_keys each incremental candidate leg is built with."
+    """The prune_old_by_new_keys each incremental candidate leg is built
+    with: a spy on the one bucket-pair primitive, keyed by leg via the
+    key column of each call with a store side."""
     flags = {}
+    legs = {"band_key": "minhash", "block_key": "simhash", "fp": "substring"}
+    real = dedup.bucket_pairs
 
-    def spy(leg, real):
-        def wrapper(*args, **kwargs):
-            flags[leg] = kwargs.get("prune_old_by_new_keys", False)
-            return real(*args, **kwargs)
-        return wrapper
+    def spy(rows, key_col, *args, **kwargs):
+        if kwargs.get("old_rows") is not None:
+            flags[legs[key_col]] = kwargs.get("prune_old_by_new_keys", False)
+        return real(rows, key_col, *args, **kwargs)
 
-    for leg, name in (
-        ("minhash", "incremental_minhash_pairs"),
-        ("simhash", "incremental_simhash_pairs"),
-        ("substring", "incremental_substring_candidates"),
-    ):
-        monkeypatch.setattr(inc, name, spy(leg, getattr(inc, name)))
+    monkeypatch.setattr(dedup, "bucket_pairs", spy)
     return flags
 
 
