@@ -9,10 +9,13 @@ boundaries are the numpy fingerprint kernels in functions.hashing.
 The MinHash LSH, SimHash and winnowing candidates (and the embedding
 buckets in operators/similarity.py) are one operation, a bucketed
 self-join over (doc_id, key) rows, and ``bucket_pairs`` is its only
-implementation.  Each candidate operator takes an optional store side
-(``old_*``): without one it pairs a whole corpus, with one it pairs a
-delta batch against the store and gives only pairs touching a new doc
-(operators/incremental.py).
+implementation.  Every operator of the pipeline — each candidate
+operator, ``verify_pairs_jaccard`` and ``cluster_assignments`` —
+takes an optional store side (``old_*``): without one it works on a
+whole corpus; with one it works on a delta batch against the store,
+pairing and verifying only pairs that touch a new doc and giving only
+the cluster rows those pairs change (operators/incremental.py).  The
+store-side terms of a plan are built only when a store side is passed.
 
 Scale levers (north rule, /root/repo/BASELINE.json:6,14):
 * optional key salting for the exact-dedup aggregation when the key
@@ -30,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing
+from . import incremental as inc
 from .cc import connected_components_bounded
 
 
@@ -364,6 +368,8 @@ def verify_pairs_jaccard(
     estimate_margin: float = 0.2,
     shingle_k: int = hashing.DEFAULT_SHINGLE_K,
     sketches: DataFrame | None = None,
+    old_docs: DataFrame | None = None,
+    old_sketches: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs.
 
@@ -374,11 +380,24 @@ def verify_pairs_jaccard(
     rejoin only touches plausible pairs.  Signatures are sketched here
     (``minhash_sketch``).  Returns (doc_a, doc_b, jaccard) for pairs
     with jaccard >= threshold.
+
+    ``old_docs`` / ``old_sketches`` (optional) are a store side: the
+    pairs' partners among them join the delta's ``docs`` / sketches.
+    One bounded collect of the pairs' ids prunes both store scans
+    (incremental.prune_store_by_ids), so only candidate partners are
+    read; the payload attach then broadcasts the (small) pair set, and
+    only matched store rows shuffle.
     """
     if signatures is not None:
         sketches = signatures.select(
             "doc_id", minhash_sketch("signature").alias("sketch")
         )
+    if old_docs is not None or old_sketches is not None:
+        ids = inc.collect_pair_ids(pairs)
+        if old_docs is not None:
+            docs = inc.with_store_rows(docs.select(id_col, text_col), old_docs, ids, id_col)
+        if old_sketches is not None:
+            sketches = inc.with_store_rows(sketches, old_sketches, ids)
     if sketches is not None:
         # The estimate only needs per-position EQUALITY of the minima,
         # which their low bytes keep: equal minima give equal entries,
@@ -622,24 +641,69 @@ def cluster_assignments(
     verified_pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 25,
+    old_assignments: DataFrame | None = None,
 ) -> DataFrame:
     """Assign every document a cluster id (= min doc id reachable via
     verified duplicate pairs); documents without duplicates form
-    singleton clusters.
+    singleton clusters.  Returns (doc_id, cluster_id).
 
     Components resolve through the bounded fast path (cc.py): a
     verified-pair graph under ~200k edges — every bench/test scale,
     and any corpus whose duplicate evidence is sparse — is collected
     once and solved with driver-local union-find instead of paying
     ~0.5s of scheduling floor per star round; bigger graphs take the
-    distributed algorithm with identical labels."""
+    distributed algorithm with identical labels.
+
+    ``old_assignments`` (optional) is a store side: an existing cluster
+    table (doc_id, cluster_id, ...) over the store's docs.  ``docs``
+    (doc_id plus that table's other columns, which carry through) are
+    then a delta's new docs, and the output is the rows the new pairs
+    change, in ``old_assignments``' column order: every new doc with
+    its label, plus every old doc whose label moved.
+    ``incremental.overlay(old_assignments, <output>)`` is the merged
+    table.  Components then run over the AFFECTED clusters only: those
+    holding a pair endpoint add their (cluster_id, doc_id) membership
+    edges to the pairs, so a new doc bridging two old clusters merges
+    them at the min label, and the cost scales with the delta's blast
+    radius, not the corpus.  The labels equal one full run's: an
+    affected cluster's members all enter the subgraph, its old label
+    is already their min doc_id, and every other old doc keeps its
+    label.  The store-side terms (the semi-joins, membership edges and
+    moved labels) are built only when ``old_assignments`` is passed."""
+    edges = verified_pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    if old_assignments is not None:
+        endpoints = verified_pairs.select(
+            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+        ).distinct()
+        affected = (
+            old_assignments.join(endpoints, "doc_id", "left_semi")
+            .select("cluster_id")
+            .distinct()
+        )
+        scoped = old_assignments.join(affected, "cluster_id", "left_semi")
+        edges = scoped.where(F.col("cluster_id") != F.col("doc_id")).select(
+            F.col("cluster_id").alias("src"), F.col("doc_id").alias("dst")
+        ).unionByName(edges)
     components = connected_components_bounded(
-        verified_pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        max_iterations=max_iterations,
+        edges, max_iterations=max_iterations
+    ).withColumnRenamed("node", "doc_id")
+
+    def labelled(frame: DataFrame, columns: list[str]) -> DataFrame:
+        return (
+            frame.join(components, "doc_id", "left")
+            .withColumn("cluster_id", F.coalesce("component", "doc_id"))
+            .select(*columns)
+        )
+
+    if old_assignments is None:
+        return labelled(docs.select(F.col(id_col).alias("doc_id")), ["doc_id", "cluster_id"])
+    columns = old_assignments.columns
+    moved = (
+        old_assignments.join(components, "doc_id")
+        .where(F.col("component") != F.col("cluster_id"))
+        .withColumn("cluster_id", F.col("component"))
+        .select(*columns)
     )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(components.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .withColumn("cluster_id", F.coalesce("component", "doc_id"))
-        .select("doc_id", "cluster_id")
-    )
+    return moved.unionByName(labelled(docs, columns))

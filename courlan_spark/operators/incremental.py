@@ -5,11 +5,11 @@ pipeline's persisted stage-04 frame (doc_id, sketch, bands, simhash,
 winnow, text_hash — operators/fingerprints.py, with the MinHash
 signature kept only as its 8-bit sketch) doubles as that store:
 a new batch is fingerprinted ONCE (the only text-column Arrow pass of
-the whole incremental run touches only the delta), its bucket keys
-meet the store's in the same candidate operators a full run uses —
-each takes the store's stored keys as its optional store side
-(dedup.bucket_pairs) — and only pairs with at least one NEW side are
-generated, verified, and folded into the existing cluster table.
+the whole incremental run touches only the delta), and every operator
+of the pipeline — the bucket-pair candidates, both verifies and the
+clustering — takes the store as its optional store side (``old_*``),
+so only pairs with at least one NEW side are generated and verified,
+and the clustering gives only the cluster-table rows they change.
 
 Candidate completeness equals the full-run path by construction: both
 sides derive bucket keys through the same single definition
@@ -20,12 +20,10 @@ base-run + delta-run == one full run, bit-for-bit on (doc_id,
 cluster_id), including cross-batch duplicate groups and cluster merges
 caused by a new doc bridging two old clusters.
 
-This module holds what only a delta run needs: the store-side prune
-of the verify inputs (collect_pair_ids / prune_store_by_ids) and the
-cluster merge (changed / overlay / merge_assignments).  Verify stages
-attach pair payloads by exploding the (small) pair set and
-broadcast-joining it against the corpus union, so only matched store
-rows ever shuffle — in the same scan, with no separate prune pass.
+This module holds the store-side pieces those operators share: the
+pruned store scan of a verify (collect_pair_ids, prune_store_by_ids,
+with_store_rows) and ``overlay``, which lays a delta's changed
+cluster rows over the store's table.
 """
 
 from __future__ import annotations
@@ -33,56 +31,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import connected_components_bounded
+from ..plans.session import PARQUET_IN_FILTER_THRESHOLD
 
 
-def prune_store_by_pair_ids(
-    store_table: DataFrame,
-    pair_frames: list[DataFrame],
-    id_col: str = "doc_id",
-    cap: int = 50_000,
-) -> DataFrame:
-    """Dynamic file pruning for the store side of a verify join: the
-    distinct doc ids appearing in the (small, persisted) candidate
-    pair frames are collected — bounded by ``cap`` — and pushed into
-    the store scan as an In predicate.  With store snapshots written
-    range-sorted by doc_id (pipeline._STAGE_KEY_COLS), parquet footer
-    min/max statistics then skip every file holding no candidate
-    partner: the delta verify reads store rows proportional to the
-    candidate set, not the corpus (round-3 judge gap #3; the Iceberg
-    seam upgrades the same predicate to bloom/zorder skipping).
-
-    The driver-side collect is bounded (≤ cap longs from an
-    already-persisted pair set — no DAG re-run) and falls back to the
-    unpruned table beyond ``cap``, where the broadcast verify join
-    alone remains correct, just less IO-selective."""
-    return prune_store_by_ids(
-        store_table, collect_pair_ids(pair_frames, id_col=id_col, cap=cap),
-        id_col=id_col,
+def collect_pair_ids(pairs: DataFrame, cap: int = 50_000) -> list[int] | None:
+    """The distinct doc ids of (doc_a, doc_b) ``pairs``, collected once
+    for every store scan of a verify to prune by (prune_store_by_ids):
+    dynamic file pruning, so a delta verify reads store rows in
+    proportion to its candidate set, not the corpus (the store
+    snapshots are doc_id-sorted, so footer min/max statistics skip
+    files holding no candidate partner).  The collect is
+    bounded (≤ ``cap`` longs from an already-persisted pair set, no
+    DAG re-run); past ``cap`` it gives None, the fall-back-to-unpruned
+    signal, where the verify's broadcast payload join alone stays
+    correct, just less IO-selective."""
+    rows = (
+        pairs.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
+        .distinct()
+        .limit(cap + 1)
+        .collect()
     )
-
-
-def collect_pair_ids(
-    pair_frames: list[DataFrame], id_col: str = "doc_id", cap: int = 50_000
-) -> list[int] | None:
-    """The distinct doc ids of (doc_a, doc_b) pair frames, collected
-    once for reuse across several pruned scans; None past ``cap`` (or
-    with no frames) — the caller's fall-back-to-unpruned signal."""
-    ids_df = None
-    for pairs in pair_frames:
-        part = pairs.select(
-            F.explode(F.array("doc_a", "doc_b")).alias(id_col)
-        )
-        ids_df = part if ids_df is None else ids_df.unionByName(part)
-    if ids_df is None:
-        return None
-    rows = ids_df.distinct().limit(cap + 1).collect()
     if len(rows) > cap:
         return None
-    return [int(r[id_col]) for r in rows]
+    return [int(r["doc_id"]) for r in rows]
 
-
-from ..plans.session import PARQUET_IN_FILTER_THRESHOLD
 
 # parquet keeps an In exact up to the session's pushdown threshold —
 # imported, not copied, so the exact-In path and the session config
@@ -145,66 +117,13 @@ def prune_store_by_ids(
     return store_table.where(F.expr(predicate))
 
 
-def changed(
-    old_assignments: DataFrame,
-    new_docs: DataFrame,
-    new_pairs: DataFrame,
-    max_iterations: int = 25,
+def with_store_rows(
+    rows: DataFrame, old_rows: DataFrame, ids: list[int] | None, id_col: str = "doc_id"
 ) -> DataFrame:
-    """The rows new pair evidence changes in an existing cluster table:
-    every new doc with its label, plus every old doc whose label moved.
-
-    Connected components run over AFFECTED clusters only: the clusters
-    containing a pair endpoint contribute their (cluster_id, doc_id)
-    membership edges, the new pairs are added, and the iterative
-    large-star/small-star relabel touches just that subgraph — a new
-    doc bridging two old clusters merges them, both sides adopting the
-    min label.  Every other old doc keeps its label, so the merge cost
-    and the output scale with the delta's blast radius, not the corpus.
-    The labels are identical to one full run's: an affected cluster's
-    members all appear in the subgraph (via their membership edges, or
-    via the pair itself for singletons), its old label is the members'
-    min doc_id already, and unaffected components have the same
-    membership either way.
-
-    ``old_assignments`` is (doc_id, cluster_id, ...); ``new_docs`` is
-    doc_id plus the same other columns, which both carry through.  The
-    rows come out in ``old_assignments``' column order."""
-    endpoints = new_pairs.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    ).distinct()
-    affected = (
-        old_assignments.join(endpoints, "doc_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
+    "``rows`` plus the store's ``old_rows`` with the collected ``ids``, in ``rows``' columns."
+    return rows.unionByName(
+        prune_store_by_ids(old_rows.select(*rows.columns), ids, id_col)
     )
-    scoped = old_assignments.join(affected, "cluster_id", "left_semi")
-    old_edges = scoped.where(F.col("cluster_id") != F.col("doc_id")).select(
-        F.col("cluster_id").alias("src"), F.col("doc_id").alias("dst")
-    )
-    edges = old_edges.unionByName(
-        new_pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
-    # the affected subgraph is delta-sized by construction, so the
-    # bounded driver-local union-find resolves it without paying the
-    # star rounds' per-round scheduling floor; big blast radii fall
-    # back to the distributed algorithm (same min-label contract)
-    components = connected_components_bounded(
-        edges, max_iterations=max_iterations
-    ).withColumnRenamed("node", "doc_id")
-    columns = old_assignments.columns
-    moved = (
-        old_assignments.join(components, "doc_id")
-        .where(F.col("component") != F.col("cluster_id"))
-        .withColumn("cluster_id", F.col("component"))
-        .select(*columns)
-    )
-    labelled = (
-        new_docs.join(components, "doc_id", "left")
-        .withColumn("cluster_id", F.coalesce("component", "doc_id"))
-        .select(*columns)
-    )
-    return moved.unionByName(labelled)
 
 
 def overlay(base: DataFrame, changes: DataFrame) -> DataFrame:
@@ -215,19 +134,4 @@ def overlay(base: DataFrame, changes: DataFrame) -> DataFrame:
         base.select(*changes.columns)
         .join(changes.select("doc_id"), "doc_id", "left_anti")
         .unionByName(changes)
-    )
-
-
-def merge_assignments(
-    old_assignments: DataFrame,
-    new_doc_ids: DataFrame,
-    new_pairs: DataFrame,
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Fold new pair evidence into an existing cluster table: the
-    (doc_id, cluster_id) table over old ∪ new docs, i.e. the old
-    table overlaid with the rows the evidence ``changed``."""
-    old = old_assignments.select("doc_id", "cluster_id")
-    return overlay(
-        old, changed(old, new_doc_ids.select("doc_id"), new_pairs, max_iterations)
     )

@@ -230,71 +230,6 @@ def ivf_topk(
     return _rank_topk(candidates, k, round_decimals)
 
 
-def incremental_embedding_neardup(
-    new_vectors: DataFrame,
-    old_vectors: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    planes: int = 10,
-    tables: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = 2000,
-    seed: int = 42,
-    round_decimals: int | None = None,
-    new_buckets: DataFrame | None = None,
-    old_buckets: DataFrame | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs touching at least one NEW
-    vector — the embedding-store analog of the text-side incremental
-    path (operators/incremental.py): hyperplane bucket keys from the
-    SAME kernel meet delta and store rows in one shuffle, old-only
-    buckets are pruned before anything materializes, pair expansion is
-    new x new + new x old, and the exact-cosine rescore broadcasts the (small) pair
-    set into the payload join so only matched vectors shuffle.  Pass
-    ``old_buckets``/``new_buckets`` ((doc_id, bucket) rows, e.g.
-    persisted at store-build time) to skip the hyperplane UDF pass —
-    on the store side that pass would cover the whole corpus."""
-    from .dedup import attach_pair_payloads, bucket_pairs
-
-    bucket_udf = make_hyperplane_bucket_udf(dim, planes, tables, seed)
-
-    def rows(df):
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(bucket_udf(F.col(vec_col))).alias("bucket"),
-        )
-
-    pairs = bucket_pairs(
-        new_buckets if new_buckets is not None else rows(new_vectors),
-        "bucket",
-        max_bucket_size,
-        old_rows=old_buckets if old_buckets is not None else rows(old_vectors),
-    ).distinct()
-    union_vecs = new_vectors.select(
-        F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")
-    ).unionByName(
-        old_vectors.select(
-            F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")
-        )
-    )
-    paired = attach_pair_payloads(
-        pairs, union_vecs, "doc_id", "vec", "va", "vb"
-    )
-    cos = _cosine_expr(F.col("va"), F.col("vb"))
-    if round_decimals is not None:
-        cos = F.round(cos, round_decimals)
-    return (
-        paired.withColumn("cosine", cos)
-        .where(F.col("cosine") >= threshold)
-        .select(
-            F.col("doc_a").alias("id_a"),
-            F.col("doc_b").alias("id_b"),
-            "cosine",
-        )
-    )
-
-
 # Total bytes of vector payload the bucket exchange may carry before
 # the operator switches from the inline-payload shape to the ids-only
 # + attach shape.  Inline ships each vector through the exchange once
@@ -320,6 +255,7 @@ def embedding_neardup_pairs(
     round_decimals: int | None = None,
     n_vectors: int | None = None,
     inline_payload: bool | None = None,
+    old_vectors: DataFrame | None = None,
 ) -> DataFrame:
     """Cosine near-duplicate pairs via hyperplane buckets + exact rescore.
 
@@ -345,6 +281,13 @@ def embedding_neardup_pairs(
       at sandbox scale where the whole corpus is a few MB.  Output is
       row-identical: same candidate pair set, same vectors, same
       cosine expression (pinned by tests/test_similarity.py).
+
+    ``old_vectors`` (optional) is a store side of the same shape:
+    ``vectors`` are then a delta, and only pairs touching a new vector
+    come out (dedup.bucket_pairs: buckets without a new member are
+    pruned before anything materializes, and the expansion is new x new
+    plus new x old).  The ids-only shape then attaches payloads from
+    the delta and store vectors together.
     """
     from .dedup import attach_pair_payloads, bucket_pairs
 
@@ -370,29 +313,37 @@ def embedding_neardup_pairs(
             )
         )
 
-    if inline_payload:
-        bucketed = vectors.select(
+    def members(df: DataFrame | None, *payload) -> DataFrame | None:
+        if df is None:
+            return None
+        return df.select(
             F.col(id_col).alias("doc_id"),
-            F.col(vec_col).alias("vec"),
+            *payload,
             F.explode(bucket_udf(F.col(vec_col))).alias("bucket"),
         )
+
+    if inline_payload:
+        vec = F.col(vec_col).alias("vec")
         pairs = bucket_pairs(
-            bucketed,
+            members(vectors, vec),
             "bucket",
             max_bucket_size,
+            old_rows=members(old_vectors, vec),
             payload_col="vec",
             out_payload=("va", "vb"),
         ).dropDuplicates(["doc_a", "doc_b"])
         return finish(pairs)
 
-    bucketed = vectors.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(bucket_udf(F.col(vec_col))).alias("bucket"),
-    )
-    pairs = bucket_pairs(bucketed, "bucket", max_bucket_size).distinct()
-    vecs = vectors.select(
-        F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")
-    )
+    pairs = bucket_pairs(
+        members(vectors), "bucket", max_bucket_size, old_rows=members(old_vectors)
+    ).distinct()
+
+    def payloads(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec"))
+
+    vecs = payloads(vectors)
+    if old_vectors is not None:
+        vecs = vecs.unionByName(payloads(old_vectors))
     return finish(
         attach_pair_payloads(pairs, vecs, "doc_id", "vec", "va", "vb")
     )

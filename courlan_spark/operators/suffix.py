@@ -272,8 +272,13 @@ def verify_substring_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_length: int = 63,
+    old_docs: DataFrame | None = None,
 ) -> DataFrame:
-    "Exact LCS verification: keep pairs with a shared block >= min_length."
+    """Exact LCS verification: keep pairs with a shared block >= min_length.
+
+    ``old_docs`` (optional) is a store side: the pairs' partners among
+    them, pruned by one bounded collect of the pairs' ids
+    (incremental.prune_store_by_ids), join the delta's ``docs``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
@@ -293,8 +298,13 @@ def verify_substring_pairs(
     # capture; guide §4.4).  One evaluation, after the spread exchange.
     lcs_udf = lcs_udf.asNondeterministic()
 
+    from . import incremental as inc
     from .dedup import attach_pair_payloads
 
+    if old_docs is not None:
+        docs = inc.with_store_rows(
+            docs.select(id_col, text_col), old_docs, inc.collect_pair_ids(pairs), id_col
+        )
     paired = attach_pair_payloads(pairs, docs, id_col, text_col, "ta", "tb")
     # spread the (CPU-heavy) LCS work on the pair identity: keyed, so
     # no sortBeforeRepartition pass over the attached text payloads

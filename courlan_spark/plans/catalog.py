@@ -1271,9 +1271,10 @@ def q_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         signatures=base_sigs.unionByName(delta_sigs),
         threshold=0.5,
     )
-    return inc.merge_assignments(
-        base_assign, delta.select("doc_id"), verified.select("doc_a", "doc_b")
+    changes = dedup.cluster_assignments(
+        delta.select("doc_id"), verified.select("doc_a", "doc_b"), old_assignments=base_assign
     )
+    return inc.overlay(base_assign, changes)
 
 
 def q_remove_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1372,7 +1373,8 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding near-dup: vec_id % 4 == 0 arrives as the
     delta against the rest as the store; only pairs with a new side are
-    generated and rescored (similarity.incremental_embedding_neardup).
+    generated and rescored (similarity.embedding_neardup_pairs with the
+    store as its ``old_vectors``).
     Same full-recall bucket config as q_embedding_neardup_lsh, so the
     oracle is the exact brute-force pair set restricted to pairs
     touching a new vector."""
@@ -1385,14 +1387,14 @@ def q_embedding_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFra
         n = emb.count()
     planes = max(4, math.ceil(math.log2(max(n, 64) / 32)))
     tables = 48 if n <= 600 else 16
-    return similarity.incremental_embedding_neardup(
+    return similarity.embedding_neardup_pairs(
         emb.where(F.col("vec_id") % 4 == 0),
-        emb.where(F.col("vec_id") % 4 != 0),
         dim=64,
         threshold=0.35,
         planes=planes,
         tables=tables,
         round_decimals=4,
+        old_vectors=emb.where(F.col("vec_id") % 4 != 0),
     )
 
 

@@ -659,20 +659,24 @@ class DedupPipeline:
     ) -> dict:
         """The stage graph of both modes.  Without a store, ``pages``
         is the whole corpus; with one, ``pages`` is a delta batch whose
-        02 drops the norm_urls the store already holds.  The 03/05/06/07
-        evidence legs call the same operator in both modes, handing it
-        the store's slice of the 04 frame as its store side (None in a
-        full run).  Only three things still differ between the modes'
-        evidence paths: a delta persists its LSH candidates as
-        05_candidates, prunes the store side of its verify inputs to
-        the candidates' ids, and folds its evidence into the store's
-        cluster table (08_evidence / 09 segment) where a full run
-        clusters from scratch (08_clusters).  A full run is NOT run as
-        a delta against an empty store: Spark's empty-relation
-        propagation does not remove the windowed bucket pairing, the
-        pair-id collects or the cluster merge, and that shape measured
-        2.4x the full operators' wall on a 4,000-page corpus (4-core
-        host, local[4])."""
+        02 drops the norm_urls the store already holds.  Every leg
+        calls one operator in both modes — the 03/05/06/07 candidates,
+        both verifies and the clustering — handing it the store's slice
+        of its input as its store side (None in a full run).  What
+        still differs is materialization, because a delta's operators
+        walk their inputs more than once:
+        - a delta persists its LSH candidates as 05_candidates: the
+          verify's store-side id collect walks them once before the
+          verify walks them again;
+        - a delta persists its evidence as 08_evidence and clusters in
+          09, writing the rows that evidence changes in the store's
+          cluster table as a segment; a full run clusters its corpus
+          in 08_clusters, lazily over its evidence.
+        A full run is NOT run as a delta against an empty store: Spark's
+        empty-relation propagation does not remove the windowed bucket
+        pairing, the pair-id collects or the cluster merge, and that
+        shape measured 2.4x the full operators' wall on a 4,000-page
+        corpus (4-core host, local[4])."""
         cfg = self.config
         self._persist_config()
 
@@ -768,6 +772,7 @@ class DedupPipeline:
         # each evidence leg's one operator takes the store's slice of
         # the 04 frame as its optional store side: None in a full run
         store_fps = None if store is None else store.fingerprints
+        store_docs = None if store is None else store.docs
         prune_old = prune_winnow = False
         if store is not None:
             # guide §3.2 pre-filter gate, per leg: the delta's distinct
@@ -819,40 +824,26 @@ class DedupPipeline:
             return candidates
 
         def build_minhash_pairs(candidates):
-            if store is None:
+            if candidates is None:
+                # a full run's candidates are built in the verify's stage
                 candidates = build_candidates()
-                texts, sketched = url_unique, sketches
-            else:
-                # verify inputs: the delta side unions with a store side
-                # PRUNED to candidate partners — one bounded id collect
-                # from the persisted pair set (no DAG re-run, unlike round
-                # 3's dropped semi-join prunes) serves both store scans,
-                # pushed in as an In predicate the doc_id-sorted store
-                # snapshots turn into parquet file skipping.  The pair-
-                # payload attach inside verify explodes the (small) pair
-                # set and broadcast-joins it against the pruned union:
-                # only matched store rows ever shuffle, in the same scan.
-                cand_ids = inc.collect_pair_ids([candidates])
-                texts = url_unique.select("doc_id", "text").unionByName(
-                    inc.prune_store_by_ids(store.docs.select("doc_id", "text"), cand_ids)
-                )
-                sketched = sketches.unionByName(
-                    inc.prune_store_by_ids(store_fps.select("doc_id", "sketch"), cand_ids)
-                )
             return dedup.verify_pairs_jaccard(
                 candidates,
-                texts,
-                sketches=sketched,
+                url_unique,
+                sketches=sketches,
                 threshold=cfg.jaccard_threshold,
                 shingle_k=cfg.shingle_k,
+                old_docs=store_docs,
+                old_sketches=store_side("doc_id", "sketch"),
             ).select("doc_a", "doc_b")
 
         # 05 persisted (it's tiny — two longs per verified pair): the
         # substring verify anti-joins against it, and a lazy plan would
         # re-run the whole verify DAG for that second consumer.  A
-        # delta's LSH candidates persist too: the verify stage walks
-        # them twice (estimate prefilter + payload attach), and the
-        # observation must record on exactly one execution of the pass
+        # delta's LSH candidates persist too (05_candidates): the
+        # verify's store-side id collect walks them before the verify
+        # does, and the observation must record on exactly one
+        # execution of the pass
         def minhash_chain():
             candidates = None
             if store is not None:
@@ -936,22 +927,20 @@ class DedupPipeline:
                 cands = staged["07_substring_cands"].join(
                     minhash_pairs, ["doc_a", "doc_b"], "left_anti"
                 )
-                texts = url_unique if store is None else url_unique.select(
-                    "doc_id", "text"
-                ).unionByName(
-                    inc.prune_store_by_pair_ids(store.docs.select("doc_id", "text"), [cands])
-                )
                 return suffix.verify_substring_pairs(
-                    cands, texts, min_length=cfg.substring_min_len
+                    cands, url_unique, min_length=cfg.substring_min_len, old_docs=store_docs
                 ).select("doc_a", "doc_b")
 
             pairs = pairs.unionByName(
                 stage("07_substring_pairs", build_substring_pairs, EPHEMERAL)
             )
 
-        # ---- stage 8: clustering ----
-        # a delta run writes a segment unless its store chains enough
-        # segments to compact
+        # ---- stages 8-9: clustering ----
+        # one clustering operator in both modes; a delta hands it the
+        # store's cluster table as its store side, and a delta run
+        # writes a segment unless its store chains enough segments to
+        # compact
+        docs = url_unique.select("doc_id", "norm_url", "domain")
         compact = store is not None and store.segments >= SEGMENT_BOUND
         if store is None:
             # no explicit distinct: connected_components dedups its
@@ -960,22 +949,18 @@ class DedupPipeline:
             # therefore pre-dedup evidence rows)
             clusters = stage(
                 "08_clusters",
-                lambda: dedup.cluster_assignments(
-                    url_unique, observed("evidence_pairs", pairs)
-                ),
+                lambda: dedup.cluster_assignments(docs, observed("evidence_pairs", pairs)),
                 EPHEMERAL,
             )
 
             def build_output():
-                return url_unique.join(clusters, "doc_id").select(
-                    "doc_id", "norm_url", "domain", "cluster_id"
-                )
+                return docs.join(clusters, "doc_id").select(*ASSIGNMENT_COLUMNS)
         else:
-            # evidence persists (tiny: two longs per pair):
-            # inc.changed walks it several times — endpoint
-            # extraction, the affected-cluster semi-joins, and every CC
-            # iteration — and a lazy union would re-run the whole verify
-            # DAG for each walk
+            # evidence persists (tiny: two longs per pair): the store
+            # side walks it several times — endpoint extraction, the
+            # affected-cluster semi-joins, and every CC iteration — and
+            # a lazy union would re-run the whole verify DAG for each
+            # walk
             evidence = stage(
                 "08_evidence",
                 lambda: observed("evidence_pairs", pairs),
@@ -990,9 +975,7 @@ class DedupPipeline:
             # once per read (see SEGMENT_BOUND)
             def build_output():
                 view = self._persist(store.assignments)
-                changes = inc.changed(
-                    view, url_unique.select("doc_id", "norm_url", "domain"), evidence
-                )
+                changes = dedup.cluster_assignments(docs, evidence, old_assignments=view)
                 if compact:
                     return inc.overlay(view, changes)
                 # a segment holds the delta's new docs and the old docs

@@ -83,149 +83,6 @@ def user_session_windows(
     )
 
 
-def streaming_minhash_candidates(
-    docs_stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 128,
-    bands: int = 32,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Incremental near-duplicate CANDIDATE pairs over a document
-    stream: each arriving document's MinHash band keys probe per-bucket
-    state (the ids already seen in that bucket) and emit (doc_a, doc_b,
-    band_key) for every collision — the streaming form of the batch
-    LSH candidate stage, with the bucket self-join replaced by
-    applyInPandasWithState keyed on band_key.
-
-    State per bucket is the bounded id list (``max_bucket_size``, the
-    same no-silent-cap rule as the batch path: full buckets stop
-    ACCUMULATING but still report collisions against the stored
-    members).  Pairs are candidates only — exact Jaccard verification
-    runs downstream (foreachBatch or offline), exactly as in the batch
-    pipeline.  Within a batch, documents are processed in ascending id
-    order so output is deterministic; doc_a < doc_b always."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..functions.hashing import make_band_hash_udf, make_minhash_udf
-
-    minhash = make_minhash_udf(num_perm=num_perm)
-    band_udf = make_band_hash_udf(bands=bands)
-    banded = docs_stream.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(band_udf(minhash(F.col(text_col)))).alias("band_key"),
-    )
-
-    def probe(key, pdfs: Iterable[pd.DataFrame], state):
-        stored: list[int] = list(state.get[0]) if state.exists else []
-        members = set(stored)
-        incoming: set[int] = set()
-        for pdf in pdfs:
-            incoming.update(int(x) for x in pdf["doc_id"])
-        out_a, out_b = [], []
-        new_ids: list[int] = []
-        for doc in sorted(incoming):
-            if doc in members:
-                continue
-            for other in members:
-                lo, hi = (other, doc) if other < doc else (doc, other)
-                out_a.append(lo)
-                out_b.append(hi)
-            members.add(doc)
-            new_ids.append(doc)
-        if len(stored) < max_bucket_size and new_ids:
-            state.update((stored + new_ids[: max_bucket_size - len(stored)],))
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "doc_a": out_a,
-                    "doc_b": out_b,
-                    "band_key": [key[0]] * len(out_a),
-                }
-            )
-
-    return banded.groupBy("band_key").applyInPandasWithState(
-        probe,
-        outputStructType="doc_a long, doc_b long, band_key long",
-        stateStructType="ids array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def start_streaming_neardup(
-    docs_stream: DataFrame,
-    docs_table_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    trigger_once: bool = True,
-    **candidate_kwargs,
-):
-    """Full incremental near-duplicate pipeline on Structured
-    Streaming: MinHash band-bucket state emits candidate pairs as
-    documents arrive (:func:`streaming_minhash_candidates`); each
-    micro-batch's candidates are exact-Jaccard verified in
-    foreachBatch against the document store at ``docs_table_path``
-    (the crawl's accumulated doc table — at production scale an
-    Iceberg table; any doc that produced a candidate is already
-    persisted there by the ingest path) and verified pairs append to
-    ``out_path``.
-
-    Returns the StreamingQuery.  Cross-batch pairs work because the
-    bucket state carries earlier members: a doc arriving in batch N
-    pairs against docs from batches < N without re-reading them.
-
-    Sink idempotence (round-3 ADVICE fix): each micro-batch OVERWRITES
-    its own ``batch_id=<id>`` partition directory under ``out_path``,
-    so a foreachBatch retry (same batch_id) replaces rather than
-    appends — the previous plain append would double-write on retries.
-    Source RE-deliveries are a different case: a doc re-sent in a
-    LATER batch re-emits its pairs when its bucket was already full
-    (full buckets stop persisting new member ids, by design — bounded
-    state), landing in a different batch directory.  Consumers must
-    therefore dedup (doc_a, doc_b) across batches —
-    :func:`read_verified_pairs` does exactly that."""
-    import os
-
-    from ..operators import dedup
-
-    candidates = streaming_minhash_candidates(
-        docs_stream, id_col=id_col, text_col=text_col, **candidate_kwargs
-    )
-
-    def verify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = batch_df.select("doc_a", "doc_b").distinct()
-        docs = batch_df.sparkSession.read.parquet(docs_table_path)
-        verified = dedup.verify_pairs_jaccard(
-            pairs, docs, id_col=id_col, text_col=text_col, threshold=threshold
-        )
-        verified.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}")
-        )
-
-    writer = candidates.writeStream.foreachBatch(verify_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_verified_pairs(spark, out_path: str) -> DataFrame:
-    """Read the streaming near-dup sink: distinct verified (doc_a,
-    doc_b, jaccard) across all batch directories.  The per-pair dedup
-    absorbs source re-deliveries of full-bucket docs (see
-    start_streaming_neardup)."""
-    return (
-        spark.read.parquet(out_path)
-        .select("doc_a", "doc_b", "jaccard")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
 _DEDUP_STATE_SCHEMA = "emitted boolean"
 
 

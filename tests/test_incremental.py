@@ -118,7 +118,7 @@ def test_chained_deltas_via_from_workdirs(spark):
 
 
 def test_new_doc_bridges_two_old_clusters(spark):
-    "merge_assignments relabels BOTH old clusters to the common min."
+    "The store-side clustering relabels BOTH old clusters to the common min."
     old = spark.createDataFrame(
         [(10, 10), (11, 10), (20, 20), (21, 20), (30, 30)],
         "doc_id long, cluster_id long",
@@ -129,7 +129,9 @@ def test_new_doc_bridges_two_old_clusters(spark):
     )
     merged = {
         r["doc_id"]: r["cluster_id"]
-        for r in inc.merge_assignments(old, new_ids, new_pairs).collect()
+        for r in inc.overlay(
+            old, dedup.cluster_assignments(new_ids, new_pairs, old_assignments=old)
+        ).collect()
     }
     assert merged == {10: 10, 11: 10, 20: 10, 21: 10, 40: 10, 30: 30}
 
@@ -545,7 +547,7 @@ def test_store_snapshots_sorted_and_verify_scan_prunes_files(spark):
     """Round-4 store-scan pruning: (1) the store's 02_url_dedup /
     04_fingerprints snapshots are written range-sorted by doc_id, so
     every parquet file covers a disjoint id range (footer min/max
-    checked via pyarrow); (2) prune_store_by_pair_ids pushes the
+    checked via pyarrow); (2) prune_store_by_ids pushes the
     candidate-id In predicate into the store scan (PushedFilters);
     (3) under that predicate only the files whose footer range
     overlaps the candidate ids need reading — a strict subset for a
@@ -601,7 +603,7 @@ def test_store_snapshots_sorted_and_verify_scan_prunes_files(spark):
         pairs = spark.createDataFrame(
             [(1990, 3), (1991, 7), (1995, 11)], "doc_a long, doc_b long"
         )
-        pruned = inc.prune_store_by_pair_ids(store.docs, [pairs])
+        pruned = inc.prune_store_by_ids(store.docs, inc.collect_pair_ids(pairs))
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PushedFilters" in plan and "In(doc_id" in plan
         got = {r["doc_id"] for r in pruned.select("doc_id").collect()}
@@ -653,7 +655,7 @@ def test_prune_with_large_id_set_executes(spark):
         pairs = spark.range(0, 20000).selectExpr(
             "id as doc_a", "id + 30000 as doc_b"
         )
-        pruned = inc.prune_store_by_pair_ids(stored, [pairs])
+        pruned = inc.prune_store_by_ids(stored, inc.collect_pair_ids(pairs))
         assert pruned.count() == 20000
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)

@@ -119,13 +119,19 @@ def test_incremental_bucket_pairs_single_exchange(spark):
     assert "Window" in physical
 
 
-def test_bucket_pairs_store_terms_only_with_store_side(spark):
-    """Without a store side the bucket pairing carries none of the
-    store side's terms: ONE collect_list (no olds list) and no
-    new-member count, capped or not and with or without an
-    observation — a full run pays nothing for the delta mode sharing
-    its operator.  With a store side both appear."""
+def test_bucket_pairs_store_terms_only_with_store_side(spark, monkeypatch):
+    """Without a store side an operator carries none of the store
+    side's terms, so a full run pays nothing for the delta mode sharing
+    its operators.  The bucket pairing: ONE collect_list (no olds list)
+    and no new-member count, capped or not and with or without an
+    observation.  Both verifies: no pruned store union and no pair-id
+    collect.  The clustering: no cluster_id semi-join in its edges and
+    no union of moved labels.  With a store side all of them appear,
+    and each verify collects its pairs' ids once."""
     from pyspark.sql import Observation
+
+    from courlan_spark.operators import incremental as inc
+    from courlan_spark.operators import suffix
 
     df = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 7).alias("k")
@@ -136,6 +142,43 @@ def test_bucket_pairs_store_terms_only_with_store_side(spark):
         assert "_nnew" not in plan and "_new" not in plan, plan
     plan = _optimized(dedup.bucket_pairs(df, "k", 500, old_rows=df))
     assert plan.count("collect_list(") == 2 and "_nnew" in plan
+
+    # the id collect and the components run jobs when called: stubbed,
+    # since only the plans are under test
+    collects, edges = [], []
+    monkeypatch.setattr(inc, "collect_pair_ids", lambda p, **kw: collects.append(p) or [1, 2, 100])
+    monkeypatch.setattr(
+        dedup, "connected_components_bounded",
+        lambda e, **kw: edges.append(e)
+        or spark.createDataFrame([(1, 1), (2, 1), (100, 1)], "node long, component long"),
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 100)], "doc_a long, doc_b long")
+
+    def texts(lo, hi):
+        return spark.range(lo, hi).selectExpr("id AS doc_id", "concat('text ', id) AS text")
+
+    def sketched(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS doc_id", "array(cast(id % 100 AS tinyint)) AS sketch"
+        )
+
+    old = spark.createDataFrame([(1, 1), (100, 1), (5, 5)], "doc_id long, cluster_id long")
+    for store in (False, True):
+        jaccard = dedup.verify_pairs_jaccard(
+            pairs, texts(0, 10), sketches=sketched(0, 10),
+            **({"old_docs": texts(100, 110), "old_sketches": sketched(100, 110)} if store else {}),
+        )
+        lcs = suffix.verify_substring_pairs(
+            pairs, texts(0, 10), **({"old_docs": texts(100, 110)} if store else {})
+        )
+        for verify in (jaccard, lcs):
+            assert ("Union" in _optimized(verify)) == store
+        assert len(collects) == (2 if store else 0)
+        labels = dedup.cluster_assignments(
+            texts(2, 3), pairs, **({"old_assignments": old} if store else {})
+        )
+        assert ("LeftSemi" in _optimized(edges[-1])) == store
+        assert ("Union" in _optimized(labels)) == store
 
 
 def test_fused_fingerprints_prunes_unused_page_columns(spark, tmp_path):

@@ -17,6 +17,7 @@ from datetime import datetime, timedelta
 import pyarrow.parquet as pq
 import pytest
 
+from courlan_spark.operators import dedup
 from courlan_spark.operators import incremental as inc
 from courlan_spark.plans import pipeline as P
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
@@ -271,15 +272,17 @@ def test_delta_bridging_two_old_clusters(spark, tmp_path):
     assert segment == new_ids | relabelled
 
 
-def test_changed_and_overlay_compose_to_merge_assignments(spark):
-    "merge_assignments is overlay(old, changed(...)); changed carries columns."
+def test_cluster_assignments_store_side_composes_with_overlay(spark):
+    """With a store side, cluster_assignments gives the changed rows in
+    the store table's columns, and overlaying them on that table equals
+    the store-less labelling of the union."""
     old = spark.createDataFrame(
         [(10, "u10", 10), (11, "u11", 10), (20, "u20", 20), (21, "u21", 20), (30, "u30", 30)],
         "doc_id long, norm_url string, cluster_id long",
     )
     new_docs = spark.createDataFrame([(40, "u40")], "doc_id long, norm_url string")
     pairs = spark.createDataFrame([(11, 40), (21, 40)], "doc_a long, doc_b long")
-    changes = inc.changed(old, new_docs, pairs)
+    changes = dedup.cluster_assignments(new_docs, pairs, old_assignments=old)
     assert changes.columns == old.columns
     assert sorted(tuple(r) for r in changes.collect()) == [
         (20, "u20", 10), (21, "u21", 10), (40, "u40", 10)
@@ -289,6 +292,11 @@ def test_changed_and_overlay_compose_to_merge_assignments(spark):
         (10, "u10", 10), (11, "u11", 10), (20, "u20", 10), (21, "u21", 10),
         (30, "u30", 30), (40, "u40", 10),
     }
+    # the old table's evidence, as its membership edges, plus the new pairs
+    everything = old.select("doc_id").unionByName(new_docs.select("doc_id"))
+    all_pairs = pairs.unionByName(
+        old.where("doc_id != cluster_id").selectExpr("cluster_id AS doc_a", "doc_id AS doc_b")
+    )
     assert {(d, c) for d, _, c in merged} == {
-        tuple(r) for r in inc.merge_assignments(old, new_docs, pairs).collect()
+        tuple(r) for r in dedup.cluster_assignments(everything, all_pairs).collect()
     }

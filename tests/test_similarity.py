@@ -82,9 +82,9 @@ def test_ivf_deterministic(spark, emb):
 
 
 def test_incremental_embedding_neardup_equals_batch_restriction(spark, emb):
-    """The delta-vs-store embedding near-dup equals the batch operator's
-    pair set restricted to pairs touching a new vector (same full-recall
-    bucket config), and never emits an old-old pair."""
+    """The embedding near-dup with a store side equals the batch
+    operator's pair set restricted to pairs touching a new vector (same
+    full-recall bucket config), and never emits an old-old pair."""
     new = emb.where("vec_id % 4 = 0")
     old = emb.where("vec_id % 4 != 0")
     batch = {
@@ -96,8 +96,9 @@ def test_incremental_embedding_neardup_equals_batch_restriction(spark, emb):
     expected = {(a, b) for a, b in batch if a % 4 == 0 or b % 4 == 0}
     got = {
         (r["id_a"], r["id_b"])
-        for r in similarity.incremental_embedding_neardup(
-            new, old, dim=64, threshold=0.35, planes=4, tables=48, round_decimals=4
+        for r in similarity.embedding_neardup_pairs(
+            new, dim=64, threshold=0.35, planes=4, tables=48, round_decimals=4,
+            old_vectors=old,
         ).collect()
     }
     assert got == expected
@@ -109,8 +110,9 @@ def test_embedding_neardup_inline_dispatch_row_identical(spark, emb):
     the single bucket exchange — taken when the caller's n_vectors hint
     says the whole corpus is small) must be ROW-IDENTICAL to the
     ids-only + attach shape (the no-hint default, which
-    test_plan_shapes pins as shipping ids only), and the dispatch must
-    pick ids-only without a hint or beyond the payload bound."""
+    test_plan_shapes pins as shipping ids only), also with a store side,
+    and the dispatch must pick ids-only without a hint or beyond the
+    payload bound."""
     from courlan_spark.operators.similarity import embedding_neardup_pairs
 
     kwargs = dict(dim=64, threshold=0.35, planes=4, tables=8, round_decimals=4)
@@ -125,6 +127,11 @@ def test_embedding_neardup_inline_dispatch_row_identical(spark, emb):
     assert len(expected) > 0
     assert rows(inline) == expected
     assert rows(hinted) == expected
+    # with a store side: the pairs touching a new vector
+    new, old = emb.where("vec_id % 4 = 0"), emb.where("vec_id % 4 != 0")
+    assert rows(
+        embedding_neardup_pairs(new, old_vectors=old, inline_payload=True, **kwargs)
+    ) == [r for r in expected if r[0] % 4 == 0 or r[1] % 4 == 0]
 
     # the hinted small corpus takes the inline plan: a single bucket
     # exchange, no join anywhere (pair expansion is native array code)

@@ -291,129 +291,6 @@ def test_streaming_first_seen_state_survives_restart(spark, tmp_path):
     assert got2 == {"k1": "first", "k2": "other", "k3": "fresh"}
 
 
-def test_streaming_minhash_candidates_incremental(spark, tmp_path):
-    """Streaming LSH candidates: near-dup pairs surface both within a
-    micro-batch and ACROSS batches (per-bucket state carries earlier
-    members), and match the batch LSH candidate set on the same docs."""
-    from courlan_spark.operators import dedup
-    from courlan_spark.streaming.stateful import streaming_minhash_candidates
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the rain in "
-        "spain stays mainly in the plain and the band plays on and on"
-    )
-    uniq = [
-        "completely different content about astronomy and telescopes number one",
-        "another unrelated text describing cooking recipes and kitchen tools",
-    ]
-    rows_b1 = [(1, base), (2, base + " extra tail"), (3, uniq[0])]
-    rows_b2 = [(4, base + " extra tail!"), (5, uniq[1])]
-    schema = "doc_id long, text string"
-
-    src = tmp_path / "mh_src"
-    src.mkdir()
-    spark.createDataFrame(rows_b1, schema).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(rows_b2, schema).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    cands = streaming_minhash_candidates(stream)
-    q = (
-        cands.writeStream.format("memory")
-        .queryName("mh_cands")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "mh_ck"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in spark.sql("SELECT doc_a, doc_b FROM mh_cands").collect()
-    }
-
-    # batch-path candidates over the same corpus are the oracle
-    docs = spark.createDataFrame(rows_b1 + rows_b2, schema)
-    sigs = dedup.minhash_signatures(docs)
-    batch_pairs, _ = dedup.lsh_candidate_pairs(sigs)
-    expected = {(r["doc_a"], r["doc_b"]) for r in batch_pairs.collect()}
-
-    assert got == expected
-    assert (1, 2) in got           # within batch 1
-    assert (1, 4) in got and (2, 4) in got   # across batches via state
-
-
-def test_streaming_neardup_pipeline_matches_batch(spark, tmp_path):
-    """End-to-end streaming near-dup: candidates from bucket state,
-    exact-Jaccard verify in foreachBatch — verified pairs equal the
-    batch pipeline's on the same corpus."""
-    from courlan_spark.operators import dedup
-    from courlan_spark.streaming.stateful import start_streaming_neardup
-
-    base = (
-        "shared boilerplate paragraph that repeats nearly verbatim across "
-        "these documents with only minor edits at the end of the text body"
-    )
-    rows_b1 = [
-        (1, base + " first"),
-        (2, base + " second"),
-        (3, "a totally different document about gardening and soil quality"),
-    ]
-    rows_b2 = [
-        (4, base + " fourth"),
-        (5, "yet another unrelated text on medieval history and castles"),
-    ]
-    schema = "doc_id long, text string"
-    all_rows = rows_b1 + rows_b2
-
-    src = tmp_path / "nd_src"
-    src.mkdir()
-    spark.createDataFrame(rows_b1, schema).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(rows_b2, schema).coalesce(1).write.parquet(str(src / "f2"))
-    # the accumulated document store (what ingest would have persisted)
-    docs_path = str(tmp_path / "nd_docs")
-    spark.createDataFrame(all_rows, schema).write.parquet(docs_path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    out = str(tmp_path / "nd_out")
-    q = start_streaming_neardup(
-        stream, docs_path, out, str(tmp_path / "nd_ck"), threshold=0.6
-    )
-    q.awaitTermination(180)
-
-    from courlan_spark.streaming.stateful import read_verified_pairs
-
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in read_verified_pairs(spark, out).collect()
-    }
-    # sink layout is per-batch-id directories (idempotent on retry:
-    # a re-run of a batch OVERWRITES its own directory)
-    import os
-
-    batch_dirs = [d for d in os.listdir(out) if d.startswith("batch_id=")]
-    assert len(batch_dirs) >= 2  # one per micro-batch that verified
-    # batch oracle: same corpus through the batch LSH + verify path
-    docs = spark.createDataFrame(all_rows, schema)
-    sigs = dedup.minhash_signatures(docs)
-    pairs, _ = dedup.lsh_candidate_pairs(sigs)
-    expected = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.verify_pairs_jaccard(pairs, docs, threshold=0.6)
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    assert got == expected
-    assert (1, 4) in got  # cross-batch verified pair
-
-
 def test_user_session_windows_streaming_closed_sessions(spark, tmp_path):
     """Native session windows on a file stream: append mode emits
     exactly the sessions the watermark has closed, each equal to the
