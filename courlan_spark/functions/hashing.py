@@ -8,7 +8,7 @@ decode, which is a single vectorized ``frombuffer`` per document.
 
 Design notes for 100 TB scale:
 * shingle hashes are 32-bit values produced by a vectorized rolling
-  polynomial over UTF-32 codepoints (sliding_window_view @ powers);
+  polynomial over UTF-32 codepoints (_rolling_hashes);
 * MinHash uses the classic (a*x + b) mod p family with p = 2^61-1;
   products stay < 2^63 because a,b < 2^31 and x < 2^32 — no overflow
   in uint64 arithmetic, no Python bigints;
@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from numpy.lib.stride_tricks import sliding_window_view
 
 MERSENNE61 = (1 << 61) - 1
 _SHINGLE_BASE = np.uint64(1000003)
@@ -249,19 +248,6 @@ def simhash64_from_features(features: np.ndarray) -> int:
 def hamming64(x: int, y: int) -> int:
     "Hamming distance between two 64-bit fingerprints."
     return int(bin((x ^ y) & 0xFFFFFFFFFFFFFFFF).count("1"))
-
-
-def simhash_blocks(fingerprint: int, blocks: int = 4) -> list[int]:
-    """Split a 64-bit fingerprint into `blocks` equal bit-blocks; by
-    pigeonhole, two fingerprints within hamming distance blocks-1
-    share at least one block value — the SimHash LSH bucketing key."""
-    width = 64 // blocks
-    mask = (1 << width) - 1
-    unsigned = fingerprint & 0xFFFFFFFFFFFFFFFF
-    return [
-        ((unsigned >> (i * width)) & mask) | (i << (width + 1))
-        for i in range(blocks)
-    ]
 
 
 # --- pandas UDF factories (imported lazily by the operators layer) ------

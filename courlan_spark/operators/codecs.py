@@ -3,11 +3,13 @@
 The container ships no Pillow/ffmpeg, but uncompressed formats need
 no codec library at all — a BMP is a header plus padded BGR rows and
 a PCM WAV is a RIFF header plus interleaved samples.  These decoders
-make the multimodal pipeline's decode/resize/feature stages REAL for
-those formats (parsed pixels/samples in, measured statistics out);
+make the media feature pass (operators/multimodal.py) REAL for those
+formats (parsed pixels/samples in, measured statistics out);
 compressed formats (JPEG/PNG/MP3/MP4) still route to the
-clearly-marked stubs in operators/multimodal.py, which a production
+clearly-marked stub in operators/multimodal.py, which a production
 deployment swaps for Pillow/ffmpeg kernels with no plan changes.
+``encode_bmp`` is the inverse of ``decode_bmp``; it builds test
+fixtures.
 
 Format references are the public specifications: Windows
 BITMAPFILEHEADER/BITMAPINFOHEADER layout for BMP, and the RIFF/WAVE
@@ -90,14 +92,6 @@ def encode_bmp(rgb: np.ndarray) -> bytes:
         2835, 2835, 0, 0,
     )
     return header + pixel_bytes
-
-
-def resize_nearest(rgb: np.ndarray, width: int, height: int) -> np.ndarray:
-    "Nearest-neighbor resize via index maps — no interpolation library."
-    src_h, src_w = rgb.shape[:2]
-    row_idx = (np.arange(height) * src_h // height).clip(0, src_h - 1)
-    col_idx = (np.arange(width) * src_w // width).clip(0, src_w - 1)
-    return rgb[row_idx][:, col_idx]
 
 
 def image_features(rgb: np.ndarray) -> list[float]:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.url_udfs import host_path_udf, make_buffer_url_udf, make_check_url_udf
+from ..functions.url_udfs import host_path_udf, make_buffer_url_udf
 
 
 def with_input_ordinal(df: DataFrame, col: str = "_ordinal") -> DataFrame:
@@ -196,22 +196,6 @@ def merge_new_urls(frontier: DataFrame, batch: DataFrame) -> DataFrame:
     # batch does not (host_ts stamped by mark_visited, busted markers
     # from discard_hosts) — new rows take nulls there
     return frontier.unionByName(fresh, allowMissingColumns=True)
-
-
-def dedup_variants(frontier: DataFrame) -> DataFrame:
-    """Batch-global variant collapse: all ±trailing-slash variants of a
-    path reduce to the earliest row.  Strictly stronger than the
-    reference's insert-time behavior (which keeps within-batch
-    variants — see exact_path_dedup/merge_new_urls); useful when the
-    whole frontier is rebuilt at once."""
-    w = Window.partitionBy("host", _canon_path()).orderBy(
-        F.col("priority").desc(), F.col("seq").asc()
-    )
-    return (
-        frontier.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def _busted_col(frontier: DataFrame):

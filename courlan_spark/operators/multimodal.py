@@ -1,17 +1,18 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Media feature extraction over opaque binary payloads.
 
-Images/audio/video ride as `binary` columns with a metadata struct;
-decode/feature stages are Arrow-batched mapInPandas passes.
+Images/audio/video ride as `binary` columns (``media_id``, ``kind``,
+``payload``); ``extract_media_features``, which the catalog's
+``q_media_features`` runs, is an Arrow-batched mapInPandas pass.
 
-Since round 4 the decode path is REAL for uncompressed containers —
-24-bit BMP pixels and 8/16-bit PCM WAV samples parse with pure numpy
+The decode path is REAL for uncompressed containers — 24-bit BMP
+pixels and 8/16-bit PCM WAV samples parse with pure numpy
 (operators/codecs.py: header walk, padded-row/chunk layout, measured
-per-channel / time-slice statistics as the feature vector, true
-nearest-neighbor resize).  Compressed formats (JPEG/PNG/MP3/MP4) have
-no codec library in this container and route to the clearly-marked
-deterministic stubs below; a production deployment swaps the stubs
-for Pillow/ffmpeg kernels with no plan changes — schema, batch shape
-and partition sizing are identical either way.
+per-channel / time-slice statistics as the feature vector).
+Compressed formats (JPEG/PNG/MP3/MP4) have no codec library in this
+container and route to the clearly-marked deterministic stub below; a
+production deployment swaps the stub for Pillow/ffmpeg kernels with
+no plan changes — schema, batch shape and partition sizing are
+identical either way.
 """
 
 from __future__ import annotations
@@ -20,14 +21,8 @@ import hashlib
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import codecs
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "width int, height int, duration_ms int"
-)
 
 FEATURE_SCHEMA = "media_id long, kind string, n_bytes int, content_hash string, feature array<float>"
 
@@ -85,124 +80,3 @@ def extract_media_features(media: DataFrame, batch_hint: int = 1024) -> DataFram
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """STUB: deterministic fake 'resized' payload (truncated digest of
-    payload + target box) — fallback for COMPRESSED formats only.  A
-    real deployment decodes, resizes with Pillow/libvips, and
-    re-encodes; schema and batch shape are final."""
-    digest = hashlib.blake2b(
-        (payload or b"") + f"{width}x{height}".encode(), digest_size=64
-    ).digest()
-    return digest
-
-
-def _resize_payload(payload: bytes, width: int, height: int) -> bytes:
-    """REAL decode -> nearest-neighbor resize -> re-encode for BMP
-    payloads (pure numpy, codecs.py); stub for compressed formats."""
-    try:
-        if codecs.is_bmp(payload):
-            return codecs.encode_bmp(
-                codecs.resize_nearest(codecs.decode_bmp(payload), width, height)
-            )
-    except codecs.UnsupportedMediaError:
-        pass
-    return _resize_stub(payload, width, height)
-
-
-def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Arrow-batched resize pass: payload -> resized payload with the
-    metadata struct updated to the target box.  Image rows only; other
-    kinds pass through untouched."""
-
-    def run(iterator):
-        for pdf in iterator:
-            payloads = []
-            widths = []
-            heights = []
-            for p, k, w0, h0 in zip(
-                pdf["payload"], pdf["kind"], pdf["width"], pdf["height"]
-            ):
-                raw = p if isinstance(p, (bytes, bytearray)) else b""
-                if k == "image":
-                    payloads.append(_resize_payload(raw, width, height))
-                    widths.append(width)
-                    heights.append(height)
-                else:
-                    payloads.append(raw)
-                    widths.append(w0)
-                    heights.append(h0)
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["width"] = pd.array(widths, dtype="Int32")
-            out["height"] = pd.array(heights, dtype="Int32")
-            yield out
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = "media_id long, frame_idx int, ts_ms int, frame binary"
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling pass: each video row explodes into one row per
-    sampled timestamp (0, every_ms, 2*every_ms, ... < duration_ms).
-    The frame payload is a deterministic stub (no codecs in this
-    container); the fan-out shape — one input row to duration/every_ms
-    output rows, Arrow-batched — is the real production plan, and a
-    ffmpeg-backed kernel drops in without plan changes."""
-
-    def run(iterator):
-        for pdf in iterator:
-            rows = []
-            for mid, kind, p, dur in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if kind != "video" or not dur or dur <= 0:
-                    continue
-                raw = p if isinstance(p, (bytes, bytearray)) else b""
-                for idx, ts in enumerate(range(0, int(dur), every_ms)):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": idx,
-                            "ts_ms": ts,
-                            "frame": hashlib.blake2b(
-                                raw + ts.to_bytes(8, "little"), digest_size=32
-                            ).digest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "ts_ms", "frame"]
-            )
-
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def media_neardup_pairs(
-    media: DataFrame, threshold: float = 0.9, max_bucket_size: int | None = 2000
-) -> DataFrame:
-    """Near-duplicate media via cosine over the decoded feature vector
-    (hyperplane-LSH buckets + exact rescore — the embedding near-dup
-    operator applied to the media feature column)."""
-    from .similarity import embedding_neardup_pairs
-
-    feats = extract_media_features(media).select(
-        F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding")
-    )
-    return embedding_neardup_pairs(
-        feats, dim=8, threshold=threshold, max_bucket_size=max_bucket_size
-    )
-
-
-def exact_media_dedup(media: DataFrame) -> DataFrame:
-    "Exact binary dedup on content hash (native md5 + hash-agg)."
-    return (
-        media.withColumn("content_hash", F.md5(F.col("payload")))
-        .groupBy("content_hash")
-        .agg(
-            F.min("media_id").alias("keeper_id"),
-            F.count("*").alias("n_copies"),
-        )
-    )

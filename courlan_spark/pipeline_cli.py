@@ -18,11 +18,12 @@ store — operators/incremental.py):
 
 `--store-workdir` may repeat (oldest first) to chain delta batches;
 the run writes delta-scoped snapshots, so its own workdir becomes the
-next chain link.  Its 09_assignments is a segment: only the rows the
-delta changed (the delta's docs and the old docs it relabelled); the
-merged table is `FingerprintStore.from_workdirs(spark, <store
-workdirs>, <workdir>).assignments`, and the summary's `n_output`
-counts it.
+next chain link.  The delta's shuffle width is sized to its row count
+(`run_incremental`'s docstring says how).  Its 09_assignments is a
+segment: only the rows the delta changed (the delta's docs and the
+old docs it relabelled); the merged table is
+`FingerprintStore.from_workdirs(spark, <store workdirs>,
+<workdir>).assignments`, and the summary's `n_output` counts it.
 
 Input: a parquet table shaped (url string, warc_ts timestamp,
 html binary, text string, lang string) — the Common-Crawl-style page
@@ -72,12 +73,6 @@ def parse_args(args: list[str] | None = None) -> argparse.Namespace:
         "--store-workdir", action="append", default=None,
         help="run incrementally: fingerprint-store workdir(s) of the "
         "base run and any earlier deltas, oldest first (repeatable)",
-    )
-    parser.add_argument(
-        "--delta-shuffle-partitions", type=int, default=None,
-        help="incremental runs: pin the delta's shuffle width (default "
-        "auto = clamp(delta_rows/1000, 8, session width) — a delta job "
-        "sized to the cluster pays the per-task floor on every stage)",
     )
     parser.add_argument(
         "-p", "--parallel", type=int, default=None,
@@ -131,16 +126,7 @@ def run(args: argparse.Namespace, spark=None) -> dict:
             from .plans.pipeline import FingerprintStore
 
             store = FingerprintStore.from_workdirs(spark, *args.store_workdir)
-            summary = pipeline.run_incremental(
-                page_cols,
-                store,
-                resume=args.resume,
-                shuffle_partitions=(
-                    args.delta_shuffle_partitions
-                    if args.delta_shuffle_partitions is not None
-                    else "auto"
-                ),
-            )
+            summary = pipeline.run_incremental(page_cols, store, resume=args.resume)
         else:
             summary = pipeline.run(page_cols, resume=args.resume)
         return summary

@@ -111,6 +111,15 @@ class FingerprintStore:
         "min_tokens", "max_tokens", "min_alpha_ratio",
     )
 
+    @classmethod
+    def _key_diff(cls, ours: dict, theirs: dict) -> dict:
+        "KEY_FIELDS on which two configs disagree, as (ours, theirs) pairs."
+        return {
+            k: (ours.get(k), theirs.get(k))
+            for k in cls.KEY_FIELDS
+            if ours.get(k) != theirs.get(k)
+        }
+
     def check_config(self, cfg: "DedupConfig") -> None:
         """Raise when ``cfg`` disagrees with the store's recorded
         config on any key-affecting field.  A store without a recorded
@@ -118,11 +127,7 @@ class FingerprintStore:
         hand) passes with no check — the caller owns the invariant."""
         if self.config is None:
             return
-        mismatches = {
-            k: (self.config.get(k), getattr(cfg, k))
-            for k in self.KEY_FIELDS
-            if self.config.get(k) != getattr(cfg, k)
-        }
+        mismatches = self._key_diff(self.config, vars(cfg))
         if mismatches:
             raise ValueError(
                 "incremental config disagrees with the fingerprint "
@@ -200,11 +205,7 @@ class FingerprintStore:
         # chained batches must agree on key fields among themselves too
         configs = [s.config for s in stores if s.config is not None]
         for other in configs[1:]:
-            diff = {
-                k: (configs[0].get(k), other.get(k))
-                for k in cls.KEY_FIELDS
-                if configs[0].get(k) != other.get(k)
-            }
+            diff = cls._key_diff(configs[0], other)
             if diff:
                 raise ValueError(
                     f"chained store workdirs disagree on key fields {diff}"
@@ -252,10 +253,8 @@ SEGMENT_BOUND = 8
 FILE_ROWS = 1_000_000
 
 
-def _sized_for(df: DataFrame, rows: int | None) -> DataFrame:
-    "``df`` in one partition per FILE_ROWS of ``rows``; as is when unknown."
-    if rows is None:
-        return df
+def _sized_for(df: DataFrame, rows: int) -> DataFrame:
+    "``df`` in one partition per FILE_ROWS of ``rows``."
     return df.coalesce(max(1, -(-rows // FILE_ROWS)))
 
 
@@ -496,7 +495,10 @@ class DedupPipeline:
         error does not replace the run's) and appends one metrics line
         naming the stage it failed in, and every frame the run
         persisted is unpersisted without blocking; a successful run
-        joined its writes before writing its summary."""
+        joined its writes before writing its summary.  Each run records
+        its stages in a list of its own: a second run on this object
+        neither repeats the first run's stages nor grows its summary."""
+        self.metrics = []
         self._pending_writes.clear()
         self._counted.clear()
         try:
@@ -578,7 +580,6 @@ class DedupPipeline:
         new_pages: DataFrame,
         store: FingerprintStore,
         resume: bool = False,
-        shuffle_partitions: int | str | None = "auto",
     ) -> dict:
         """Dedup a DELTA batch against a FingerprintStore and emit the
         MERGED cluster table — the daily-ingest path: the only pass
@@ -612,39 +613,30 @@ class DedupPipeline:
         is the store for the NEXT delta — store files are immutable,
         each batch adds its own (the Iceberg-snapshot shape).
 
-        ``shuffle_partitions`` right-sizes the session's shuffle width
-        to the DELTA's row count for the duration of the run (restored
-        after).  Default "auto" = clamp(ceil(rows/1000), 8, session
-        default).  Why this exists: a delta job inherits the session's
-        cluster-wide shuffle width, and AQE's partition coalescing
+        The run right-sizes the session's shuffle width to the DELTA's
+        row count, clamp(ceil(rows/1000), 8, session width), and
+        restores it after.  A delta job would otherwise inherit the
+        session's cluster-wide width, and AQE's partition coalescing
         will not shrink below defaultParallelism
         (coalescePartitions.parallelismFirst=true), so a 12k-row delta
         on a 32-core session runs every stage as 32 ~375-row tasks and
         pays the per-task floor 32x per stage — measured 42s at
         local[32] default vs 24.5s with 16 shuffle partitions (same
-        session width; PLANS.md, round-5 decisions).  At production
-        scale the same rule holds: size a delta job's shuffle width to
-        the delta, not the cluster.  Pass None to leave the session
-        untouched, or an int to pin it."""
+        session width; PLANS.md, round-5 decisions).  The count also
+        sizes the store-side prune gate and the 09 segment's files."""
         store.check_config(self.config)
 
         session_width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._delta_rows = None
-        if shuffle_partitions == "auto":
-            # delta-scale count: reads only parquet footers / the
-            # filter column, never text
-            n_delta = new_pages.count()
-            self._delta_rows = n_delta
-            shuffle_partitions = min(
-                session_width, max(8, -(-n_delta // 1000))
-            )
-        if shuffle_partitions is not None and shuffle_partitions != session_width:
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        self._delta_shuffle_partitions = (
-            shuffle_partitions if shuffle_partitions is not None else session_width
+        # delta-scale count: reads only parquet footers / the filter
+        # column, never text
+        self._delta_rows = new_pages.count()
+        self._delta_shuffle_partitions = min(
+            session_width, max(8, -(-self._delta_rows // 1000))
         )
+        if self._delta_shuffle_partitions != session_width:
+            self.spark.conf.set(
+                "spark.sql.shuffle.partitions", str(self._delta_shuffle_partitions)
+            )
         self._store = store
         try:
             with self._run_scope():
@@ -779,12 +771,8 @@ class DedupPipeline:
             # bucket keys must comfortably fit a broadcast before the
             # store side may be semi-join-pruned ahead of its exchange.
             # The MinHash and SimHash legs carry <= rows x max(bands, 20)
-            # keys.  An unknown count (caller pinned the shuffle width)
-            # keeps the always-safe union shape.
-            prune_old = (
-                self._delta_rows is not None
-                and self._delta_rows * max(cfg.bands, 20) <= BROADCAST_KEY_BUDGET
-            )
+            # keys.
+            prune_old = self._delta_rows * max(cfg.bands, 20) <= BROADCAST_KEY_BUDGET
             # a winnow key set is hundreds of keys per multi-KB doc, far
             # past rows x bands, so that leg is gated on its own count.
             # A built 04 ran its count job, so its row is on the way; a
@@ -898,7 +886,7 @@ class DedupPipeline:
         # 05 is submitted first and keeps FIFO priority.  03 materializes
         # INSIDE the group: as an ephemeral frame it was recomputed
         # inside the full run's clustering — ~0.9-1.4 s of md5+groupBy+
-        # join on the post-overlap critical path (tools/exp_r06_stage08.py);
+        # join on the post-overlap critical path (OPTIMIZATION_r06.md, row 11);
         # it only needs the 04 frame's stored hashes.
         # A delta's exact-text and SimHash pairs come from stored keys
         # and are counted only by 08_evidence in "minimal" mode.
@@ -979,12 +967,10 @@ class DedupPipeline:
                 if compact:
                     return inc.overlay(view, changes)
                 # a segment holds the delta's new docs and the old docs
-                # their evidence relabels; sized by the counts the run
-                # took (none when the caller pinned the shuffle width)
-                rows = self._delta_rows
-                if rows is not None:
-                    rows += self._counted.get("08_evidence", 0)
-                return _sized_for(changes, rows)
+                # their evidence relabels, so those counts size it
+                return _sized_for(
+                    changes, self._delta_rows + self._counted.get("08_evidence", 0)
+                )
 
         # ---- final output: url -> cluster, a snapshot in every mode ----
         output = stage("09_assignments", build_output, Plan(SNAPSHOT, SNAPSHOT))

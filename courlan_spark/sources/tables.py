@@ -135,24 +135,6 @@ def has_snapshot(target: str) -> bool:
     return os.path.exists(os.path.join(target, "_SUCCESS"))
 
 
-def table_exists(spark: SparkSession, target: str) -> bool:
-    """True when the table holds committed data.  On the iceberg
-    backend this asks the catalog; on the parquet backend it asks the
-    HADOOP FILESYSTEM layer (not os.path — the target may live on an
-    object store: s3a://, gs://, hdfs:// all resolve through the same
-    API), looking for a _SUCCESS marker or any parquet part file."""
-    if TABLE_FORMAT == "iceberg":
-        return spark.catalog.tableExists(target)
-    fs, path = _hadoop_path(spark, target)
-    if not fs.exists(path):
-        return False
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name == "_SUCCESS" or name.endswith(".parquet"):
-            return True
-    return False
-
-
 def _hadoop_path(spark: SparkSession, target: str):
     "(FileSystem, Path) of ``target`` through the Hadoop FileSystem API."
     path = spark._jvm.org.apache.hadoop.fs.Path(target)

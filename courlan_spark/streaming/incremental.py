@@ -80,7 +80,6 @@ def start_incremental_cluster_stream(
     checkpoint_path: str,
     config=None,
     trigger_once: bool = True,
-    shuffle_partitions: int | str | None = "auto",
 ):
     """Start the continuous-clustering stream.  ``pages_stream`` must
     carry the north-rule pages shape (url, warc_ts, html, text, lang);
@@ -89,8 +88,8 @@ def start_incremental_cluster_stream(
 
     Empty micro-batches are ignored without committing a workdir (a
     committed-but-empty dir would break the store chain's snapshot
-    reads).  ``shuffle_partitions`` is forwarded to run_incremental —
-    the delta right-sizing rule applies per micro-batch."""
+    reads).  run_incremental sizes each micro-batch's shuffle width
+    to the batch."""
     from ..plans.pipeline import DedupConfig
 
     cfg = config or DedupConfig()
@@ -98,9 +97,7 @@ def start_incremental_cluster_stream(
     _bind_checkpoint(out_root, checkpoint_path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _ingest_batch(
-            batch_df, batch_id, base_workdir, out_root, cfg, shuffle_partitions
-        )
+        _ingest_batch(batch_df, batch_id, base_workdir, out_root, cfg)
 
     writer = pages_stream.writeStream.foreachBatch(ingest).option(
         "checkpointLocation", checkpoint_path
@@ -116,7 +113,6 @@ def _ingest_batch(
     base_workdir: str,
     out_root: str,
     cfg,
-    shuffle_partitions,
 ) -> None:
     """One micro-batch: skip if its commit marker exists (foreachBatch
     redelivery — the marker check runs BEFORE any evaluation of
@@ -135,7 +131,7 @@ def _ingest_batch(
     chain = [base_workdir] + _committed_deltas(out_root)
     store = FingerprintStore.from_workdirs(spark, *chain)
     pipe = DedupPipeline(spark, workdir, cfg)
-    pipe.run_incremental(batch_df, store, shuffle_partitions=shuffle_partitions)
+    pipe.run_incremental(batch_df, store)
     with open(marker, "w") as fh:
         fh.write("")
 

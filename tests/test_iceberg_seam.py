@@ -5,7 +5,7 @@ on the seam's parquet backend everywhere else in this suite.  This
 test PROVES the switch point instead of assuming it: when an
 iceberg-spark-runtime jar is present (a real cluster, or a dev box
 with the jar dropped into pyspark's jars/), the same seam calls —
-write_snapshot / append_rows / read_snapshot / table_exists —
+write_snapshot / append_rows / read_snapshot —
 execute against a real Iceberg hadoop catalog in a fresh subprocess
 (Iceberg session extensions must be set before JVM start, so the
 suite's shared session cannot be reused).
@@ -61,7 +61,6 @@ assert tables.TABLE_FORMAT == "iceberg"
 name = "local.db.seam_dryrun"
 df = spark.range(0, 10).selectExpr("id", "id * 2 AS twice")
 tables.write_snapshot(df, name)                      # CREATE OR REPLACE
-assert tables.table_exists(spark, name)
 assert tables.read_snapshot(spark, name).count() == 10
 tables.append_rows(df.where("id < 3"), name)         # MERGE-shaped append
 assert tables.read_snapshot(spark, name).count() == 13

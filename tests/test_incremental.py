@@ -51,11 +51,12 @@ def test_base_plus_delta_equals_full_run(spark):
 
 def test_delta_shuffle_width_auto_sized_and_restored(spark):
     """run_incremental right-sizes the session's shuffle width to the
-    delta's row count (clamp(ceil(rows/1000), 8, session default)) and
+    delta's row count (clamp(ceil(rows/1000), 8, session width)) and
     restores the session conf afterwards — the fix for the r4 wide-
     session cliff, where a 12k-row delta on 32 cores ran every stage
     as 32 tiny tasks (AQE coalescing won't go below
-    defaultParallelism).  Pinned ints and None are honored too."""
+    defaultParallelism).  A session narrower than the clamp's floor
+    keeps its own width, and the clusters do not depend on it."""
     full = generate_pages(spark, 600).cache()
     base = full.where("doc_id < 400")
     delta = full.where("doc_id >= 400")  # 200 rows -> auto width 8
@@ -72,15 +73,14 @@ def test_delta_shuffle_width_auto_sized_and_restored(spark):
         assert pipe_auto._delta_shuffle_partitions == min(int(before), 8)
         assert spark.conf.get(key) == before
 
-        pipe_pin = DedupPipeline(spark, dirs[2], cfg)
-        pipe_pin.run_incremental(
-            pages_view(delta), store, shuffle_partitions=5
-        )
-        assert pipe_pin._delta_shuffle_partitions == 5
-        assert spark.conf.get(key) == before
+        spark.conf.set(key, "5")
+        pipe_narrow = DedupPipeline(spark, dirs[2], cfg)
+        pipe_narrow.run_incremental(pages_view(delta), store)
+        assert pipe_narrow._delta_shuffle_partitions == 5
+        assert spark.conf.get(key) == "5"
 
         # identical clusters regardless of shuffle width
-        assert _assignments(pipe_auto) == _assignments(pipe_pin)
+        assert _assignments(pipe_auto) == _assignments(pipe_narrow)
     finally:
         spark.conf.set(key, before)
         for d in dirs:

@@ -55,12 +55,6 @@ def test_simhash_hamming_tracks_similarity():
     assert H.hamming64(f_base, f_base) == 0
 
 
-def test_simhash_blocks_pigeonhole():
-    a = 0b1010_1111
-    b = a ^ 0b111  # 3 bit flips -> must share >= 1 of 4 blocks
-    assert set(H.simhash_blocks(a)) & set(H.simhash_blocks(b))
-
-
 def test_lcs_exact():
     assert longest_common_substring("abcdef", "zabcq") == 3
     assert longest_common_substring("abc", "xyz") == 0

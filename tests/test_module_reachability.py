@@ -1,11 +1,18 @@
-"""Every engine module is reachable from an entry point.
+"""Every engine module and every top-level def in it is reachable.
 
-The import statements of the entry points below are walked with
-``ast``: nothing is imported and no Spark session starts.  A module of
-``courlan_spark`` that no entry point reaches, directly or through
-other modules, fails the test unless ``ALLOWED`` names it with a
-reason.  Imports inside functions count; imports built from strings
-do not.  Whether each def of a reached module is used is not checked.
+The entry points below are walked with ``ast``: nothing is imported
+and no Spark session starts.  A module of ``courlan_spark`` that no
+entry point reaches, directly or through other modules, fails unless
+``ALLOWED`` names it with a reason.  Imports inside functions count;
+imports built from strings do not.
+
+A top-level ``def`` or ``class`` of a reached module fails unless
+another reached file (the entry points included) names it, as a
+name, an attribute, an imported name or a string constant (which
+covers ``QUERIES``-style lookups); or its own module names it outside
+its own body (a call, a registry entry, an assignment); or
+``ALLOWED_DEFS`` names it with a reason.  An allowlist entry that
+names something reached, used or gone fails too.
 """
 
 import ast
@@ -32,8 +39,38 @@ ALLOWED = {
         "robots.txt rule tables for the crawl frontier; no entry point filters by robots.txt yet",
     "courlan_spark.streaming.incremental":
         "the streamed near-dup path (start_incremental_cluster_stream); only tests start it",
-    "courlan_spark.streaming.ingest":
-        "the streaming frontier ingest; only tests start it",
+}
+
+_URLSTORE = "mirrors courlan's UrlStore {} (SURVEY.md §1), the paper's frontier surface"
+ALLOWED_DEFS = {
+    **{
+        f"courlan_spark.operators.frontier.{name}": _URLSTORE.format(method)
+        for name, method in {
+            "merge_new_urls": "add_urls",
+            "mark_visited": "get_url (its visit marking)",
+            "reset_frontier": "reset",
+            "known_domains": "get_known_domains",
+            "unvisited_websites_number": "unvisited_websites_number",
+            "total_url_number": "total_url_number",
+            "is_exhausted_domain": "is_exhausted_domain",
+            "find_known_urls": "find_known_urls",
+            "find_unvisited_urls": "find_unvisited_urls",
+            "dump_urls": "dump_urls",
+            "all_visited_counts": "get_all_counts",
+            "is_done": "done flag",
+            "download_threshold_reached": "download_threshold_reached",
+            "save_frontier": "write",
+            "load_frontier": "load_store (a module function)",
+        }.items()
+    },
+    "courlan_spark.functions.native.basic_filter_col":
+        "native Column form of courlan's filters.basic_filter; tests pin it to the scalar",
+    "courlan_spark.functions.hashing.hamming64":
+        "the SimHash distance the tests take as referent",
+    "courlan_spark.operators.similarity.brute_force_topk":
+        "exact top-k, the referent the ANN tests measure recall against",
+    "courlan_spark.operators.codecs.encode_bmp":
+        "builds the BMP fixtures of the decode-path tests",
 }
 
 
@@ -59,8 +96,7 @@ def _path(name: str) -> str | None:
 
 def _imported(rel: str) -> set[str]:
     "Every module name ``rel``'s import statements may load, parents included."
-    with open(os.path.join(REPO, rel)) as fh:
-        tree = ast.parse(fh.read(), rel)
+    tree = _parse(rel)
     name = _name(rel)
     package = name if rel.endswith("__init__.py") else name.rpartition(".")[0]
     names = set()
@@ -79,7 +115,13 @@ def _imported(rel: str) -> set[str]:
     return names | parents
 
 
-def _reached() -> set[str]:
+def _parse(rel: str) -> ast.Module:
+    with open(os.path.join(REPO, rel)) as fh:
+        return ast.parse(fh.read(), rel)
+
+
+def _reached_files() -> set[str]:
+    "The roots and every file their imports reach."
     todo, seen = list(ROOTS), set(ROOTS)
     while todo:
         for name in _imported(todo.pop()):
@@ -87,7 +129,15 @@ def _reached() -> set[str]:
             if rel is not None and rel not in seen:
                 seen.add(rel)
                 todo.append(rel)
-    return {_name(rel) for rel in seen if rel.startswith("courlan_spark" + os.sep)}
+    return seen
+
+
+def _is_engine(rel: str) -> bool:
+    return rel.startswith("courlan_spark" + os.sep)
+
+
+def _reached() -> set[str]:
+    return {_name(rel) for rel in _reached_files() if _is_engine(rel)}
 
 
 def _engine_modules() -> set[str]:
@@ -104,3 +154,49 @@ def test_every_engine_module_is_reached_or_allowed():
     assert not unreached, f"no entry point imports {unreached}; delete them or allow them with a reason"
     stale = sorted(set(ALLOWED) - (modules - reached))
     assert not stale, f"ALLOWED names modules that are reached or gone: {stale}"
+
+
+def _named(tree: ast.AST) -> set[str]:
+    "Every name ``tree`` spells: names, attributes, imported names, string constants."
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rpartition(".")[2])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            names.add(node.value)
+    return names
+
+
+def _unused_defs(files: set[str]) -> set[str]:
+    "Top-level defs of reached engine modules that nothing reached names."
+    trees = {rel: _parse(rel) for rel in files}
+    named = {rel: _named(tree) for rel, tree in trees.items()}
+    unused = set()
+    for rel, tree in trees.items():
+        if not _is_engine(rel):
+            continue
+        elsewhere = set().union(*(names for other, names in named.items() if other != rel))
+        loads = [
+            {n.id for n in ast.walk(stmt) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+            for stmt in tree.body
+        ]
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            own = set().union(*(ids for stmt, ids in zip(tree.body, loads) if stmt is not node))
+            if node.name not in elsewhere and node.name not in own:
+                unused.add(f"{_name(rel)}.{node.name}")
+    return unused
+
+
+def test_every_top_level_def_of_a_reached_module_is_used_or_allowed():
+    unused = _unused_defs(_reached_files())
+    assert "courlan_spark.operators.frontier.is_done" in unused
+    unallowed = sorted(unused - set(ALLOWED_DEFS))
+    assert not unallowed, f"nothing reached uses {unallowed}; delete them or allow them with a reason"
+    stale = sorted(set(ALLOWED_DEFS) - unused)
+    assert not stale, f"ALLOWED_DEFS names defs that are used or gone: {stale}"

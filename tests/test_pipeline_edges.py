@@ -132,3 +132,21 @@ def test_failed_run_joins_its_writes_and_keeps_its_own_error(spark, monkeypatch,
         pipe.run(pages_view(generate_pages(spark, 200)))
     assert pipe._pending_writes == [] and pipe._write_pool is None
     assert persisted and all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+def test_a_second_run_reports_only_its_own_stages(spark, tmp_path):
+    """One pipeline object run twice: the second summary lists each of
+    its stages once, and the first summary's list does not grow."""
+    from courlan_spark.sources.pages import generate_pages, pages_view
+
+    pages = pages_view(generate_pages(spark, 60))
+    pipe = DedupPipeline(
+        spark, str(tmp_path / "run"), DedupConfig(snapshot_mode="minimal"), count_rows=False
+    )
+    first = pipe.run(pages)["stages"]
+    n_first = len(first)
+    second = pipe.run(pages, resume=True)["stages"]
+    names = [record["stage"] for record in second]
+    assert len(names) == len(set(names)), names
+    assert len(first) == n_first
+    assert all(record["resumed"] for record in second if "resumed" in record)

@@ -160,7 +160,6 @@ def test_sized_for_splits_by_file_rows(spark, monkeypatch):
     monkeypatch.setattr(P, "FILE_ROWS", 16)
     assert P._sized_for(df, 40).rdd.getNumPartitions() == 3
     assert P._sized_for(df, 0).rdd.getNumPartitions() == 1
-    assert P._sized_for(df, None).rdd.getNumPartitions() == 8
 
 
 def test_durable_stages_report_the_bytes_they_wrote(chain):

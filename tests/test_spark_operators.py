@@ -147,8 +147,6 @@ def test_scheme_merge_and_variant_dedup(spark):
     )
     merged = frontier.merge_scheme_variants(df)
     assert {r["host"] for r in merged.collect()} == {"https://example.org"}
-    deduped = frontier.dedup_variants(merged)
-    assert sorted(r["path"] for r in deduped.collect()) == ["/a", "/b"]
 
 
 def test_sampling_counts_match_reference_contract(spark):

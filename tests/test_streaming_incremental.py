@@ -113,7 +113,7 @@ def test_streaming_incremental_matches_batch_chain(spark):
         # is None here, so any evaluation would raise
         from courlan_spark.streaming.incremental import _ingest_batch
 
-        _ingest_batch(None, 0, base_dir, out_root, cfg, "auto")
+        _ingest_batch(None, 0, base_dir, out_root, cfg)
         assert _committed_deltas(out_root) == committed
 
         # checkpoint binding: reusing out_root with a FRESH checkpoint
