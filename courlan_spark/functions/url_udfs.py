@@ -24,7 +24,6 @@ import numpy as np
 
 from ..urlkit import (
     check_scrubbed_url,
-    check_url,
     make_check_caches,
     extract_domain,
     extract_links,

@@ -33,8 +33,10 @@ def crawlable_links(
     apply per-host robots rules, and flag navigation links as
     crawl-priority.
 
-    ``robots_rules`` is the (host, rules array<struct<prefix,allow>>)
-    table from operators.robots.robots_tables.  The join is a
+    ``robots_rules`` is the caller's already-parsed (host, rules
+    array<struct<prefix,allow>>) table, ordered as in robots.txt: the
+    analog of courlan's UrlStore holding the RobotFileParser it is
+    handed.  The join is a
     broadcast HASH join on host equality — not a nested-loop prefix
     scan over every rule (the round-1 shape, O(links x rules)) — and
     the verdict is the stdlib RobotFileParser first-match rule,

@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 
 DEFAULT_KGRAM = 25
 DEFAULT_WINDOW = 39  # guarantee threshold: blocks >= 39+25-1 = 63 chars
-_MASK32 = np.uint64(0xFFFFFFFF)
-_BASE = np.uint64(1000003)
 
 
 def _kgram_hashes(text: str, k: int) -> np.ndarray:

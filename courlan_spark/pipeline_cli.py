@@ -61,7 +61,6 @@ def parse_args(args: list[str] | None = None) -> argparse.Namespace:
     parser.add_argument("--bands", type=int, default=32)
     parser.add_argument("--shingle-k", type=int, default=9)
     parser.add_argument("--max-bucket-size", type=int, default=2000)
-    parser.add_argument("--no-simhash", action="store_true")
     parser.add_argument("--min-tokens", type=int, default=None,
                         help="quality gate: drop docs with fewer tokens")
     parser.add_argument("--max-tokens", type=int, default=None,
@@ -102,7 +101,6 @@ def run(args: argparse.Namespace, spark=None) -> dict:
             shingle_k=args.shingle_k,
             jaccard_threshold=args.threshold,
             max_bucket_size=args.max_bucket_size,
-            with_simhash_stage=not args.no_simhash,
             with_substring_stage=not args.no_substring,
             snapshot_mode=args.snapshot_mode,
             min_tokens=args.min_tokens,

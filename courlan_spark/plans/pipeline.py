@@ -1,12 +1,15 @@
 """End-to-end near-duplicate pipeline with snapshot checkpoints.
 
     pages ──check_url UDF──> canonical urls
-          ──exact URL dedup (salted hash-agg)──> survivors
+          ──exact URL dedup (hash-agg)─────────> survivors
           ──exact text dedup (md5 groups)──────> pair evidence
           ──MinHash ─ LSH ─ Jaccard verify─────> pair evidence
           ──SimHash (hamming ≤ 3)──────────────> pair evidence
           ──winnowing + substring verify───────> pair evidence
           ──connected components───────────────> cluster table
+
+The URL dedup is not salted: map-side partial aggregation already
+cuts a hub key to one row per map task (PLANS.md, hub-skew stress).
 
 ``run`` (a whole corpus) and ``run_incremental`` (a delta batch
 against a ``FingerprintStore``) execute one stage graph; a leg that
@@ -52,9 +55,7 @@ class DedupConfig:
     simhash_max_hamming: int = 3
     substring_min_len: int = 63
     max_bucket_size: int = 2000
-    salt_partitions: int | None = None
     with_substring_stage: bool = True
-    with_simhash_stage: bool = True
     # optional pre-fingerprint corpus gate (training-data curation):
     # docs outside [min_tokens, max_tokens] or below min_alpha_ratio
     # leave the corpus before any fingerprint work; None disables each
@@ -596,8 +597,7 @@ class DedupPipeline:
         with the same DedupConfig, (b) bucket caps do not bind
         differently across the split, and (c) the delta's captures are
         not earlier than the store's for shared norm_urls (this path
-        keeps the store's representative — first-seen-wins, the
-        streaming path's semantics).
+        keeps the store's representative: first seen wins).
 
         The run's workdir gains delta-scoped 02_url_dedup /
         04_fingerprints snapshots and a 09_assignments SEGMENT: only
@@ -698,7 +698,6 @@ class DedupPipeline:
                 canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
                 key_cols=["norm_url"],
                 order_cols=["warc_ts", "doc_id"],
-                salt_partitions=cfg.salt_partitions,
             )
             if store is None:
                 return unique
@@ -891,11 +890,12 @@ class DedupPipeline:
         # A delta's exact-text and SimHash pairs come from stored keys
         # and are counted only by 08_evidence in "minimal" mode.
         stored_key_plan = Plan(COUNT, SNAPSHOT) if store is None else Plan(LAZY, SNAPSHOT)
-        group = {"05_minhash_pairs": minhash_chain}
-        if cfg.with_simhash_stage:
-            group["06_simhash_pairs"] = lambda: stage(
+        group = {
+            "05_minhash_pairs": minhash_chain,
+            "06_simhash_pairs": lambda: stage(
                 "06_simhash_pairs", build_simhash_pairs, stored_key_plan
-            )
+            ),
+        }
         if cfg.with_substring_stage:
             group["07_substring_cands"] = lambda: stage(
                 "07_substring_cands", build_substring_cands, Plan(COUNT, SNAPSHOT)
@@ -907,9 +907,11 @@ class DedupPipeline:
         staged = self._materialize_stages(group)
         minhash_pairs = staged["05_minhash_pairs"]
 
-        pairs = staged["03_exact_text_pairs"].unionByName(minhash_pairs)
-        if cfg.with_simhash_stage:
-            pairs = pairs.unionByName(staged["06_simhash_pairs"])
+        pairs = (
+            staged["03_exact_text_pairs"]
+            .unionByName(minhash_pairs)
+            .unionByName(staged["06_simhash_pairs"])
+        )
         if cfg.with_substring_stage:
             def build_substring_pairs():
                 cands = staged["07_substring_cands"].join(

@@ -1,18 +1,26 @@
-"""Every engine module and every top-level def in it is reachable.
+"""Every engine module, and every top-level binding in it, is reached.
 
 The entry points below are walked with ``ast``: nothing is imported
 and no Spark session starts.  A module of ``courlan_spark`` that no
-entry point reaches, directly or through other modules, fails unless
-``ALLOWED`` names it with a reason.  Imports inside functions count;
-imports built from strings do not.
+entry point reaches, directly or through other modules, fails.
+Imports inside functions count; imports built from strings do not.
 
-A top-level ``def`` or ``class`` of a reached module fails unless
-another reached file (the entry points included) names it, as a
-name, an attribute, an imported name or a string constant (which
-covers ``QUERIES``-style lookups); or its own module names it outside
-its own body (a call, a registry entry, an assignment); or
-``ALLOWED_DEFS`` names it with a reason.  An allowlist entry that
-names something reached, used or gone fails too.
+A top-level binding of a reached module fails unless it is used:
+- a ``def`` or ``class``: another reached file (the entry points
+  included) names it, as a name, an attribute, an imported name or a
+  string constant (which covers ``QUERIES``-style lookups); or its own
+  module names it outside its own body (a call, a registry entry, an
+  assignment);
+- a constant (an assignment target): another reached file names it
+  as above, or its own module loads it anywhere.  Dunder names
+  (``__all__``, ``__version__``) are exempt: Python and packaging
+  tools read them;
+- an import: its own module loads the bound name.  Another file
+  naming it does not count, since a re-exported name is not used by
+  its importer.  ``__init__.py`` re-exports and ``from __future__``
+  are exempt.
+``ALLOWED_DEFS`` may name a def or constant with a reason; an entry
+that names something used or gone fails too.
 """
 
 import ast
@@ -31,15 +39,6 @@ ROOTS = [
 # where a bare ``import name`` of a script resolves: the entry points
 # put these directories on sys.path
 SCRIPT_DIRS = ("", "layerbench", "tools")
-
-ALLOWED = {
-    "courlan_spark.functions.html_text":
-        "HTML-to-text fallback for pages without a text column; no entry point reads HTML yet",
-    "courlan_spark.operators.robots":
-        "robots.txt rule tables for the crawl frontier; no entry point filters by robots.txt yet",
-    "courlan_spark.streaming.incremental":
-        "the streamed near-dup path (start_incremental_cluster_stream); only tests start it",
-}
 
 _URLSTORE = "mirrors courlan's UrlStore {} (SURVEY.md §1), the paper's frontier surface"
 ALLOWED_DEFS = {
@@ -148,12 +147,10 @@ def _engine_modules() -> set[str]:
 
 
 def test_every_engine_module_is_reached_or_allowed():
-    reached, modules = _reached(), _engine_modules()
+    reached = _reached()
     assert "courlan_spark.operators.dedup" in reached
-    unreached = sorted(modules - reached - set(ALLOWED))
-    assert not unreached, f"no entry point imports {unreached}; delete them or allow them with a reason"
-    stale = sorted(set(ALLOWED) - (modules - reached))
-    assert not stale, f"ALLOWED names modules that are reached or gone: {stale}"
+    unreached = sorted(_engine_modules() - reached)
+    assert not unreached, f"no entry point imports {unreached}; delete them"
 
 
 def _named(tree: ast.AST) -> set[str]:
@@ -171,8 +168,8 @@ def _named(tree: ast.AST) -> set[str]:
     return names
 
 
-def _unused_defs(files: set[str]) -> set[str]:
-    "Top-level defs of reached engine modules that nothing reached names."
+def _unused(files: set[str]) -> set[str]:
+    "Top-level defs, constants and imports of reached engine modules that nothing uses."
     trees = {rel: _parse(rel) for rel in files}
     named = {rel: _named(tree) for rel, tree in trees.items()}
     unused = set()
@@ -184,19 +181,35 @@ def _unused_defs(files: set[str]) -> set[str]:
             {n.id for n in ast.walk(stmt) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
             for stmt in tree.body
         ]
+        anywhere = set().union(*loads)
         for node in tree.body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                own = set().union(*(ids for stmt, ids in zip(tree.body, loads) if stmt is not node))
+                dead = [node.name] if node.name not in elsewhere | own else []
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                bound = {
+                    n.id for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+                }
+                dead = {n for n in bound - elsewhere - anywhere if not n.startswith("__")}
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                if rel.endswith("__init__.py") or getattr(node, "module", None) == "__future__":
+                    continue
+                bound = {alias.asname or alias.name.partition(".")[0] for alias in node.names}
+                dead = bound - anywhere
+            else:
                 continue
-            own = set().union(*(ids for stmt, ids in zip(tree.body, loads) if stmt is not node))
-            if node.name not in elsewhere and node.name not in own:
-                unused.add(f"{_name(rel)}.{node.name}")
+            unused.update(f"{_name(rel)}.{name}" for name in dead)
     return unused
 
 
 def test_every_top_level_def_of_a_reached_module_is_used_or_allowed():
-    unused = _unused_defs(_reached_files())
+    unused = _unused(_reached_files())
     assert "courlan_spark.operators.frontier.is_done" in unused
+    unreasoned = sorted(k for k, reason in ALLOWED_DEFS.items() if not reason.strip())
+    assert not unreasoned, f"ALLOWED_DEFS entries need a reason: {unreasoned}"
     unallowed = sorted(unused - set(ALLOWED_DEFS))
     assert not unallowed, f"nothing reached uses {unallowed}; delete them or allow them with a reason"
     stale = sorted(set(ALLOWED_DEFS) - unused)
-    assert not stale, f"ALLOWED_DEFS names defs that are used or gone: {stale}"
+    assert not stale, f"ALLOWED_DEFS names bindings that are used or gone: {stale}"

@@ -254,6 +254,47 @@ def test_download_schedule_quota_and_delays(spark):
     assert by_host["https://b.org"] == [0.0, 10.0]
 
 
+def test_crawlable_links_robots_rules(spark):
+    """Per-host robots rules, as the caller's already-parsed table (the
+    analog of courlan taking a RobotFileParser): the first matching
+    prefix decides, so an Allow carve-out survives the broader
+    Disallow; an empty-prefix allow rule (what the stdlib makes of a
+    bare ``Disallow:``) lets everything through; a host with no rules
+    keeps its links."""
+    from courlan_spark.operators.links import crawlable_links
+
+    rules = spark.createDataFrame(
+        [
+            ("https://example.org", [("/private/public-part/", True), ("/private/", False), ("/tmp/", False)]),
+            ("https://open.org", [("", True)]),
+        ],
+        "host string, rules array<struct<prefix:string,allow:boolean>>",
+    )
+    links = spark.createDataFrame(
+        [
+            ("https://example.org/private/secret",),
+            ("https://example.org/private/public-part/ok",),
+            ("https://example.org/tmp/y",),
+            ("https://example.org/public/page",),
+            ("https://open.org/anything",),
+            ("https://norules.org/x",),
+        ],
+        "link string",
+    )
+    filtered = crawlable_links(links, robots_rules=rules)
+    assert {r["link"] for r in filtered.collect()} == {
+        "https://example.org/private/public-part/ok",
+        "https://example.org/public/page",
+        "https://open.org/anything",
+        "https://norules.org/x",
+    }
+    # a broadcast HASH join on the host key, not a nested-loop prefix
+    # join over every rule
+    plan = filtered._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_connected_components_vs_union_find(spark):
     "CC must match a scalar union-find on random graphs."
     import random
