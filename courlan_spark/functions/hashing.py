@@ -277,17 +277,16 @@ def make_minhash_udf(
 
 
 def make_band_hash_udf(bands: int = DEFAULT_BANDS):
-    "signature array<long> -> array<long> of LSH band bucket keys."
+    """signature array<long> -> array<long> of LSH band bucket keys,
+    folded per Arrow batch by band_hashes_batch (the fused UDF's kernel)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def bands_udf(signatures: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                band_hashes(np.asarray(sig, dtype=np.int64), bands=bands).tolist()
-                for sig in signatures
-            ]
-        )
+        if signatures.empty:
+            return pd.Series([], dtype=object)
+        keys = band_hashes_batch(np.vstack(signatures.to_list()), bands=bands)
+        return pd.Series(list(keys))
 
     return bands_udf
 

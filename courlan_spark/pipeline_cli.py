@@ -18,10 +18,10 @@ store — operators/incremental.py):
 
 `--store-workdir` may repeat (oldest first) to chain delta batches;
 the run writes delta-scoped snapshots, so its own workdir becomes the
-next chain link.  The delta's shuffle width is sized to its row count
+next chain link, and a delta run refuses `--snapshot-mode minimal`.
+The delta's shuffle width is sized to its row count
 (`run_incremental`'s docstring says how).  Its 09_assignments is a
-segment: only the rows the delta changed (the delta's docs and the
-old docs it relabelled); the merged table is
+segment of the rows the delta changed; the merged table is
 `FingerprintStore.from_workdirs(spark, <store workdirs>,
 <workdir>).assignments`, and the summary's `n_output` counts it.
 
@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 
 def parse_args(args: list[str] | None = None) -> argparse.Namespace:
@@ -82,7 +81,7 @@ def parse_args(args: list[str] | None = None) -> argparse.Namespace:
 
 
 def run(args: argparse.Namespace, spark=None) -> dict:
-    from .plans.pipeline import DedupConfig, DedupPipeline
+    from .plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
 
     own_session = spark is None
     if own_session:
@@ -107,22 +106,9 @@ def run(args: argparse.Namespace, spark=None) -> dict:
             max_tokens=args.max_tokens,
             min_alpha_ratio=args.min_alpha_ratio,
         )
-        if args.store_workdir and config.snapshot_mode == "minimal":
-            # an incremental run's workdir is the next chain link only
-            # if its delta-scoped 02_url_dedup/04_fingerprints snapshots
-            # exist — minimal mode skips them, and the gap would only
-            # surface at the NEXT run's FingerprintStore load
-            print(
-                "warning: --snapshot-mode minimal cannot serve as a "
-                "--store-workdir chain link; upgrading to 'all'",
-                file=sys.stderr,
-            )
-            config.snapshot_mode = "all"
         pipeline = DedupPipeline(spark, args.workdir, config)
         page_cols = pages.select("url", "warc_ts", "html", "text", "lang")
         if args.store_workdir:
-            from .plans.pipeline import FingerprintStore
-
             store = FingerprintStore.from_workdirs(spark, *args.store_workdir)
             summary = pipeline.run_incremental(page_cols, store, resume=args.resume)
         else:

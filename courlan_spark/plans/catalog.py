@@ -2063,13 +2063,16 @@ def _gate_scratch(kind: str, leaf: str) -> str:
     not mkdtemp per call — so repeated gate runs overwrite instead of
     accumulating copies of the bank in /tmp; the pid suffix keeps
     concurrent gate processes apart.  The query must write with
-    mode("overwrite")."""
-    import os
+    mode("overwrite").  The directory goes when the process exits, not
+    at return: the returned frames read its files lazily."""
+    import atexit
+    import shutil
     import tempfile
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"courlan_gate_{os.getpid()}", kind
-    )
+    root = os.path.join(tempfile.gettempdir(), f"courlan_gate_{os.getpid()}")
+    if not os.path.isdir(root):
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    base = os.path.join(root, kind)
     os.makedirs(base, exist_ok=True)
     return os.path.join(base, leaf)
 

@@ -12,17 +12,19 @@ The URL dedup is not salted: map-side partial aggregation already
 cuts a hub key to one row per map task (PLANS.md, hub-skew stress).
 
 ``run`` (a whole corpus) and ``run_incremental`` (a delta batch
-against a ``FingerprintStore``) execute one stage graph; a leg that
-differs between the two picks its operator by whether a store is
-passed.  Each stage declares how a run materializes it in each
-``snapshot_mode`` (``Plan``).  In "all" mode every durable stage
-writes a parquet snapshot under ``workdir`` and is skipped on resume
-when its `_SUCCESS` marker exists — the sandbox realization of
-Iceberg snapshot checkpoints (north rule; the writer is isolated in
-``_write_snapshot`` so an Iceberg ``writeTo`` drops in unchanged).
-"minimal" mode writes only the final assignments.  Per-stage metrics
-(rows, seconds, partitions) are returned and appended to
-``workdir/metrics.json``; a failed run appends the stage it failed in.
+against a ``FingerprintStore``, whose format plans/store.py owns)
+execute one stage graph; every leg calls one operator, handing it the
+store's side of its input in a delta run.  Each stage declares how a
+run materializes it in each ``snapshot_mode`` (``Plan``).  In "all"
+mode every durable stage writes a parquet snapshot under ``workdir``
+and is skipped on resume when its `_SUCCESS` marker exists — the
+sandbox realization of Iceberg snapshot checkpoints (north rule; the
+writer is isolated in ``_write_snapshot`` so an Iceberg ``writeTo``
+drops in unchanged).  "minimal" mode writes only the final
+assignments, so a delta run, whose workdir is the next chain link,
+refuses it.  Per-stage metrics (rows, seconds, partitions) are
+returned and appended to ``workdir/metrics.json``; a failed run
+appends the stage it failed in.
 """
 
 from __future__ import annotations
@@ -40,8 +42,13 @@ from pyspark.sql import functions as F
 
 from ..functions.url_udfs import make_check_url_udf
 from ..operators import dedup, suffix
-from ..operators import incremental as inc
 from ..operators.fingerprints import fused_fingerprints
+from ..sources.tables import has_snapshot as _has_snapshot
+from ..sources.tables import read_snapshot as _read_snapshot
+from ..sources.tables import snapshot_bytes as _snapshot_bytes
+from ..sources.tables import write_snapshot as _write_snapshot
+from .store import ASSIGNMENTS, DOCS, FINGERPRINTS, FingerprintStore
+from .store import merged_assignments, snapshot_write, write_config
 
 
 @dataclass
@@ -70,197 +77,13 @@ class DedupConfig:
     # the Iceberg-checkpoint analog).  "minimal": only multiply-consumed
     # intermediates persist in memory and only the final assignments
     # snapshot to parquet — fewer driver barriers, better scaling when
-    # stage outputs are small relative to job overhead.
+    # stage outputs are small relative to job overhead (``run`` only).
     snapshot_mode: str = "all"
-
-
-from ..sources.tables import has_snapshot as _has_snapshot
-from ..sources.tables import is_segment as _is_segment
-from ..sources.tables import mark_segment as _mark_segment
-from ..sources.tables import read_snapshot as _read_snapshot
-from ..sources.tables import snapshot_bytes as _snapshot_bytes
-from ..sources.tables import write_snapshot as _write_snapshot
-
-# the columns of a cluster table, full or segment
-ASSIGNMENT_COLUMNS = ("doc_id", "norm_url", "domain", "cluster_id")
-
-
-@dataclass
-class FingerprintStore:
-    """The persisted state an incremental (delta-batch) run joins
-    against: the base run's url-unique corpus, its fused fingerprint
-    frame, and its cluster table.  ``from_workdir`` loads the three
-    from a completed snapshot_mode="all" pipeline run — the store
-    must come from the same DedupConfig (num_perm/shingle_k/seed/bands)
-    the incremental run uses, or bucket keys will not line up."""
-
-    docs: DataFrame          # doc_id, norm_url, domain, warc_ts, text, lang
-    fingerprints: DataFrame  # doc_id, sketch, simhash, winnow, bands, text_hash
-    assignments: DataFrame   # ASSIGNMENT_COLUMNS: the merged cluster table
-    # the DedupConfig (as a dict) the store was built with, loaded from
-    # the workdir's config.json; None only for stores assembled by hand
-    config: dict | None = None
-    # how many delta segments ``assignments`` overlays on the newest
-    # full cluster table of the chain
-    segments: int = 0
-
-    # fields that determine bucket/block keys and which docs enter the
-    # store — a delta run with different values would silently miss
-    # duplicates (keys disagree), so check_config raises instead
-    KEY_FIELDS = (
-        "num_perm", "shingle_k", "seed", "bands",
-        "min_tokens", "max_tokens", "min_alpha_ratio",
-    )
-
-    @classmethod
-    def _key_diff(cls, ours: dict, theirs: dict) -> dict:
-        "KEY_FIELDS on which two configs disagree, as (ours, theirs) pairs."
-        return {
-            k: (ours.get(k), theirs.get(k))
-            for k in cls.KEY_FIELDS
-            if ours.get(k) != theirs.get(k)
-        }
-
-    def check_config(self, cfg: "DedupConfig") -> None:
-        """Raise when ``cfg`` disagrees with the store's recorded
-        config on any key-affecting field.  A store without a recorded
-        config (built before config.json existed, or assembled by
-        hand) passes with no check — the caller owns the invariant."""
-        if self.config is None:
-            return
-        mismatches = self._key_diff(self.config, vars(cfg))
-        if mismatches:
-            raise ValueError(
-                "incremental config disagrees with the fingerprint "
-                f"store's on key-affecting fields {mismatches} "
-                "(store value, run value) — band/block keys would not "
-                "line up and duplicates would be silently missed; "
-                "re-build the store or match its config"
-            )
-
-    @classmethod
-    def _load_config(cls, workdir: str) -> dict | None:
-        path = os.path.join(workdir, "config.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as fh:
-            return json.load(fh)
-
-    @classmethod
-    def from_workdir(cls, spark: SparkSession, workdir: str) -> "FingerprintStore":
-        "The store of one completed full run."
-        return cls.from_workdirs(spark, workdir)
-
-    @classmethod
-    def _load(cls, spark: SparkSession, workdir: str) -> tuple["FingerprintStore", bool]:
-        """One workdir's snapshots as a store, and whether its cluster
-        table is a segment (a delta run's changed rows only)."""
-        def need(stage: str) -> DataFrame:
-            path = _snapshot_path(workdir, stage)
-            if not _has_snapshot(path):
-                raise FileNotFoundError(
-                    f"store stage {stage!r} missing under {workdir} — the "
-                    "base run must use snapshot_mode='all'"
-                )
-            return _read_snapshot(spark, path)
-
-        fps = need("04_fingerprints")
-        missing = [
-            c for c in ("text_hash", "winnow", "bands", "sketch") if c not in fps.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"04_fingerprints lacks fused columns {missing} — the "
-                "base run predates the fused store format (a 04 holding "
-                "the 64-bit signature has no sketch); re-run it"
-            )
-        store = cls(
-            docs=need("02_url_dedup"),
-            fingerprints=fps,
-            assignments=need("09_assignments").select(*ASSIGNMENT_COLUMNS),
-            config=cls._load_config(workdir),
-        )
-        return store, _is_segment(spark, _snapshot_path(workdir, "09_assignments"))
-
-    @classmethod
-    def from_workdirs(
-        cls, spark: SparkSession, *workdirs: str
-    ) -> "FingerprintStore":
-        """Chain stores across batches: the base run's workdir followed
-        by each incremental run's, oldest first.  Docs and fingerprints
-        are the union of every batch's (immutable, delta-scoped)
-        snapshots.  The cluster table is a fold: the newest full table,
-        overlaid with each later workdir's segment (the rows its delta
-        changed), oldest first.  A delta workdir without the segment
-        marker holds a full table — a compaction, or a delta run from
-        before segments — and restarts the fold."""
-        if not workdirs:
-            raise ValueError("at least one workdir required")
-        loaded = [cls._load(spark, w) for w in workdirs]
-        if loaded[0][1]:
-            raise ValueError(
-                f"{workdirs[0]}'s 09_assignments is a delta segment; chain "
-                "it after the workdirs it overlays, oldest first"
-            )
-        stores = [store for store, _ in loaded]
-        # chained batches must agree on key fields among themselves too
-        configs = [s.config for s in stores if s.config is not None]
-        for other in configs[1:]:
-            diff = cls._key_diff(configs[0], other)
-            if diff:
-                raise ValueError(
-                    f"chained store workdirs disagree on key fields {diff}"
-                )
-        docs, fps = stores[0].docs, stores[0].fingerprints
-        view, segments = stores[0].assignments, 0
-        for s, segment in loaded[1:]:
-            docs = docs.unionByName(s.docs)
-            fps = fps.unionByName(s.fingerprints)
-            if segment:
-                view, segments = inc.overlay(view, s.assignments), segments + 1
-            else:
-                view, segments = s.assignments, 0
-        return cls(
-            docs=docs,
-            fingerprints=fps,
-            assignments=view,
-            config=configs[0] if configs else None,
-            segments=segments,
-        )
 
 
 # distinct delta keys a broadcast store pre-filter may carry:
 # 8M 8-byte keys ~ 64 MB of broadcast
 BROADCAST_KEY_BUDGET = 8_000_000
-
-# segments a store's cluster table may chain before a delta run writes
-# the merged table in full (a compaction, which restarts the fold).
-# Sized by a probe (2,700-doc base store, 300-page deltas, local[4] on
-# a 4-core host): one read of the chained table took 0.04-0.14 s with
-# no segment and 0.42-0.47 s with 6-8, about 0.05 s a segment, and the
-# 09 leg reads it once; a compaction's 09 stage took 2.8 s and wrote
-# 0.14 MB against 1.0-1.9 s and 0.02 MB for a segment.  Over a cycle of
-# B deltas that costs about 0.05 * B / 2 s of reads per delta plus 1/B
-# of a compaction's extra ~1 s: flat from B = 4 to 10, and 8 halves
-# the compaction bytes of 4.  Unpersisted, each read re-ran the
-# overlays: the 09 leg took 1.7 s at 0 segments and 10.8 s at 8.
-SEGMENT_BOUND = 8
-
-# rows one part file of an unkeyed snapshot (08_evidence, a 09 segment)
-# holds before the write splits into more files.  Without a bound the
-# write keeps the frame's shuffle partitions: a 300-page delta wrote its
-# 08 as 10 files and its 09 segment as 9, most of their bytes footers.
-# A million of these rows is ~10-40 MB of zstd parquet.
-FILE_ROWS = 1_000_000
-
-
-def _sized_for(df: DataFrame, rows: int) -> DataFrame:
-    "``df`` in one partition per FILE_ROWS of ``rows``."
-    return df.coalesce(max(1, -(-rows // FILE_ROWS)))
-
-
-def _snapshot_path(workdir: str, stage: str) -> str:
-    return os.path.join(workdir, stage)
 
 
 def _name_failure(exc: BaseException, stage: str) -> None:
@@ -373,29 +196,11 @@ class DedupPipeline:
         self._store: FingerprintStore | None = None
         os.makedirs(workdir, exist_ok=True)
 
-    def _persist_config(self) -> None:
-        """Record the run's DedupConfig in the workdir so a later
-        incremental run can verify its own config against the store's
-        (a store built with different key-affecting fields would emit
-        silently wrong merged clusters — the band/block keys simply
-        would not line up)."""
-        with open(os.path.join(self.workdir, "config.json"), "w") as fh:
-            json.dump(vars(self.config), fh)
-
-    # the key column the store stages are scanned by.  A later
-    # incremental run scans these snapshots selectively, so they are
-    # written range-sorted by it (file skipping via footer min/max for
-    # the candidate-id predicates the delta verify pushes; the Iceberg
-    # sorted-write-order analog, see tables.write_snapshot) AND carry a
-    # parquet bloom filter on it (row-group point skipping inside
-    # surviving files).
-    _STAGE_KEY_COLS = {"02_url_dedup": ["doc_id"], "04_fingerprints": ["doc_id"]}
-
     def _stage(self, name: str, build, resume: bool, plan: Plan) -> DataFrame:
         "Build (or, durable and resumed, read back) one stage as ``plan`` says."
         with _failing_as(name):
             level = plan.minimal if self.config.snapshot_mode == "minimal" else plan.all
-            path = _snapshot_path(self.workdir, name)
+            path = os.path.join(self.workdir, name)
             metric = {"stage": name, "materialize": level}
             started = time.time()
             if level in DURABLE and resume and _has_snapshot(path):
@@ -436,18 +241,9 @@ class DedupPipeline:
         exactly as complete as a synchronous write leaves it, and a
         crash before the join leaves no _SUCCESS marker — resume
         rebuilds the stage, as it would for any interrupted write.  The
-        count also sizes a key stage's doc_id bloom filter (doc_id is
-        unique per row, so the row count bounds every file's distinct
-        keys), and an unkeyed stage's file count."""
-        key_cols = self._STAGE_KEY_COLS.get(name)
-        write = functools.partial(
-            _write_snapshot,
-            df if key_cols else _sized_for(df, n_rows),
-            path,
-            order_by=key_cols,
-            bloom_cols=key_cols,
-            bloom_ndv=max(n_rows, 1) if key_cols else None,
-        )
+        count sizes the write's Bloom filter or files (snapshot_write)."""
+        df, options = snapshot_write(name, df, n_rows)
+        write = functools.partial(_write_snapshot, df, path, **options)
         if self._write_pool is None:
             self._write_pool = ThreadPoolExecutor(max_workers=2)
         self._pending_writes.append((name, self._write_pool.submit(write)))
@@ -479,9 +275,7 @@ class DedupPipeline:
             self.metrics.append(
                 {"stage": f"{name}_write_join",
                  "secs": round(time.time() - started, 3),
-                 "bytes": _snapshot_bytes(
-                     self.spark, _snapshot_path(self.workdir, name)
-                 )}
+                 "bytes": _snapshot_bytes(self.spark, os.path.join(self.workdir, name))}
             )
         if self._write_pool is not None:
             self._write_pool.shutdown(wait=True)
@@ -562,7 +356,6 @@ class DedupPipeline:
             .where(F.col("_chk.norm_url").isNotNull())
             .select(
                 F.xxhash64("url", "warc_ts").alias("doc_id"),
-                F.col("url").alias("raw_url"),
                 F.col("_chk.norm_url").alias("norm_url"),
                 F.col("_chk.domain").alias("domain"),
                 "warc_ts",
@@ -599,19 +392,12 @@ class DedupPipeline:
         not earlier than the store's for shared norm_urls (this path
         keeps the store's representative: first seen wins).
 
-        The run's workdir gains delta-scoped 02_url_dedup /
-        04_fingerprints snapshots and a 09_assignments SEGMENT: only
-        the rows the delta changed (every new doc with its label, plus
-        every old doc whose label moved), marked as a segment, so the
-        write does not grow with the store.  ``assignments()`` returns
-        the merged table (the store's overlaid with the segment), the
-        summary's ``n_output`` counts it, and the 09 stage's ``rows``
-        metric counts the segment.  Once the store's cluster table
-        chains ``SEGMENT_BOUND`` segments, the run writes the merged
-        table in full instead, unmarked (a compaction).
-        ``FingerprintStore.from_workdirs(spark, base, this_workdir)``
-        is the store for the NEXT delta — store files are immutable,
-        each batch adds its own (the Iceberg-snapshot shape).
+        The run's workdir is the next chain link (plans/store.py):
+        delta-scoped 02/04 snapshots and a 09 segment of the rows the
+        delta changed, or a compaction.  ``assignments()`` and the
+        summary's ``n_output`` give the merged table.  snapshot_mode=
+        "minimal" writes no 02/04, so it raises ValueError here, before
+        any Spark job.
 
         The run right-sizes the session's shuffle width to the DELTA's
         row count, clamp(ceil(rows/1000), 8, session width), and
@@ -624,6 +410,11 @@ class DedupPipeline:
         local[32] default vs 24.5s with 16 shuffle partitions (same
         session width; PLANS.md, round-5 decisions).  The count also
         sizes the store-side prune gate and the 09 segment's files."""
+        if self.config.snapshot_mode == "minimal":
+            raise ValueError(
+                "a delta run writes the next store's chain link, so it needs "
+                "snapshot_mode='all'; 'minimal' writes no 02/04 snapshots"
+            )
         store.check_config(self.config)
 
         session_width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -670,7 +461,7 @@ class DedupPipeline:
         shape measured 2.4x the full operators' wall on a 4,000-page
         corpus (4-core host, local[4])."""
         cfg = self.config
-        self._persist_config()
+        write_config(self.workdir, cfg)
 
         # free row-count metrics via observe(): recorded on the single
         # physical pass, no extra jobs (the north rule's per-stage
@@ -694,18 +485,14 @@ class DedupPipeline:
 
         # ---- stage 2: exact URL dedup (earliest capture wins) ----
         def build_url_dedup():
-            unique = dedup.exact_dedup(
-                canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
-                key_cols=["norm_url"],
-                order_cols=["warc_ts", "doc_id"],
-            )
+            unique = dedup.exact_dedup(canonical, ["norm_url"], order_cols=["warc_ts", "doc_id"])
             if store is None:
                 return unique
             # first-seen-wins against the store: a norm_url the store
             # already holds keeps its old representative
             return unique.join(
                 store.docs.select("norm_url"), "norm_url", "left_anti"
-            ).select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang", "n_copies")
+            ).select(*DOCS.columns)
 
         # "minimal" persists 02 WITHOUT the count barrier: the cache
         # fills inside the next stage's (single-consumer) job — 04's
@@ -713,7 +500,7 @@ class DedupPipeline:
         # group, so no concurrent jobs can race the cache build (guide
         # §2.6 serial-term cut).  In "all" the count sizes the snapshot's
         # bloom filter
-        url_unique = stage("02_url_dedup", build_url_dedup, Plan(PERSIST, BACKGROUND))
+        url_unique = stage(DOCS.stage, build_url_dedup, Plan(PERSIST, BACKGROUND))
 
         # optional training-data quality gate (config bounds), applied
         # identically in full and incremental modes — per-row
@@ -736,20 +523,13 @@ class DedupPipeline:
         # stored row, a delta's slice of the store and the cached
         # minimal-mode frame shrink by 128 x 7 bytes before compression
         def build_fingerprints():
-            fingerprints = fused_fingerprints(
-                url_unique,
-                num_perm=cfg.num_perm,
-                shingle_k=cfg.shingle_k,
-                seed=cfg.seed,
+            fused = fused_fingerprints(
+                url_unique, num_perm=cfg.num_perm, shingle_k=cfg.shingle_k, seed=cfg.seed,
                 bands=cfg.bands,
-            ).select(
-                "doc_id",
-                dedup.minhash_sketch("signature").alias("sketch"),
-                "simhash",
-                "winnow",
-                "bands",
-                "text_hash",
             )
+            fingerprints = fused.withColumn(
+                "sketch", dedup.minhash_sketch("signature")
+            ).select(*FINGERPRINTS.columns)
             if store is None:
                 return fingerprints
             # the winnow key total rides the stage's own count job
@@ -757,7 +537,7 @@ class DedupPipeline:
                 "fingerprint_keys", fingerprints, F.sum(F.size("winnow")).alias("winnow_keys")
             )
 
-        fingerprints = stage("04_fingerprints", build_fingerprints, Plan(COUNT, BACKGROUND))
+        fingerprints = stage(FINGERPRINTS.stage, build_fingerprints, Plan(COUNT, BACKGROUND))
         sketches = fingerprints.select("doc_id", "sketch")
 
         # each evidence leg's one operator takes the store's slice of
@@ -887,13 +667,10 @@ class DedupPipeline:
         # inside the full run's clustering — ~0.9-1.4 s of md5+groupBy+
         # join on the post-overlap critical path (OPTIMIZATION_r06.md, row 11);
         # it only needs the 04 frame's stored hashes.
-        # A delta's exact-text and SimHash pairs come from stored keys
-        # and are counted only by 08_evidence in "minimal" mode.
-        stored_key_plan = Plan(COUNT, SNAPSHOT) if store is None else Plan(LAZY, SNAPSHOT)
         group = {
             "05_minhash_pairs": minhash_chain,
             "06_simhash_pairs": lambda: stage(
-                "06_simhash_pairs", build_simhash_pairs, stored_key_plan
+                "06_simhash_pairs", build_simhash_pairs, Plan(COUNT, SNAPSHOT)
             ),
         }
         if cfg.with_substring_stage:
@@ -902,7 +679,7 @@ class DedupPipeline:
             )
         # 03 last: cheapest member, fills the tail the 05 wall leaves
         group["03_exact_text_pairs"] = lambda: stage(
-            "03_exact_text_pairs", build_text_pairs, stored_key_plan
+            "03_exact_text_pairs", build_text_pairs, Plan(COUNT, SNAPSHOT)
         )
         staged = self._materialize_stages(group)
         minhash_pairs = staged["05_minhash_pairs"]
@@ -927,11 +704,9 @@ class DedupPipeline:
 
         # ---- stages 8-9: clustering ----
         # one clustering operator in both modes; a delta hands it the
-        # store's cluster table as its store side, and a delta run
-        # writes a segment unless its store chains enough segments to
-        # compact
+        # store's cluster table as its store side, and the store decides
+        # whether the delta's 09 is a segment or a compaction
         docs = url_unique.select("doc_id", "norm_url", "domain")
-        compact = store is not None and store.segments >= SEGMENT_BOUND
         if store is None:
             # no explicit distinct: connected_components dedups its
             # edge input anyway, so the extra shuffle wave would sit
@@ -944,7 +719,7 @@ class DedupPipeline:
             )
 
             def build_output():
-                return docs.join(clusters, "doc_id").select(*ASSIGNMENT_COLUMNS)
+                return docs.join(clusters, "doc_id").select(*ASSIGNMENTS.columns)
         else:
             # evidence persists (tiny: two longs per pair): the store
             # side walks it several times — endpoint extraction, the
@@ -962,24 +737,20 @@ class DedupPipeline:
             # That table is read three times (affected clusters, their
             # members, moved labels; four when compacting), so it is
             # persisted: a chained view's overlays then run once, not
-            # once per read (see SEGMENT_BOUND)
+            # once per read (see the segment bound in plans/store.py)
             def build_output():
                 view = self._persist(store.assignments)
                 changes = dedup.cluster_assignments(docs, evidence, old_assignments=view)
-                if compact:
-                    return inc.overlay(view, changes)
                 # a segment holds the delta's new docs and the old docs
                 # their evidence relabels, so those counts size it
-                return _sized_for(
-                    changes, self._delta_rows + self._counted.get("08_evidence", 0)
+                return store.delta_assignments(
+                    view, changes, self._delta_rows + self._counted.get("08_evidence", 0)
                 )
 
         # ---- final output: url -> cluster, a snapshot in every mode ----
-        output = stage("09_assignments", build_output, Plan(SNAPSHOT, SNAPSHOT))
-        if store is not None and not compact:
-            # marked after the commit, and again on a resumed run: a
-            # run killed between the two rewrites the same marker
-            _mark_segment(self.spark, _snapshot_path(self.workdir, "09_assignments"))
+        output = stage(ASSIGNMENTS.stage, build_output, Plan(SNAPSHOT, SNAPSHOT))
+        if store is not None:
+            store.mark_assignments(self.spark, self.workdir)
         self._join_writes()
 
         with _failing_as("summary"):
@@ -1012,20 +783,10 @@ class DedupPipeline:
         return summary
 
     def assignments(self) -> DataFrame:
-        """The merged cluster table (ASSIGNMENT_COLUMNS).  After a
-        delta run whose 09_assignments is a segment, that is the run's
-        store's cluster table overlaid with the segment."""
-        path = _snapshot_path(self.workdir, "09_assignments")
-        table = _read_snapshot(self.spark, path)
-        if not _is_segment(self.spark, path):
-            return table
-        if self._store is None:
-            raise ValueError(
-                f"{path} is a delta segment; read the merged table with "
-                "FingerprintStore.from_workdirs(spark, <store workdirs>, "
-                f"{self.workdir!r}).assignments"
-            )
-        return inc.overlay(self._store.assignments, table)
+        """The merged cluster table (store.ASSIGNMENTS).  After a delta
+        run whose 09_assignments is a segment, that is the run's store's
+        cluster table overlaid with the segment."""
+        return merged_assignments(self.spark, self.workdir, self._store)
 
     def deduped_docs(self, docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         """The pipeline's consumable: ``docs`` reduced to one

@@ -261,3 +261,30 @@ def test_filter_urls_frame_matches_scalar(spark):
     # nothing contains 'shop', so the feed whitelist kicks in
     assert fallback_docs == {d for d in bank if d % 3 == 2}
     assert len(got) == len(bank)  # every doc keeps at least one link
+
+
+def test_gate_scratch_is_removed_at_process_exit(tmp_path):
+    """The gate queries' per-process scratch directory outlives the
+    helper's return (the frames read its files lazily) but not the
+    process: nothing is left behind once it exits."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import os\n"
+        "from courlan_spark.plans.catalog import _gate_scratch\n"
+        "a = _gate_scratch('urlfile', 'urls')\n"
+        "b = _gate_scratch('snapshot', 'frontier')\n"
+        "open(a, 'w').write('x')\n"
+        "print(os.path.dirname(os.path.dirname(b)))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    done = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, check=True
+    )
+    root = done.stdout.strip()
+    assert os.path.basename(root).startswith("courlan_gate_")
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)

@@ -109,7 +109,7 @@ def test_snapshot_bloom_filters_written_and_equivalent(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from courlan_spark.plans.pipeline import DedupPipeline
+    from courlan_spark.plans import store as S
     from courlan_spark.sources.tables import read_snapshot, write_snapshot
 
     df = (
@@ -137,6 +137,6 @@ def test_snapshot_bloom_filters_written_and_equivalent(spark, tmp_path):
         "SELECT md5('31337') AS s"
     ).collect()[0]["s"]
 
-    assert set(DedupPipeline._STAGE_KEY_COLS) == {
-        "02_url_dedup", "04_fingerprints"
-    } and all(v == ["doc_id"] for v in DedupPipeline._STAGE_KEY_COLS.values())
+    assert {t.stage: t.key for t in S.TABLES if t.key} == {
+        "02_url_dedup": "doc_id", "04_fingerprints": "doc_id"
+    }

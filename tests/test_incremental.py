@@ -8,15 +8,18 @@ where a new doc bridges two old clusters.  The split is time-ordered
 first-seen-wins URL semantics.
 """
 
+import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from courlan_spark.operators import dedup
 from courlan_spark.operators import incremental as inc
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
 from courlan_spark.sources.pages import generate_pages, pages_view
+from courlan_spark.sources.tables import read_snapshot, write_snapshot
 
 
 def _assignments(pipe):
@@ -245,86 +248,73 @@ def test_incremental_text_pairs_connectivity(spark):
     assert full == md5_group_edges
 
 
-def test_store_requires_fused_columns(spark):
-    import pytest
-
-    import os
-
-    from courlan_spark.operators import dedup
-    from courlan_spark.sources.tables import read_snapshot, write_snapshot
-
+@pytest.fixture(scope="module")
+def base_store(spark, tmp_path_factory):
+    "The workdir of one 200-page base run, and the pages it ran over."
     full = generate_pages(spark, 200).cache()
-    workdir = tempfile.mkdtemp(prefix="inc_nofuse_")
-    try:
-        cfg = DedupConfig(jaccard_threshold=0.6)
-        DedupPipeline(spark, workdir, cfg).run(pages_view(full))
-        # a base run from before the fused store format: its 04 snapshot
-        # holds the per-kernel MinHash signatures only (no text_hash or
-        # winnow column)
-        docs = read_snapshot(spark, os.path.join(workdir, "02_url_dedup"))
-        write_snapshot(
-            dedup.minhash_signatures(
-                docs, num_perm=cfg.num_perm, shingle_k=cfg.shingle_k, seed=cfg.seed
-            ),
-            os.path.join(workdir, "04_fingerprints"),
-        )
-        with pytest.raises(ValueError, match="fused"):
-            FingerprintStore.from_workdir(spark, workdir)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    workdir = str(tmp_path_factory.mktemp("inc_base") / "base")
+    DedupPipeline(spark, workdir, DedupConfig(jaccard_threshold=0.6)).run(pages_view(full))
+    yield {"workdir": workdir, "pages": full}
+    full.unpersist()
 
 
-def test_store_requires_band_keys(spark):
-    """A 04 snapshot without the stored band keys is refused: the
-    delta's LSH leg joins the store's stored bands, never a band-hash
-    pass over the store's signatures."""
-    import os
-
-    import pytest
-
-    from courlan_spark.sources.tables import read_snapshot, write_snapshot
-
-    full = generate_pages(spark, 200).cache()
-    workdir = tempfile.mkdtemp(prefix="inc_nobands_")
-    try:
-        DedupPipeline(spark, workdir, DedupConfig(jaccard_threshold=0.6)).run(
-            pages_view(full)
-        )
-        # collected first: the rewrite replaces the files it reads
-        path = os.path.join(workdir, "04_fingerprints")
-        fps = read_snapshot(spark, path).drop("bands")
-        write_snapshot(spark.createDataFrame(fps.collect(), fps.schema), path)
-        with pytest.raises(ValueError, match="bands"):
-            FingerprintStore.from_workdir(spark, workdir)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+def _signature_only(spark, workdir, fps):
+    """A 04 from before the fused store format: the per-kernel MinHash
+    signatures only (no text_hash, winnow, bands or sketch column)."""
+    cfg = DedupConfig()
+    docs = read_snapshot(spark, os.path.join(workdir, "02_url_dedup"))
+    return dedup.minhash_signatures(
+        docs, num_perm=cfg.num_perm, shingle_k=cfg.shingle_k, seed=cfg.seed
+    )
 
 
-def test_store_requires_sketch(spark):
-    """A 04 snapshot holding the 64-bit signature and no sketch is
-    refused: there is no read-time conversion of an old store."""
-    import os
+def _signature_for_sketch(spark, workdir, fps):
+    "A 04 holding the 64-bit signature and no sketch."
+    signature = F.transform("sketch", lambda x: x.cast("long"))
+    return fps.withColumn("signature", signature).drop("sketch")
 
-    import pytest
 
-    from courlan_spark.sources.tables import read_snapshot, write_snapshot
+# (stage, rewrite of its snapshot, what the refusal names).  There is no
+# read-time conversion of an old store: the delta's LSH leg joins the
+# stored bands, and its verify the stored sketch
+OLD_FORMATS = {
+    "04-signature-only": ("04_fingerprints", _signature_only, "fused"),
+    "04-no-bands": ("04_fingerprints", lambda spark, w, fps: fps.drop("bands"), "bands"),
+    "04-no-sketch": ("04_fingerprints", _signature_for_sketch, "sketch"),
+    "02-no-text": ("02_url_dedup", lambda spark, w, docs: docs.drop("text"), "text"),
+    "09-no-cluster-id": (
+        "09_assignments", lambda spark, w, table: table.drop("cluster_id"), "cluster_id"
+    ),
+}
 
-    full = generate_pages(spark, 200).cache()
-    workdir = tempfile.mkdtemp(prefix="inc_nosketch_")
-    try:
-        DedupPipeline(spark, workdir, DedupConfig(jaccard_threshold=0.6)).run(
-            pages_view(full)
-        )
-        # collected first: the rewrite replaces the files it reads
-        path = os.path.join(workdir, "04_fingerprints")
-        fps = read_snapshot(spark, path).withColumn(
-            "signature", F.transform("sketch", lambda x: x.cast("long"))
-        ).drop("sketch")
-        write_snapshot(spark.createDataFrame(fps.collect(), fps.schema), path)
-        with pytest.raises(ValueError, match="sketch"):
-            FingerprintStore.from_workdir(spark, workdir)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+@pytest.mark.parametrize("case", sorted(OLD_FORMATS))
+def test_store_refuses_an_older_format(spark, base_store, tmp_path, case):
+    """A store workdir whose 02, 04 or 09 lacks a column of the current
+    format is refused on load, naming the table and what it lacks."""
+    stage, rewrite, named = OLD_FORMATS[case]
+    workdir = str(tmp_path / "store")
+    shutil.copytree(base_store["workdir"], workdir)
+    path = os.path.join(workdir, stage)
+    old = rewrite(spark, workdir, read_snapshot(spark, path))
+    # collected first: the rewrite replaces the files it reads
+    write_snapshot(spark.createDataFrame(old.collect(), old.schema), path)
+    with pytest.raises(ValueError, match=f"{stage} lacks .*{named}.*re-run it"):
+        FingerprintStore.from_workdir(spark, workdir)
+
+
+def test_minimal_delta_is_refused_before_any_job(spark, base_store, tmp_path):
+    """A delta run's workdir is the next store's chain link, which a
+    snapshot_mode="minimal" run would not write: it raises before any
+    Spark job, and leaves its workdir empty."""
+    store = FingerprintStore.from_workdir(spark, base_store["workdir"])
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
+    pipe = DedupPipeline(spark, str(tmp_path / "run"), DedupConfig(snapshot_mode="minimal"))
+    with pytest.raises(ValueError, match="minimal"):
+        pipe.run_incremental(pages_view(base_store["pages"]), store)
+    assert set(tracker.getJobIdsForGroup(None)) <= jobs_before
+    assert os.listdir(tmp_path / "run") == []
 
 
 def test_incremental_resume_after_failure(spark):
@@ -508,9 +498,7 @@ def test_store_config_mismatch_raises(spark):
                 pages_view(full.where("doc_id >= 200")), store
             )
         # matching config passes the gate (and completes)
-        ok = DedupPipeline(
-            spark, run_dir, DedupConfig(num_perm=128, snapshot_mode="minimal")
-        )
+        ok = DedupPipeline(spark, run_dir, DedupConfig(num_perm=128))
         ok.run_incremental(pages_view(full.where("doc_id >= 200")), store)
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)

@@ -20,6 +20,7 @@ import pytest
 from courlan_spark.operators import dedup
 from courlan_spark.operators import incremental as inc
 from courlan_spark.plans import pipeline as P
+from courlan_spark.plans import store as S
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
 from courlan_spark.sources import tables
 from courlan_spark.sources.pages import generate_pages, pages_view
@@ -75,7 +76,7 @@ def chain(spark, corpus):
     over the compacted table."""
     full, root = corpus["full"], corpus["root"]
     mp = pytest.MonkeyPatch()
-    mp.setattr(P, "SEGMENT_BOUND", 2)
+    mp.setattr(S, "SEGMENT_BOUND", 2)
     try:
         dirs = [str(root / f"chain_{i}") for i in range(len(CUTS))]
         base = DedupPipeline(spark, dirs[0], CFG)
@@ -127,7 +128,7 @@ def test_segment_holds_new_and_relabelled_docs_only(spark, chain):
         else:
             assert {r["doc_id"] for r in written.collect()} == expected
             assert written.count() < len(after)
-        assert written.columns == list(P.ASSIGNMENT_COLUMNS)
+        assert written.columns == list(S.ASSIGNMENTS.columns)
 
 
 def test_every_snapshot_file_is_zstd(chain):
@@ -157,9 +158,9 @@ def test_delta_writes_evidence_and_segment_as_one_file(chain):
 
 def test_sized_for_splits_by_file_rows(spark, monkeypatch):
     df = spark.range(40).repartition(8)
-    monkeypatch.setattr(P, "FILE_ROWS", 16)
-    assert P._sized_for(df, 40).rdd.getNumPartitions() == 3
-    assert P._sized_for(df, 0).rdd.getNumPartitions() == 1
+    monkeypatch.setattr(S, "FILE_ROWS", 16)
+    assert S._sized_for(df, 40).rdd.getNumPartitions() == 3
+    assert S._sized_for(df, 0).rdd.getNumPartitions() == 1
 
 
 def test_durable_stages_report_the_bytes_they_wrote(chain):

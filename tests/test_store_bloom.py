@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from courlan_spark.operators import dedup
 from courlan_spark.operators import incremental as inc
 from courlan_spark.plans import pipeline as P
+from courlan_spark.plans import store as S
 from courlan_spark.plans.pipeline import DedupConfig, DedupPipeline, FingerprintStore
 from courlan_spark.sources.pages import generate_pages, pages_view
 from courlan_spark.sources.tables import read_snapshot, write_snapshot
@@ -126,7 +127,7 @@ def test_key_snapshots_size_their_filters_to_their_rows(spark, chained):
     ~9.7 bits per value plus one 32-byte block, at most doubled by
     power-of-two rounding, plus the filter header."""
     for run in ("base", "d1", "d2"):
-        for stage in DedupPipeline._STAGE_KEY_COLS:
+        for stage in (t.stage for t in S.TABLES if t.key):
             directory = os.path.join(chained[run], stage)
             n_rows = read_snapshot(spark, directory).count()
             bound = 64 + 2 * (32 + math.ceil(n_rows * 10 / 8))
